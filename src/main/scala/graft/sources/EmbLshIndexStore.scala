@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.functions.{VectorFunctions => VF}
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sign-once / query-many persistence for the EMBEDDING near-dup
@@ -34,8 +34,9 @@ object EmbLshIndexStore {
   /** Table count — same default as the batch all-corpus operator. */
   val NumTables: Int = 8
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** The single `sigs/` layer, keyed by `vec_id` (see [[TombstonedLayers]]). */
+  private val index = TombstonedLayers("elsh", "vec_id",
+    TombstonedLayers.partitioned("sigs", "table_id", "int"))
 
   def defaultPath(datasetDir: String, bits: Int): String =
     StorePaths.keyedTmp("elsh", datasetDir, s"_t${NumTables}_b$bits")
@@ -61,39 +62,21 @@ object EmbLshIndexStore {
   }
 
   def build(corpus: DataFrame, path: String, bits: Int): Unit =
-    sigRows(corpus, bits)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("table_id")
-      .parquet(s"$path/sigs")
+    index.overwrite(path)("sigs" -> sigRows(corpus, bits))
 
   /** [[build]] at most once per JVM per path (same memo contract as
     * [[IvfIndexStore.ensure]]).
     */
   def ensure(corpus: DataFrame, path: String, bits: Int): Unit =
-    built.computeIfAbsent(path, _ => {
-      build(corpus, path, bits)
-      java.lang.Boolean.TRUE
-    })
+    index.once("plain", path)(build(corpus, path, bits))
 
   /** The stored signature table. Retracted vectors ([[delete]]) are
     * masked by a broadcast anti-join on the tombstone list — the serve
     * plan never sees their signature rows, without rewriting a single
     * index file (the [[MinhashIndexStore.bandsTable]] discipline).
     */
-  def sigsTable(spark: SparkSession, path: String): DataFrame = {
-    val sigs = spark.read.parquet(s"$path/sigs")
-      .withColumn("table_id", col("table_id").cast("int"))
-    if (hasTombstones(spark, path))
-      sigs.join(broadcast(tombstonesTable(spark, path)),
-        Seq("vec_id"), "left_anti")
-    else sigs
-  }
-
-  private def hasTombstones(spark: SparkSession, path: String): Boolean =
-    Tombstones.exists(spark, path)
-
-  private def tombstonesTable(spark: SparkSession, path: String): DataFrame =
-    Tombstones.liveMask(spark, path, "vec_id")
+  def sigsTable(spark: SparkSession, path: String): DataFrame =
+    index.table(spark, path)
 
   /** Retract vectors from the index — takedowns / right-to-be-
     * forgotten, deletion-vector style: ids append to `tombstones/`
@@ -102,41 +85,14 @@ object EmbLshIndexStore {
     * outgrows broadcast size.
     */
   def delete(vecIds: DataFrame, path: String): Unit =
-    IndexLease.withLease(vecIds.sparkSession, path, "elsh-delete") {
-      Tombstones.append(vecIds, path, "vec_id")
-    }
+    index.delete(vecIds, path)
 
-  /** Fold outstanding tombstones into the files: rewrite `sigs/`
-    * without the retracted vectors, then clear the tombstone list —
-    * after compaction the serve pays zero masking overhead and the
-    * retracted rows are physically gone (the retention guarantee
-    * takedowns ultimately need). Runs under the store's single-writer
-    * [[IndexLease]] and repairs any stranded crash layout via
-    * [[SwapRecovery.recover]] BEFORE starting; each swap rename is
-    * checked so a failure aborts before the tombstone delete
-    * ([[MinhashIndexStore.compact]]'s discipline).
+  /** Fold outstanding tombstones into `sigs/` and clear the ledgers
+    * ([[TombstonedLayers.compact]]) — afterwards the serve pays zero
+    * masking overhead and the retracted rows are physically gone.
     */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexLease.withLease(spark, path, "elsh-compact") {
-      // tombstones are deleted LAST, so every strandable crash layout
-      // still has them — no tombstones means nothing to repair or fold
-      if (hasTombstones(spark, path)) {
-        SwapRecovery.recover(spark, path, "sigs")
-        val fs = SwapRecovery.fsOf(spark, path)
-        sigsTable(spark, path)
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("table_id")
-          .parquet(s"$path/sigs_compacted")
-        SwapRecovery.renameOrThrow(fs,
-          new org.apache.hadoop.fs.Path(s"$path/sigs"),
-          new org.apache.hadoop.fs.Path(s"$path/sigs_old"))
-        SwapRecovery.renameOrThrow(fs,
-          new org.apache.hadoop.fs.Path(s"$path/sigs_compacted"),
-          new org.apache.hadoop.fs.Path(s"$path/sigs"))
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/sigs_old"), true)
-        Tombstones.clear(spark, path)
-      }
-    }
+    index.compact(spark, path)
 
   /** Memoized build-then-delete lifecycle for the retraction gate:
     * the first caller per JVM per path signs the full corpus and then
@@ -147,15 +103,6 @@ object EmbLshIndexStore {
     * quantizer on append.
     */
   def ensureDeleted(corpus: DataFrame, removed: DataFrame, path: String,
-      bits: Int): Unit = {
-    require(!built.containsKey(path),
-      s"$path was built by ensure; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"deleted:$path", _ => {
-      StorePaths.wipe(corpus.sparkSession, path) // first caller OWNS the path
-      build(corpus, path, bits)
-      delete(removed, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+      bits: Int): Unit =
+    index.ensureDeleted(removed, path)(build(corpus, path, bits))
 }

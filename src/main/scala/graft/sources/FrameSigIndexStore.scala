@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.{MMRecord, Multimodal}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sign-once / query-many persistence for the MULTIMODAL frame
@@ -41,8 +41,19 @@ object FrameSigIndexStore {
     */
   val MaxHamming: Int = 3
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** Every layer this store may hold rows for a doc id in — the
+    * purge/expiry universe, keyed by `doc_id` (see [[TombstonedLayers]]).
+    * `bands/` always; a REP-GRAIN store ([[buildRepKeyed]]) adds
+    * `sizes/`, and [[deleteMembers]] adds `sizes_deltas/`. A tombstoned
+    * rep's size and delta rows are therefore purged with its band rows,
+    * and an id only expires once absent from ALL of them (a compact
+    * that rewrote only `bands/` left a stale size row that resurrected
+    * in [[sizesTable]] after compact+expire shrank the mask).
+    */
+  private val index = TombstonedLayers("framesig", "doc_id",
+    TombstonedLayers.partitioned("bands", "band", "int"),
+    TombstonedLayers.Layer("sizes"),
+    TombstonedLayers.Layer("sizes_deltas", Seq("takedown")))
 
   /** Deterministic per-dataset index location under the JVM temp dir. */
   def defaultPath(datasetDir: String): String =
@@ -58,47 +69,19 @@ object FrameSigIndexStore {
 
   /** Sign the corpus media once and persist the band table. */
   def build(corpus: Dataset[MMRecord], path: String): Unit =
-    bandRows(corpus)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("band")
-      .parquet(s"$path/bands")
+    index.overwrite(path)("bands" -> bandRows(corpus))
 
   /** [[build]] at most once per JVM per path (the
     * [[MinhashIndexStore.ensure]] memo contract).
     */
-  def ensure(corpus: Dataset[MMRecord], path: String): Unit = {
-    built.computeIfAbsent(s"plain:$path", _ => {
-      build(corpus, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+  def ensure(corpus: Dataset[MMRecord], path: String): Unit =
+    index.once("plain", path)(build(corpus, path))
 
   /** The stored band table; retracted assets are masked by a broadcast
     * anti-join on the tombstone list — no index file rewritten.
     */
-  def bandsTable(spark: SparkSession, path: String): DataFrame = {
-    // a batch-keyed store ([[appendBatch]]) exposes its layer key as a
-    // `batch` partition column — serve-side consumers never need it
-    val bands = spark.read.parquet(s"$path/bands")
-      .drop("batch")
-      .withColumn("band", col("band").cast("int"))
-    if (hasTombstones(spark, path))
-      bands.join(broadcast(tombstonesTable(spark, path)),
-        Seq("doc_id"), "left_anti")
-    else bands
-  }
-
-  private def hasTombstones(spark: SparkSession, path: String): Boolean =
-    Tombstones.exists(spark, path)
-
-  /** The LIVE serve mask (shared [[Tombstones]] layer — the serve side
-    * and the compact paths read one definition, so a schema change
-    * cannot silently diverge between them): outstanding tombstones
-    * minus the expired ledger ([[expireTombstones]]).
-    */
-  private def tombstonesTable(spark: SparkSession, path: String): DataFrame =
-    Tombstones.liveMask(spark, path, "doc_id")
+  def bandsTable(spark: SparkSession, path: String): DataFrame =
+    index.table(spark, path)
 
   /** Fold a vetted asset drop INTO the stored index. Signatures are
     * deterministic and per-frame independent, so append ≡ rebuild over
@@ -106,14 +89,8 @@ object FrameSigIndexStore {
     * mutation.
     */
   def append(delta: Dataset[MMRecord], path: String): Unit =
-    IndexLease.withLease(delta.sparkSession, path, "framesig-append") {
-      StoreLayout.assertWritable(delta.sparkSession, path, "bands",
-        keyed = false)
-      bandRows(delta)
-        .write.mode(SaveMode.Append)
-        .partitionBy("band")
-        .parquet(s"$path/bands")
-    }
+    index.append(delta.sparkSession, path, "append")(
+      Seq("bands" -> bandRows(delta)))
 
   /** [[append]] for STREAMED maintenance (the
     * [[MinhashIndexStore.appendBatch]] law): the drop's band rows land
@@ -124,14 +101,8 @@ object FrameSigIndexStore {
     */
   def appendBatch(delta: Dataset[MMRecord], path: String,
       batchId: Long): Unit =
-    IndexLease.withLease(delta.sparkSession, path, "framesig-append-batch") {
-      StoreLayout.assertWritable(delta.sparkSession, path, "bands",
-        keyed = true)
-      bandRows(delta)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("band")
-        .parquet(StoreLayout.batchDir(path, "bands", batchId))
-    }
+    index.append(delta.sparkSession, path, "append-batch", Some(batchId))(
+      Seq("bands" -> bandRows(delta)))
 
   /** [[build]] in the batch-keyed layout (base layer at `batch=-1`) —
     * the starting point for a store maintained by a stream of
@@ -145,123 +116,21 @@ object FrameSigIndexStore {
     * signature family means there is nothing to freeze.
     */
   def delete(docIds: DataFrame, path: String): Unit =
-    IndexLease.withLease(docIds.sparkSession, path, "framesig-delete") {
-      Tombstones.append(docIds, path, "doc_id")
-    }
+    index.delete(docIds, path)
 
-  /** Every layer this store may hold rows for a doc id in — the
-    * purge/expiry universe. `bands/` always; a REP-GRAIN store
-    * ([[buildRepKeyed]]) adds `sizes/`, and [[deleteMembers]] adds
-    * `sizes_deltas/`. Compact and expiry walk THIS list, so a
-    * tombstoned rep's size and delta rows are physically purged with
-    * its band rows and an id only expires once absent from ALL of
-    * them (the r16 ADVICE finding: a compact that rewrote only
-    * `bands/` left a stale size row that resurrected in [[sizesTable]]
-    * after compact+expire shrank the mask).
-    */
-  private def liveLayers(spark: SparkSession, path: String): Seq[String] =
-    Seq("bands") ++
-      Seq("sizes", "sizes_deltas").filter(layerExists(spark, path, _))
-
-  private def layerExists(spark: SparkSession, path: String,
-      layer: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$layer")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def liveIds(spark: SparkSession, path: String): DataFrame =
-    liveLayers(spark, path)
-      .map(l => spark.read.parquet(s"$path/$l").select(col("doc_id")))
-      .reduce(_ unionByName _)
-
-  /** Fold outstanding tombstones into the files — same lease + entry-
-    * recover + checked-rename swap as [[MinhashIndexStore.compact]],
-    * over EVERY layer of the layout ([[liveLayers]]): a rep-grain
-    * store's `sizes/` (and any `sizes_deltas/`) rewrite with the same
-    * purge anti-join, each behind its own recoverable swap.
+  /** Fold outstanding tombstones into EVERY present layer — `bands/`,
+    * and on a rep-grain store `sizes/` and `sizes_deltas/` — each
+    * behind its own recoverable swap ([[TombstonedLayers.compact]]).
     */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexLease.withLease(spark, path, "framesig-compact") {
-      // tombstones are deleted LAST, so every strandable crash layout
-      // still has them — no tombstones means nothing to repair or fold
-      if (hasTombstones(spark, path)) {
-        val layers = liveLayers(spark, path)
-        layers.foreach(SwapRecovery.recover(spark, path, _))
-        val fs = SwapRecovery.fsOf(spark, path)
-        // keyed layers stay keyed across compaction WITH BATCH VALUES
-        // PRESERVED, and keep the tombstone mask — the redelivery
-        // guard (see MinhashIndexStore.compact): folding to batch=-1
-        // would make a crash-redelivered pre-compact batch land beside
-        // its folded copy (duplicate band rows), and clearing the mask
-        // would let a redelivered batch resurrect a takedown
-        val keyed = StoreLayout.isKeyed(spark, path, "bands")
-        // repeat-compact no-op probe (see MinhashIndexStore.compact):
-        // skip the full rewrite+swap when no live row IN ANY LAYER
-        // carries a tombstoned id — exact even under batch redelivery
-        val purgeSet = Tombstones.all(spark, path, "doc_id")
-        val anyMasked = !liveIds(spark, path)
-          .join(broadcast(purgeSet), Seq("doc_id"), "left_semi")
-          .isEmpty
-        if (anyMasked) {
-          // purged ledger before the swaps (the expiry gate — see
-          // Tombstones.purged): only ids with live rows NOW, at their
-          // CURRENT tombstone epoch, are expirable later; pre-emptive
-          // takedowns never enter
-          Tombstones.appendPurged(
-            Tombstones.allWithSeq(spark, path, "doc_id")
-              .join(liveIds(spark, path), Seq("doc_id"), "left_semi"),
-            path, "doc_id")
-          // all layouts fold the FULL ledger (not the live serve
-          // mask) — the flat and keyed rewrites can never drift
-          def swapLayer(layer: String, partCols: Seq[String]): Unit = {
-            val read0 = spark.read.parquet(s"$path/$layer")
-            val read1 =
-              if (layer == "bands")
-                read0.withColumn("band", col("band").cast("int"))
-              else read0
-            read1.join(broadcast(purgeSet), Seq("doc_id"), "left_anti")
-              .write.mode(SaveMode.Overwrite)
-              .partitionBy(partCols: _*)
-              .parquet(s"$path/${layer}_compacted")
-            SwapRecovery.renameOrThrow(fs,
-              new org.apache.hadoop.fs.Path(s"$path/$layer"),
-              new org.apache.hadoop.fs.Path(s"$path/${layer}_old"))
-            SwapRecovery.renameOrThrow(fs,
-              new org.apache.hadoop.fs.Path(s"$path/${layer}_compacted"),
-              new org.apache.hadoop.fs.Path(s"$path/$layer"))
-            fs.delete(
-              new org.apache.hadoop.fs.Path(s"$path/${layer}_old"), true)
-            ()
-          }
-          swapLayer("bands",
-            if (keyed) Seq("batch", "band") else Seq("band"))
-          if (layers.contains("sizes")) swapLayer("sizes", Seq("batch"))
-          if (layers.contains("sizes_deltas"))
-            swapLayer("sizes_deltas", Seq("takedown"))
-        }
-        if (!keyed) Tombstones.clear(spark, path)
-      }
-    }
+    index.compact(spark, path)
 
-  /** Release the redelivery guard for physically-purged takedowns —
-    * the [[MinhashIndexStore.expireTombstones]] contract applied to
-    * the frame-sig store: caller asserts no pre-compact batch can be
-    * redelivered anymore; every tombstone a compact has purged AT ITS
-    * CURRENT EPOCH ([[Tombstones.expirable]]) with no live row in ANY
-    * layer — band, size, or size-delta — moves to the expired ledger
-    * and leaves the serve-side broadcast mask. Pre-emptive
-    * (delete-before-ingest) takedowns are never eligible, in any
-    * epoch. Append-only ledgers, so any crash state under-expires.
+  /** Release the redelivery guard for physically-purged takedowns
+    * ([[TombstonedLayers.expire]]): an id leaves the mask only once no
+    * band, size or size-delta row of it is left.
     */
   def expireTombstones(spark: SparkSession, path: String): Unit =
-    IndexLease.withLease(spark, path, "framesig-expire") {
-      if (hasTombstones(spark, path)) {
-        liveLayers(spark, path).foreach(SwapRecovery.recover(spark, path, _))
-        val gone = Tombstones.expirable(spark, path, "doc_id")
-          .join(liveIds(spark, path), Seq("doc_id"), "left_anti")
-        Tombstones.appendExpired(gone, path, "doc_id")
-      }
-    }
+    index.expire(spark, path)
 
   /** Memoized build-then-delete lifecycle for the retraction gate
     * (the [[MinhashIndexStore.ensureDeleted]] contract): the first
@@ -269,17 +138,36 @@ object FrameSigIndexStore {
     * later callers serve from the masked index.
     */
   def ensureDeleted(corpus: Dataset[MMRecord], removed: DataFrame,
-      path: String): Unit = {
-    require(!built.containsKey(s"plain:$path"),
-      s"$path was built by ensure; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"deleted:$path", _ => {
-      StorePaths.wipe(corpus.sparkSession, path) // first caller OWNS the path
-      build(corpus, path)
-      delete(removed, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
+      path: String): Unit =
+    index.ensureDeleted(removed, path)(build(corpus, path))
+
+  private def requireLossless(maxHamming: Int): Unit =
+    require(maxHamming >= 0 && maxHamming <= MaxHamming,
+      s"4x16-bit banding is only lossless up to Hamming $MaxHamming, " +
+        s"got $maxHamming")
+
+  /** A drop collapsed to its distinct assets (the content-keyed
+    * election): the member → rep map, the rep sizes, the reps' records.
+    */
+  private def electReps(drop: Dataset[MMRecord])
+      : (DataFrame, DataFrame, Dataset[MMRecord]) = {
+    import drop.sparkSession.implicits._
+    val (docRep, sizes) = Multimodal.assetRepElection(drop)
+    (docRep, sizes, drop.toDF()
+      .join(sizes.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
+      .as[MMRecord])
   }
+
+  /** Hamming distance between two aliased band rows' signatures. */
+  private def ham(a: String, b: String): Column =
+    (bit_count(col(s"$a.sig_lo").bitwiseXOR(col(s"$b.sig_lo"))) +
+      bit_count(col(s"$a.sig_hi").bitwiseXOR(col(s"$b.sig_hi"))))
+      .cast("int").as("hamming")
+
+  /** Two aliased band rows share a (frame, band, band value) bucket. */
+  private def onCols(a: String, b: String): Column =
+    col(s"$a.frame_idx") === col(s"$b.frame_idx") &&
+      col(s"$a.band") === col(s"$b.band") && col(s"$a.bv") === col(s"$b.bv")
 
   /** Incremental near-dup FRAME pairs: a new asset drop against the
     * persisted band index — the daily-drop form of
@@ -308,28 +196,13 @@ object FrameSigIndexStore {
     */
   def deltaPairs(drop: Dataset[MMRecord], storedBands: DataFrame,
       maxHamming: Int = MaxHamming): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= MaxHamming,
-      s"4x16-bit banding is only lossless up to Hamming $MaxHamming, " +
-        s"got $maxHamming")
-    val (docRep, sizes) = Multimodal.assetRepElection(drop)
-    val repDrop = {
-      import drop.sparkSession.implicits._
-      drop.toDF()
-        .join(sizes.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-        .as[MMRecord]
-    }
+    requireLossless(maxHamming)
+    val (docRep, sizes, repDrop) = electReps(drop)
     // rep-grain and multiply consumed (stored join + internal join's
     // two sides + the within-group frame spine) — materialize once
     val dBands = org.apache.spark.sql.GraftInternal.pinRecomputable(
       bandRows(repDrop))
     val dSide = broadcast(dBands)
-    def ham(a: String, b: String) =
-      (bit_count(col(s"$a.sig_lo").bitwiseXOR(col(s"$b.sig_lo"))) +
-        bit_count(col(s"$a.sig_hi").bitwiseXOR(col(s"$b.sig_hi"))))
-        .cast("int").as("hamming")
-    val onCols = (a: String, b: String) =>
-      col(s"$a.frame_idx") === col(s"$b.frame_idx") &&
-        col(s"$a.band") === col(s"$b.band") && col(s"$a.bv") === col(s"$b.bv")
     // stored × distinct-drop candidates, verified at rep grain, then
     // expanded: a stored id pairs with EVERY member of the rep's twin
     // group at the rep's per-frame verdict (stored and drop ids are
@@ -423,23 +296,11 @@ object FrameSigIndexStore {
     */
   def appendRepBatch(drop: Dataset[MMRecord], path: String,
       batchId: Long): Unit =
-    IndexLease.withLease(drop.sparkSession, path, "framesig-append-rep") {
-      StoreLayout.assertWritable(drop.sparkSession, path, "bands",
-        keyed = true)
-      import drop.sparkSession.implicits._
-      val (_, sizes) = Multimodal.assetRepElection(drop)
-      val repDrop = drop.toDF()
-        .join(sizes.select(col("rep").as("doc_id")), Seq("doc_id"),
-          "left_semi")
-        .as[MMRecord]
-      sizes.select(col("rep").as("doc_id"),
-          col("n_copies").cast("long").as("n_copies"))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(StoreLayout.batchDir(path, "sizes", batchId))
-      bandRows(repDrop)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("band")
-        .parquet(StoreLayout.batchDir(path, "bands", batchId))
+    index.append(drop.sparkSession, path, "append-rep", Some(batchId)) {
+      val (_, sizes, repDrop) = electReps(drop)
+      Seq("sizes" -> sizes.select(col("rep").as("doc_id"),
+          col("n_copies").cast("long").as("n_copies")),
+        "bands" -> bandRows(repDrop))
     }
 
   /** The stored rep sizes (tombstone-masked like [[bandsTable]]):
@@ -453,25 +314,27 @@ object FrameSigIndexStore {
   def sizesTable(spark: SparkSession, path: String): DataFrame =
     foldedSizes(spark, path, excludeBatch = None)
 
+  /** Base sizes minus `excludeBatch`, plus every size-delta layer but
+    * `excludeTakedown`, summed per rep and tombstone-masked.
+    */
   private def foldedSizes(spark: SparkSession, path: String,
-      excludeBatch: Option[Long]): DataFrame = {
+      excludeBatch: Option[Long],
+      excludeTakedown: Option[Long] = None): DataFrame = {
     val raw = spark.read.parquet(s"$path/sizes")
     val base = excludeBatch.fold(raw)(b => raw.filter(col("batch") =!= b))
       .drop("batch")
       .select(col("doc_id"), col("n_copies").cast("long").as("n_copies"))
     val folded =
-      if (layerExists(spark, path, "sizes_deltas"))
+      if (index.has(spark, path, "sizes_deltas"))
         base.unionByName(
             spark.read.parquet(s"$path/sizes_deltas")
+              .filter(excludeTakedown.fold(lit(true))(col("takedown") =!= _))
               .select(col("doc_id"),
                 col("n_copies").cast("long").as("n_copies")))
           .groupBy(col("doc_id"))
           .agg(sum(col("n_copies")).as("n_copies"))
       else base
-    if (hasTombstones(spark, path))
-      folded.join(broadcast(tombstonesTable(spark, path)),
-        Seq("doc_id"), "left_anti")
-    else folded
+    index.mask(spark, path, folded)
   }
 
   /** [[bandsTable]] minus one batch layer — what a streamed maintainer
@@ -485,16 +348,8 @@ object FrameSigIndexStore {
     * never scanned) and is a no-op on first delivery.
     */
   def bandsTableExcluding(spark: SparkSession, path: String,
-      batchId: Long): DataFrame = {
-    val bands = spark.read.parquet(s"$path/bands")
-      .filter(col("batch") =!= batchId)
-      .drop("batch")
-      .withColumn("band", col("band").cast("int"))
-    if (hasTombstones(spark, path))
-      bands.join(broadcast(tombstonesTable(spark, path)),
-        Seq("doc_id"), "left_anti")
-    else bands
-  }
+      batchId: Long): DataFrame =
+    index.table(spark, path, excluding = Some(batchId))
 
   /** [[sizesTable]] minus one batch layer — the size-map side of the
     * redelivery recompute-identity fix ([[bandsTableExcluding]]).
@@ -541,29 +396,14 @@ object FrameSigIndexStore {
     IndexLease.withLease(memberIds.sparkSession, path,
       "framesig-delete-members") {
       val spark = memberIds.sparkSession
-      require(layerExists(spark, path, "sizes"),
+      require(index.has(spark, path, "sizes"),
         s"$path has no sizes/ layer — member-grain takedowns only " +
           "apply to the rep-grain layout (buildRepKeyed); use delete() " +
           "on a pair-grain store")
       // remaining copies per rep, EXCLUDING this takedown's own layer
       // (retry-exact) and any tombstoned rep (reads as unknown)
-      val base = spark.read.parquet(s"$path/sizes").drop("batch")
-        .select(col("doc_id"), col("n_copies").cast("long").as("n_copies"))
-      val other =
-        if (layerExists(spark, path, "sizes_deltas"))
-          base.unionByName(
-            spark.read.parquet(s"$path/sizes_deltas")
-              .filter(col("takedown") =!= takedownId)
-              .select(col("doc_id"),
-                col("n_copies").cast("long").as("n_copies")))
-        else base
-      val totals = other.groupBy(col("doc_id"))
-        .agg(sum(col("n_copies")).as("n"))
-      val masked =
-        if (hasTombstones(spark, path))
-          totals.join(broadcast(tombstonesTable(spark, path)),
-            Seq("doc_id"), "left_anti")
-        else totals
+      val masked = foldedSizes(spark, path, None, Some(takedownId))
+        .groupBy(col("doc_id")).agg(sum(col("n_copies")).as("n"))
       val req = memberIds.select(col("doc_id"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("k"))
       val checked = req.join(masked, Seq("doc_id"), "left_outer")
@@ -610,19 +450,14 @@ object FrameSigIndexStore {
     * serve from the decremented store.
     */
   def ensureMemberDeleted(corpus: Dataset[MMRecord], path: String): Unit = {
-    require(!built.containsKey(s"plain:$path") &&
-      !built.containsKey(s"deleted:$path"),
-      s"$path was built by another lifecycle; use a distinct path")
-    built.computeIfAbsent(s"memberdel:$path", _ => {
+    index.once("memberdel", path, "plain", "deleted") {
       val spark = corpus.sparkSession
       StorePaths.wipe(spark, path) // first caller OWNS the path
       buildRepKeyed(corpus, path)
       val twins = sizesTable(spark, path)
         .filter(col("n_copies") >= 2).select(col("doc_id"))
       deleteMembers(twins, path, takedownId = 1L)
-      java.lang.Boolean.TRUE
-    })
-    ()
+    }
   }
 
   /** Incremental near-dup frames at REP grain — [[deltaPairs]] with
@@ -646,24 +481,11 @@ object FrameSigIndexStore {
     */
   def deltaReps(drop: Dataset[MMRecord], storedBands: DataFrame,
       storedSizes: DataFrame, maxHamming: Int = MaxHamming): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= MaxHamming,
-      s"4x16-bit banding is only lossless up to Hamming $MaxHamming, " +
-        s"got $maxHamming")
-    import drop.sparkSession.implicits._
-    val (_, sizes) = Multimodal.assetRepElection(drop)
-    val repDrop = drop.toDF()
-      .join(sizes.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-      .as[MMRecord]
+    requireLossless(maxHamming)
+    val (_, sizes, repDrop) = electReps(drop)
     val dBands = org.apache.spark.sql.GraftInternal.pinRecomputable(
       bandRows(repDrop))
     val dSide = broadcast(dBands)
-    def ham(a: String, b: String) =
-      (bit_count(col(s"$a.sig_lo").bitwiseXOR(col(s"$b.sig_lo"))) +
-        bit_count(col(s"$a.sig_hi").bitwiseXOR(col(s"$b.sig_hi"))))
-        .cast("int").as("hamming")
-    val onCols = (a: String, b: String) =>
-      col(s"$a.frame_idx") === col(s"$b.frame_idx") &&
-        col(s"$a.band") === col(s"$b.band") && col(s"$a.bv") === col(s"$b.bv")
     // stored-rep × drop-rep candidates; sizes follow their ids through
     // the least/greatest re-orientation. The DROP size map is
     // drop-bounded — broadcast explicitly, the stored band stream

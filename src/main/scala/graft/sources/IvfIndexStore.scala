@@ -35,7 +35,12 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndexStore {
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** The cell lists and their PQ codes, keyed by `vec_id` (see
+    * [[TombstonedLayers]]); a batch-keyed store has `cells/` only.
+    */
+  private val index = TombstonedLayers("ivf", "vec_id",
+    TombstonedLayers.partitioned("cells", "cell", "long"),
+    TombstonedLayers.partitioned("codes", "cell", "long"))
 
   /** Deterministic per-(dataset, params) index location under the JVM
     * temp dir.
@@ -51,12 +56,8 @@ object IvfIndexStore {
     */
   def build(emb: DataFrame, path: String, cells: Int = 8,
       iters: Int = 3): Unit = {
-    val assign = Similarity.kmeansAssign(emb, cells, iters)
-      .select(col("vec_id"), col("cluster").as("cell"))
-    val labeled = emb.join(assign, Seq("vec_id"))
-      .select(col("vec_id"), col("embedding"), col("cell"))
-    labeled.write.mode(SaveMode.Overwrite)
-      .partitionBy("cell").parquet(s"$path/cells")
+    val labeled = trained(emb, cells, iters)
+    index.overwrite(path)("cells" -> labeled)
     Similarity.cellCentroids(labeled, "cell")
       .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
     val stats = labeled
@@ -65,16 +66,23 @@ object IvfIndexStore {
       .agg(min(col("x")).cast("double").as("mn"),
         max(col("x")).cast("double").as("mx"))
     stats.write.mode(SaveMode.Overwrite).parquet(s"$path/grid")
-    writeCodes(labeled, stats, path, SaveMode.Overwrite)
+    index.overwrite(path)("codes" -> codeRows(labeled, stats))
   }
 
-  /** Encode against the grid and land the int8 `codes/` layer. The
+  /** (vec_id, embedding, cell): the corpus labeled by a fresh Lloyd
+    * training of the coarse quantizer.
+    */
+  private def trained(emb: DataFrame, cells: Int, iters: Int): DataFrame =
+    emb.join(Similarity.kmeansAssign(emb, cells, iters)
+        .select(col("vec_id"), col("cluster").as("cell")), Seq("vec_id"))
+      .select(col("vec_id"), col("embedding"), col("cell"))
+
+  /** Encode against the grid: the rows of the int8 `codes/` layer. The
     * clamp to [0, 255] is a no-op for the build (the grid IS the
     * corpus min/max) and the honest int8 bound for appended vectors
     * that fall outside the frozen grid's range.
     */
-  private def writeCodes(labeled: DataFrame, stats: DataFrame, path: String,
-      mode: SaveMode): Unit = {
+  private def codeRows(labeled: DataFrame, stats: DataFrame): DataFrame = {
     val gridRow = spark_grid(stats)
     val code = zip_with(col("embedding"), col("ms"), (x, m) => {
       val step = (m.getField("mx") - m.getField("mn")) / 255d
@@ -85,8 +93,6 @@ object IvfIndexStore {
     })
     labeled.crossJoin(broadcast(gridRow))
       .select(col("vec_id"), col("cell"), code.as("codes"))
-      .write.mode(mode)
-      .partitionBy("cell").parquet(s"$path/codes")
   }
 
   /** Nearest STORED centroid per row — the append-time coarse
@@ -113,18 +119,6 @@ object IvfIndexStore {
         col("m.cell").as("cell"))
   }
 
-  /** Fold a new drop INTO the stored index without retraining: each
-    * delta vector is assigned to its nearest STORED centroid
-    * ([[assignStored]] — the quantizer and the int8 grid stay FROZEN
-    * at their build-time values, the production semantics of an index
-    * append), then lands in the same cell-partitioned `cells/` and
-    * `codes/` layouts. Centroids/grid are never rewritten, so a serve
-    * after an append reads the identical quantizer — spec-pinned,
-    * plus a tamper test proving the stored centroids (not a retrain)
-    * drive the assignment. Periodic RE-TRAINS (when drift degrades
-    * recall) are a fresh [[build]]; the recall eval loop
-    * (`knn_recall`) is the drift detector.
-    */
   /** Frozen-quantizer cell assignment for a delta — [[append]]'s
     * assignment law WITHOUT the fold (read-only): each row lands in
     * its nearest STORED centroid's cell (4dp-rounded d2 argmin, ties
@@ -137,14 +131,25 @@ object IvfIndexStore {
     assignStored(rows, centroidsTable(spark, path))
       .select(col("vec_id"), col("cell"))
 
+  /** Fold a new drop INTO the stored index without retraining: each
+    * delta vector is assigned to its nearest STORED centroid
+    * ([[assignStored]] — the quantizer and the int8 grid stay FROZEN
+    * at their build-time values, the production semantics of an index
+    * append), then lands in the same cell-partitioned `cells/` and
+    * `codes/` layouts. Centroids/grid are never rewritten, so a serve
+    * after an append reads the identical quantizer — spec-pinned,
+    * plus a tamper test proving the stored centroids (not a retrain)
+    * drive the assignment. Periodic RE-TRAINS (when drift degrades
+    * recall) are a fresh [[build]]; the recall eval loop
+    * (`knn_recall`) is the drift detector. Refused on a batch-keyed
+    * store (the layouts must not mix).
+    */
   def append(spark: SparkSession, delta: DataFrame, path: String): Unit =
-    IndexLease.withLease(spark, path, "ivf-append") {
+    index.append(spark, path, "append") {
       val labeled = assignStored(delta, centroidsTable(spark, path))
         .select(col("vec_id"), col("embedding"), col("cell"))
-      labeled.write.mode(SaveMode.Append)
-        .partitionBy("cell").parquet(s"$path/cells")
-      writeCodes(labeled, spark.read.parquet(s"$path/grid"), path,
-        SaveMode.Append)
+      Seq("cells" -> labeled,
+        "codes" -> codeRows(labeled, spark.read.parquet(s"$path/grid")))
     }
 
   /** Memoized build-then-append lifecycle for the rollover gate: train
@@ -153,14 +158,10 @@ object IvfIndexStore {
     */
   def ensureRolled(spark: SparkSession, base: DataFrame, delta: DataFrame,
       path: String, cells: Int = 8, iters: Int = 3): Unit = {
-    require(!built.containsKey(s"plain:$path"),
-      s"$path was built by ensure; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"rolled:$path", _ => {
+    index.once("rolled", path, "plain") {
       build(base, path, cells, iters)
       append(spark, delta, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
+    }
   }
 
   /** The retrain LOOP closed as an action: roll the index (build on
@@ -180,7 +181,7 @@ object IvfIndexStore {
   def ensureRetrained(spark: SparkSession, base: DataFrame,
       delta: DataFrame, path: String, threshold: Double = 0.95,
       cells: Int = 8, iters: Int = 3): Unit = {
-    built.computeIfAbsent(s"retrain:$path", _ => {
+    index.once("retrain", path) {
       import org.apache.spark.sql.functions.{avg, col}
       build(base, s"$path/rolled", cells, iters)
       append(spark, delta, s"$path/rolled")
@@ -192,24 +193,19 @@ object IvfIndexStore {
         .agg(avg(col("recall_at_5"))).head().getDouble(0)
       val retrain = rolledRecall < threshold
       if (retrain) build(union, s"$path/full", cells, iters)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(
+      val out = SwapRecovery.fsOf(spark, path).create(
         new org.apache.hadoop.fs.Path(s"$path/decision.json"), true)
       out.write(
         s"""{"rolled_recall":$rolledRecall,"threshold":$threshold,"retrained":$retrain}"""
           .getBytes("UTF-8"))
       out.close()
-      java.lang.Boolean.TRUE
-    })
-    ()
+    }
   }
 
   /** The persisted retrain decision: (measured rolled recall, fired). */
   def retrainDecision(spark: SparkSession, path: String): (Double, Boolean) = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/decision.json"))
+    val in = SwapRecovery.fsOf(spark, path)
+      .open(new org.apache.hadoop.fs.Path(s"$path/decision.json"))
     val txt = scala.io.Source.fromInputStream(in).mkString
     in.close()
     val recall = """"rolled_recall":([0-9.eE+-]+)""".r
@@ -238,17 +234,10 @@ object IvfIndexStore {
     * that throws leaves no entry behind, so the next caller retries.
     */
   def ensure(emb: DataFrame, path: String, cells: Int = 8,
-      iters: Int = 3): Unit = {
+      iters: Int = 3): Unit =
     // lifecycle-qualified memo key: ensure and ensureRolled can never
     // silently satisfy each other's contract on a shared path
-    require(!built.containsKey(s"rolled:$path"),
-      s"$path was built by ensureRolled; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"plain:$path", _ => {
-      build(emb, path, cells, iters)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+    index.once("plain", path, "rolled")(build(emb, path, cells, iters))
 
   /** The stored inverted lists; the partition column comes back as the
     * directory value, cast to the trained cell id type. Retracted
@@ -257,32 +246,16 @@ object IvfIndexStore {
     * rewriting a single list file.
     */
   def cellsTable(spark: SparkSession, path: String): DataFrame =
-    maskTombstones(spark, path,
-      spark.read.parquet(s"$path/cells")
-        // a batch-keyed store ([[appendCellsBatch]]) exposes its layer
-        // key as a `batch` partition column — serve-side consumers
-        // never need it (no-op on a flat store)
-        .drop("batch")
-        .withColumn("cell", col("cell").cast("long")))
+    index.table(spark, path)
 
   /** [[cellsTable]] minus one batch layer — what a streamed maintainer
-    * serves its OWN micro-batch against (the `bandsTableExcluding`
-    * recompute-identity law, applied to the cell lists): if the
-    * batch's fold landed but the checkpoint commit did not, a
-    * redelivered batch would see its own vectors stored and re-emit
-    * every drop-internal pair through the stored×drop join. On first
-    * delivery the layer does not exist and the exclusion is a no-op
-    * (base layer is `batch=-1`, stream ids are ≥ 0); the filter lands
-    * on the `batch` partition column, so the excluded layer's files
-    * are pruned, never scanned.
+    * serves its OWN micro-batch against (the recompute-identity read,
+    * see [[TombstonedLayers.table]]; base layer is `batch=-1`, stream
+    * ids are ≥ 0).
     */
   def cellsTableExcluding(spark: SparkSession, path: String,
       batchId: Long): DataFrame =
-    maskTombstones(spark, path,
-      spark.read.parquet(s"$path/cells")
-        .filter(col("batch") =!= batchId)
-        .drop("batch")
-        .withColumn("cell", col("cell").cast("long")))
+    index.table(spark, path, excluding = Some(batchId))
 
   /** [[build]] in the batch-keyed layout (cell lists under
     * `cells/batch=-1/`, centroids flat) — the starting point for a
@@ -293,13 +266,9 @@ object IvfIndexStore {
     */
   def buildKeyed(emb: DataFrame, path: String, cells: Int = 8,
       iters: Int = 3): Unit = {
-    val assign = Similarity.kmeansAssign(emb, cells, iters)
-      .select(col("vec_id"), col("cluster").as("cell"))
-    val labeled = emb.join(assign, Seq("vec_id"))
-      .select(col("vec_id"), col("embedding"), col("cell"))
-    StoreLayout.assertWritable(emb.sparkSession, path, "cells", keyed = true)
-    labeled.write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(StoreLayout.batchDir(path, "cells", -1L))
+    val labeled = trained(emb, cells, iters)
+    index.append(emb.sparkSession, path, "append-batch", Some(-1L))(
+      Seq("cells" -> labeled))
     Similarity.cellCentroids(labeled, "cell")
       .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
   }
@@ -312,26 +281,9 @@ object IvfIndexStore {
     */
   def appendCellsBatch(spark: SparkSession, delta: DataFrame, path: String,
       batchId: Long): Unit =
-    IndexLease.withLease(spark, path, "ivf-append-batch") {
-      StoreLayout.assertWritable(spark, path, "cells", keyed = true)
-      assignStored(delta, centroidsTable(spark, path))
-        .select(col("vec_id"), col("embedding"), col("cell"))
-        .write.mode(SaveMode.Overwrite).partitionBy("cell")
-        .parquet(StoreLayout.batchDir(path, "cells", batchId))
-    }
-
-  private def maskTombstones(spark: SparkSession, path: String,
-      rows: DataFrame): DataFrame =
-    if (hasTombstones(spark, path))
-      rows.join(broadcast(tombstonesTable(spark, path)),
-        Seq("vec_id"), "left_anti")
-    else rows
-
-  private def hasTombstones(spark: SparkSession, path: String): Boolean =
-    Tombstones.exists(spark, path)
-
-  private def tombstonesTable(spark: SparkSession, path: String): DataFrame =
-    Tombstones.liveMask(spark, path, "vec_id")
+    index.append(spark, path, "append-batch", Some(batchId))(
+      Seq("cells" -> assignStored(delta, centroidsTable(spark, path))
+        .select(col("vec_id"), col("embedding"), col("cell"))))
 
   /** Retract vectors from the index — takedowns / right-to-be-
     * forgotten, deletion-vector style: ids append to `tombstones/`
@@ -343,47 +295,15 @@ object IvfIndexStore {
     * [[compact]] when the list outgrows broadcast size.
     */
   def delete(vecIds: DataFrame, path: String): Unit =
-    IndexLease.withLease(vecIds.sparkSession, path, "ivf-delete") {
-      Tombstones.append(vecIds, path, "vec_id")
-    }
+    index.delete(vecIds, path)
 
-  /** Fold outstanding tombstones into the files: rewrite `cells/` and
-    * `codes/` without the retracted vectors, then clear the tombstone
-    * list — zero masking overhead afterwards and the retracted rows
-    * are physically gone (the retention guarantee takedowns need).
-    * Runs under the store's single-writer [[IndexLease]] (a racing
-    * [[append]] serializes against the two-layer swap) and repairs any
-    * stranded crash layout via [[SwapRecovery.recover]] per layer
-    * BEFORE starting; each rename is checked so a failure aborts
-    * before anything destructive.
+  /** Fold outstanding tombstones into `cells/` and `codes/`
+    * ([[TombstonedLayers.compact]]): a flat store then serves with
+    * zero masking; a batch-keyed store (no `codes/`) keeps its batch
+    * values and its mask. Centroids and grid are never rewritten.
     */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexLease.withLease(spark, path, "ivf-compact") {
-      // tombstones are deleted LAST, so every strandable crash layout
-      // still has them — no tombstones means nothing to repair or fold
-      if (hasTombstones(spark, path)) {
-        SwapRecovery.recover(spark, path, "cells")
-        SwapRecovery.recover(spark, path, "codes")
-        val fs = SwapRecovery.fsOf(spark, path)
-        def swap(layer: String, masked: DataFrame): Unit = {
-          masked.write.mode(SaveMode.Overwrite)
-            .partitionBy("cell").parquet(s"$path/${layer}_compacted")
-          SwapRecovery.renameOrThrow(fs,
-            new org.apache.hadoop.fs.Path(s"$path/$layer"),
-            new org.apache.hadoop.fs.Path(s"$path/${layer}_old"))
-          SwapRecovery.renameOrThrow(fs,
-            new org.apache.hadoop.fs.Path(s"$path/${layer}_compacted"),
-            new org.apache.hadoop.fs.Path(s"$path/$layer"))
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/${layer}_old"), true)
-          ()
-        }
-        swap("cells", cellsTable(spark, path))
-        swap("codes", maskTombstones(spark, path,
-          spark.read.parquet(s"$path/codes")
-            .withColumn("cell", col("cell").cast("long"))))
-        Tombstones.clear(spark, path)
-      }
-    }
+    index.compact(spark, path)
 
   /** Memoized build-then-delete lifecycle for the retraction gate: the
     * first caller per JVM per path trains + persists over the corpus
@@ -391,18 +311,8 @@ object IvfIndexStore {
     * from the masked index.
     */
   def ensureDeleted(corpus: DataFrame, removed: DataFrame, path: String,
-      cells: Int = 8, iters: Int = 3): Unit = {
-    require(!built.containsKey(s"plain:$path") &&
-      !built.containsKey(s"rolled:$path"),
-      s"$path was built by another lifecycle; use a distinct path")
-    built.computeIfAbsent(s"deleted:$path", _ => {
-      StorePaths.wipe(corpus.sparkSession, path) // first caller OWNS the path
-      build(corpus, path, cells, iters)
-      delete(removed, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+      cells: Int = 8, iters: Int = 3): Unit =
+    index.ensureDeleted(removed, path)(build(corpus, path, cells, iters))
 
   def centroidsTable(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/centroids")
@@ -434,9 +344,7 @@ object IvfIndexStore {
     val probed = Similarity.probeCells(centroidsTable(spark, path),
       probeRows, nprobe)
     val gridRow = spark_grid(spark.read.parquet(s"$path/grid"))
-    val codes = maskTombstones(spark, path,
-      spark.read.parquet(s"$path/codes")
-        .withColumn("cell", col("cell").cast("long")))
+    val codes = index.table(spark, path, "codes")
     val recon = zip_with(col("codes"), col("ms"), (c, m) => {
       val step = (m.getField("mx") - m.getField("mn")) / 255d
       when(m.getField("mx") === m.getField("mn"), m.getField("mn"))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.functions.{TextFunctions => TF}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sign-once / query-many persistence for the MinHash near-dup index —
@@ -40,8 +40,9 @@ object MinhashIndexStore {
   val Bands: Int = 8
   val Rows: Int = NumHashes / Bands
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** The single `bands/` layer, keyed by `doc_id` (see [[TombstonedLayers]]). */
+  private val index = TombstonedLayers("minhash", "doc_id",
+    TombstonedLayers.partitioned("bands", "band", "int"))
 
   /** Deterministic per-dataset index location under the JVM temp dir. */
   def defaultPath(datasetDir: String): String =
@@ -74,25 +75,15 @@ object MinhashIndexStore {
 
   /** Sign the corpus once and persist the band table. */
   def build(corpus: DataFrame, path: String): Unit =
-    bandRows(corpus)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("band")
-      .parquet(s"$path/bands")
+    index.overwrite(path)("bands" -> bandRows(corpus))
 
   /** [[build]] at most once per JVM per path. The memo key carries the
     * lifecycle ([[ensure]] vs [[ensureRolled]]) so the two can never
     * silently satisfy each other's contract on a shared path — mixing
     * lifecycles on one path is a caller error and now throws.
     */
-  def ensure(corpus: DataFrame, path: String): Unit = {
-    require(!built.containsKey(s"rolled:$path"),
-      s"$path was built by ensureRolled; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"plain:$path", _ => {
-      build(corpus, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+  def ensure(corpus: DataFrame, path: String): Unit =
+    index.once("plain", path, "rolled")(build(corpus, path))
 
   /** The stored band table; the partition column comes back as the
     * directory value, cast to the written int type. Retracted docs
@@ -100,223 +91,48 @@ object MinhashIndexStore {
     * list — the serve plan never sees their band rows, without
     * rewriting a single index file.
     */
-  def bandsTable(spark: SparkSession, path: String): DataFrame = {
-    // a batch-keyed store ([[appendBatch]]) exposes its layer key as a
-    // `batch` partition column — serve-side consumers never need it
-    val bands = spark.read.parquet(s"$path/bands")
-      .drop("batch")
-      .withColumn("band", col("band").cast("int"))
-    if (hasTombstones(spark, path))
-      bands.join(broadcast(tombstonesTable(spark, path)),
-        Seq("doc_id"), "left_anti")
-    else bands
-  }
+  def bandsTable(spark: SparkSession, path: String): DataFrame =
+    index.table(spark, path)
 
   /** [[bandsTable]] minus one batch layer — what a streamed maintainer
-    * serves its OWN micro-batch against (r16 ADVICE): if the batch's
-    * fold landed but the checkpoint commit did not, redelivery
-    * recomputes the delta against an index that already contains the
-    * batch's own rows, and every drop-internal pair would re-emit
-    * through the stored×drop join — the overwritten sink batch would
-    * not be value-identical. Excluding the batch's own layer restores
-    * recompute identity: on FIRST delivery the layer does not exist
-    * yet and the exclusion is a no-op (batch ids are checkpoint-unique,
-    * the base layer is `batch=-1`, stream ids are >= 0). The filter
-    * lands on the `batch` partition column, so the excluded layer's
-    * files are pruned, never scanned.
+    * serves its OWN micro-batch against (the recompute-identity read,
+    * see [[TombstonedLayers.table]]): batch ids are checkpoint-unique,
+    * the base layer is `batch=-1`, stream ids are >= 0.
     */
   def bandsTableExcluding(spark: SparkSession, path: String,
-      batchId: Long): DataFrame = {
-    val bands = spark.read.parquet(s"$path/bands")
-      .filter(col("batch") =!= batchId)
-      .drop("batch")
-      .withColumn("band", col("band").cast("int"))
-    if (hasTombstones(spark, path))
-      bands.join(broadcast(tombstonesTable(spark, path)),
-        Seq("doc_id"), "left_anti")
-    else bands
-  }
-
-  private def hasTombstones(spark: SparkSession, path: String): Boolean =
-    Tombstones.exists(spark, path)
-
-  /** The LIVE serve mask: outstanding tombstones minus the expired
-    * ledger ([[expireTombstones]]) — the broadcast the serve-side
-    * anti-join carries stays bounded by UNEXPIRED takedowns instead of
-    * growing monotonically across the store's whole life.
-    */
-  private def tombstonesTable(spark: SparkSession, path: String): DataFrame =
-    Tombstones.liveMask(spark, path, "doc_id")
+      batchId: Long): DataFrame =
+    index.table(spark, path, excluding = Some(batchId))
 
   /** Retract documents from the index — takedowns / right-to-be-
-    * forgotten. Deletion-vector style: the doc ids append to a
-    * `tombstones/` list (O(|retraction|) write — an id per doc, never
-    * an index rewrite at serve time) and [[bandsTable]] masks them on
-    * read. The broadcast anti-join costs one hash probe per band row
-    * while tombstones are outstanding; run [[compact]] to purge
-    * physically, then [[expireTombstones]] (keyed stores, once the
-    * redelivery horizon passes) to shrink the mask itself.
+    * forgotten: the doc ids append to `tombstones/` and [[bandsTable]]
+    * masks them on read. Run [[compact]] to purge physically, then
+    * [[expireTombstones]] (keyed stores, once the redelivery horizon
+    * passes) to shrink the mask itself.
     */
   def delete(docIds: DataFrame, path: String): Unit =
-    IndexLease.withLease(docIds.sparkSession, path, "minhash-delete") {
-      Tombstones.append(docIds, path, "doc_id")
-    }
+    index.delete(docIds, path)
 
-  /** Fold outstanding tombstones into the files: rewrite `bands/`
-    * without the retracted docs, then clear the tombstone list. After
-    * compaction [[bandsTable]] serves with zero masking overhead and
-    * the retracted rows are physically gone (the retention guarantee
-    * takedowns ultimately need). Runs under the store's single-writer
-    * [[IndexLease]] (a racing [[append]] blocks until the swap lands —
-    * no appended row can slip into the doomed pre-swap dir), and
-    * repairs any stranded crash layout via [[SwapRecovery.recover]]
-    * BEFORE starting, so the renames always begin from a clean state.
+  /** Fold outstanding tombstones into `bands/` ([[TombstonedLayers.compact]]):
+    * a flat store then serves with zero masking; a batch-keyed store
+    * keeps its batch values and its mask (the redelivery guard).
     */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexLease.withLease(spark, path, "minhash-compact") {
-      // tombstones are deleted LAST, so every strandable crash layout
-      // still has them — no tombstones means nothing to repair or fold
-      if (hasTombstones(spark, path)) {
-        SwapRecovery.recover(spark, path, "bands")
-        val fs = SwapRecovery.fsOf(spark, path)
-        // a batch-keyed layer (streamed maintenance) stays keyed across
-        // compaction WITH ITS BATCH VALUES PRESERVED — folding layers
-        // into batch=-1 would silently break appendBatch's
-        // crash-redelivery idempotency (a batch folded away and then
-        // redelivered re-lands beside its folded copy and duplicates
-        // every band row). Each surviving batch layer is rewritten
-        // minus the retracted docs, and the tombstone list is KEPT on
-        // keyed stores: a redelivered pre-compact batch re-lands its
-        // full rows (including retracted docs), and only the retained
-        // mask keeps a takedown from resurrecting — the physical purge
-        // happens, the serve-side anti-join stays. Flat stores keep
-        // the zero-masking contract (rewrite + clear).
-        val keyed = StoreLayout.isKeyed(spark, path, "bands")
-        // REPEAT-COMPACT NO-OP PROBE (r14 review finding: keyed stores
-        // retain the mask, so hasTombstones is true forever after the
-        // first takedown and every later compact paid a full rewrite
-        // for nothing). The exact condition for "the rewrite would be
-        // byte-identical" is "no live band row carries a tombstoned
-        // id" — one early-exiting broadcast semi probe, which also
-        // stays correct under batch redelivery (a redelivered
-        // pre-compact layer re-lands retracted rows; the probe sees
-        // them and the rewrite runs). A high-water marker could not:
-        // it would no-op on re-landed rows it never saw.
-        val purgeSet = Tombstones.all(spark, path, "doc_id")
-        // ONE bands pass for both the no-op probe and the purge
-        // ledger (r18: the probe and the ledger each scanned the full
-        // band table): the tombstoned ids that hold live rows RIGHT
-        // NOW, pinned — a tombstone-bounded frame, so the isEmpty
-        // probe and the ledger's semi join below are both broadcast-
-        // tiny reads of it.
-        val maskedLive = org.apache.spark.sql.GraftInternal.pinRecomputable(
-          spark.read.parquet(s"$path/bands")
-            .join(broadcast(purgeSet), Seq("doc_id"), "left_semi")
-            .select(col("doc_id")).distinct())
-        val anyMasked = !maskedLive.isEmpty
-        if (anyMasked) {
-          // ledger the ids this rewrite ACTUALLY purges (they have
-          // live rows right now) BEFORE the swap — the expiry gate
-          // that keeps pre-emptive takedowns masked forever. Written
-          // pre-swap because it reads the pre-swap layer; a crash
-          // between this append and the swap only over-records, and
-          // expire's rows-absent conjunct refuses ids with live rows.
-          Tombstones.appendPurged(
-            Tombstones.allWithSeq(spark, path, "doc_id").join(
-              broadcast(maskedLive), Seq("doc_id"), "left_semi"),
-            path, "doc_id")
-          // physical purge folds EVERY id ever tombstoned (the full
-          // list, not the live serve mask — an expired id should
-          // never have live rows, but if one does the purge is the
-          // self-heal, not a resurrection). Flat stores fold the SAME
-          // full set (not bandsTable's live mask): the rewrite and the
-          // keyed path can never drift on which rows survive.
-          val raw = spark.read.parquet(s"$path/bands")
-            .withColumn("band", col("band").cast("int"))
-            .join(broadcast(purgeSet), Seq("doc_id"), "left_anti")
-          if (keyed)
-            raw.write.mode(SaveMode.Overwrite)
-              .partitionBy("batch", "band")
-              .parquet(s"$path/bands_compacted")
-          else
-            raw.write.mode(SaveMode.Overwrite)
-              .partitionBy("band")
-              .parquet(s"$path/bands_compacted")
-          // swap via rename so EVERY intermediate state still has a
-          // complete index on disk: move the live dir aside, promote the
-          // compacted one, and only then drop the old bytes + tombstones.
-          // Each rename is CHECKED — a failed rename aborts before any
-          // destructive step (falling through to the tombstone delete
-          // would leave the stale layer serving unmasked).
-          SwapRecovery.renameOrThrow(fs,
-            new org.apache.hadoop.fs.Path(s"$path/bands"),
-            new org.apache.hadoop.fs.Path(s"$path/bands_old"))
-          SwapRecovery.renameOrThrow(fs,
-            new org.apache.hadoop.fs.Path(s"$path/bands_compacted"),
-            new org.apache.hadoop.fs.Path(s"$path/bands"))
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/bands_old"), true)
-        }
-        // keyed stores RETAIN the tombstone mask (redelivery guard,
-        // see above — [[expireTombstones]] bounds it); flat stores
-        // clear it for zero-masking serve (also on the no-op path:
-        // with no masked rows the clear is the only outstanding work)
-        if (!keyed) Tombstones.clear(spark, path)
-      }
-    }
+    index.compact(spark, path)
 
-  /** Release the redelivery guard for takedowns whose physical purge
-    * has landed: every tombstoned id with NO row left in the live
-    * `bands/` layer moves to the expired ledger, and the serve mask
-    * ([[bandsTable]]'s broadcast anti-join) shrinks to the OUTSTANDING
-    * takedowns only. Without this, a keyed store's mask grows
-    * monotonically across its whole life (the r14 review finding).
-    *
-    * CALLER CONTRACT: only call once no pre-compact batch can be
-    * redelivered anymore (the maintaining stream's checkpoint has
-    * committed past every batch that existed at the last [[compact]]).
-    * A redelivered batch re-lands retracted rows, and an expired id
-    * would no longer mask them — the same horizon a streaming sink
-    * needs before pruning its own dedup state. Crash-safe by
-    * construction: all ledgers are append-only, so any crash state
-    * under-expires (masks too much), never serves a retracted row.
-    *
-    * Only ids a compact ACTUALLY purged AT THE TOMBSTONE'S EPOCH
-    * ([[Tombstones.expirable]]) are eligible: a PRE-EMPTIVE takedown
-    * (delete issued before the id was ever appended) has no rows for
-    * any compact to fold, so the rows-absent test alone would expire
-    * it and a later first-time append would serve unmasked — it stays
-    * in the serve mask until its content arrives and a compact purges
-    * it, in the first epoch and every re-delete epoch after.
+  /** Release the redelivery guard for purged takedowns
+    * ([[TombstonedLayers.expire]]; same caller contract).
     */
   def expireTombstones(spark: SparkSession, path: String): Unit =
-    IndexLease.withLease(spark, path, "minhash-expire") {
-      if (hasTombstones(spark, path)) {
-        SwapRecovery.recover(spark, path, "bands")
-        val gone = Tombstones.expirable(spark, path, "doc_id")
-          .join(spark.read.parquet(s"$path/bands").select(col("doc_id")),
-            Seq("doc_id"), "left_anti")
-        Tombstones.appendExpired(gone, path, "doc_id")
-      }
-    }
+    index.expire(spark, path)
 
   /** Memoized build-then-delete lifecycle for the retraction gate: the
     * first caller per JVM per path indexes the full corpus and then
     * retracts `removed` via [[delete]]; later callers serve from the
-    * masked index. Same lifecycle separation as [[ensureRolled]].
+    * masked index.
     */
   def ensureDeleted(corpus: DataFrame, removed: DataFrame,
-      path: String): Unit = {
-    require(!built.containsKey(s"plain:$path") &&
-      !built.containsKey(s"rolled:$path"),
-      s"$path was built by another lifecycle; use a distinct path")
-    built.computeIfAbsent(s"deleted:$path", _ => {
-      StorePaths.wipe(corpus.sparkSession, path) // first caller OWNS the path
-      build(corpus, path)
-      delete(removed, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+      path: String): Unit =
+    index.ensureDeleted(removed, path)(build(corpus, path))
 
   /** Fold a vetted drop INTO the stored index: append its band rows to
     * the same partitioned layout, so tomorrow's drop near-dups against
@@ -329,14 +145,8 @@ object MinhashIndexStore {
     * appends against each other serialize on the same lease.
     */
   def append(delta: DataFrame, path: String): Unit =
-    IndexLease.withLease(delta.sparkSession, path, "minhash-append") {
-      StoreLayout.assertWritable(delta.sparkSession, path, "bands",
-        keyed = false)
-      bandRows(delta)
-        .write.mode(SaveMode.Append)
-        .partitionBy("band")
-        .parquet(s"$path/bands")
-    }
+    index.append(delta.sparkSession, path, "append")(
+      Seq("bands" -> bandRows(delta)))
 
   /** [[append]] for STREAMED maintenance: the drop's band rows land
     * under `bands/batch=<id>/band=<n>` with Overwrite, so a
@@ -362,14 +172,8 @@ object MinhashIndexStore {
     * [[bandRows]] layout.
     */
   def appendBatchRows(rows: DataFrame, path: String, batchId: Long): Unit =
-    IndexLease.withLease(rows.sparkSession, path, "minhash-append-batch") {
-      StoreLayout.assertWritable(rows.sparkSession, path, "bands",
-        keyed = true)
-      rows
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("band")
-        .parquet(StoreLayout.batchDir(path, "bands", batchId))
-    }
+    index.append(rows.sparkSession, path, "append-batch", Some(batchId))(
+      Seq("bands" -> rows))
 
   /** [[build]] in the batch-keyed layout (base layer at `batch=-1`) —
     * the starting point for a store that will be maintained by a
@@ -385,13 +189,9 @@ object MinhashIndexStore {
     */
   def ensureRolled(corpus: DataFrame, firstDrop: DataFrame,
       path: String): Unit = {
-    require(!built.containsKey(s"plain:$path"),
-      s"$path was built by ensure; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"rolled:$path", _ => {
+    index.once("rolled", path, "plain") {
       build(corpus, path)
       append(firstDrop, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
+    }
   }
 }

@@ -3,9 +3,10 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Crash recovery for the tombstone-compaction rename swap shared by
-  * the three index stores ([[MinhashIndexStore]], [[EmbLshIndexStore]],
-  * [[IvfIndexStore]]).
+/** Crash recovery for the compaction rename swap
+  * ([[TombstonedLayers.swap]]) shared by the retractable index stores
+  * (through [[TombstonedLayers]]) and the single-layer stores (through
+  * [[compactSwap]]).
   *
   * The swap sequence is: write `<layer>_compacted` → rename `<layer>`
   * to `<layer>_old` → rename `<layer>_compacted` to `<layer>` → delete
@@ -23,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   *     mask is anti-join-idempotent in the meantime).
   *
   * Call [[recover]] before serving from a store path whose process may
-  * have died mid-compact; each store's compact() also calls it at
+  * have died mid-compact; every compact also calls it at
   * ENTRY, so compaction never starts from a stranded layout (a rename
   * onto an existing destination would fail FS-dependently). It is a
   * no-op on a healthy layout. Mutual exclusion between live writers is
@@ -109,12 +110,11 @@ object SwapRecovery {
 
   /** The checked compact swap every SINGLE-LAYER store shares
     * ([[GramStore]], [[MixtureStore]], [[SketchStore]], and each of
-    * [[NbModelStore]]'s two layers): repair any stranded layout, write
-    * the caller's folded frame to `<layer>_compacted`, rename the live
-    * layer aside, promote staging, drop the old bytes. `folded` is
-    * by-name so it reads the PRE-swap layer; every rename is CHECKED
-    * (a failure aborts before anything destructive). Callers hold the
-    * store's [[IndexLease]] — this helper does not take it.
+    * [[NbModelStore]]'s two layers): repair any stranded layout, then
+    * stage the caller's folded frame through [[TombstonedLayers.swap]]
+    * (the one checked rename sequence). `folded` is by-name so it reads
+    * the PRE-swap layer. Callers hold the store's [[IndexLease]] — this
+    * helper does not take it.
     */
   private[sources] def compactSwap(spark: SparkSession, path: String,
       layer: String)(folded: => org.apache.spark.sql.DataFrame): Unit = {
@@ -129,14 +129,7 @@ object SwapRecovery {
         folded.withColumn("batch", org.apache.spark.sql.functions.lit(-1L))
           .write.partitionBy("batch")
       else folded.write
-    staged.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/${layer}_compacted")
-    val fs = fsOf(spark, path)
-    renameOrThrow(fs, new Path(s"$path/$layer"),
-      new Path(s"$path/${layer}_old"))
-    renameOrThrow(fs, new Path(s"$path/${layer}_compacted"),
-      new Path(s"$path/$layer"))
-    fs.delete(new Path(s"$path/${layer}_old"), true)
-    ()
+    TombstonedLayers.swap(spark, path, layer)(staged.mode(
+      org.apache.spark.sql.SaveMode.Overwrite).parquet)
   }
 }

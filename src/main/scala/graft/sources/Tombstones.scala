@@ -4,12 +4,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The deletion-vector tombstone layout shared by the retractable
-  * index stores ([[MinhashIndexStore]], [[FrameSigIndexStore]],
-  * [[EmbLshIndexStore]], [[IvfIndexStore]]) — the read/derive side in
-  * ONE place so the serve mask and the compaction paths can never
-  * drift apart on layer semantics (the r14 review finding: the
-  * framesig keyed compact re-implemented the tombstone read inline).
+/** The deletion-vector tombstone layout of the retractable index
+  * stores — the ledger side of [[TombstonedLayers]], the one kernel
+  * that masks, deletes, compacts and expires for all of them, so the
+  * serve mask and the compaction paths can never drift apart on layer
+  * semantics.
   *
   * Every ledger row is EPOCHED: [[append]] stamps each delete call
   * with a store-monotonic `seq` (read-max-then-append under the
@@ -34,7 +33,7 @@ import org.apache.spark.sql.functions._
   *  - `tombstones_expired/` — append-only EXPIRED (id, seq) ledger
   *    ([[appendExpired]]): ids whose retracted rows are physically
   *    absent from every live layer AND whose redelivery protection the
-  *    caller has released (see the stores' `expireTombstones`), at the
+  *    caller has released (see [[TombstonedLayers.expire]]), at the
   *    tombstone seq the release covered. The serve mask is
   *    [[liveMask]] = ids whose max tombstone seq EXCEEDS their max
   *    expired seq, so the broadcast anti-join every serve pays stays
@@ -55,15 +54,12 @@ import org.apache.spark.sql.functions._
   */
 private[sources] object Tombstones {
 
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(s"$path/tombstones")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(spark: SparkSession, path: String): Boolean =
+    ledgerExists(spark, path, "tombstones")
 
-  private def existsExpired(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(s"$path/tombstones_expired")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def ledgerExists(spark: SparkSession, path: String,
+      ledger: String): Boolean =
+    SwapRecovery.fsOf(spark, path).exists(new Path(s"$path/$ledger"))
 
   /** Append a delete call's ids at the next epoch. MUST run under the
     * store's single-writer lease (the read-max-then-append is only
@@ -103,7 +99,7 @@ private[sources] object Tombstones {
   def liveMaskWithSeq(spark: SparkSession, path: String,
       idCol: String): DataFrame = {
     val t = allWithSeq(spark, path, idCol)
-    if (existsExpired(spark, path)) {
+    if (ledgerExists(spark, path, "tombstones_expired")) {
       val e = spark.read.parquet(s"$path/tombstones_expired")
         .groupBy(col(idCol)).agg(max(col("seq")).as("eseq"))
       t.join(e, Seq(idCol), "left_outer")
@@ -125,11 +121,6 @@ private[sources] object Tombstones {
     ids.select(col(idCol), col("seq"))
       .write.mode(SaveMode.Append).parquet(s"$path/tombstones_expired")
 
-  private def existsPurged(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(s"$path/tombstones_purged")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Takedowns a compact has ACTUALLY physically purged, at their
     * purge-time epoch (max seq per id). Expiry is gated on `pseq >=
     * tseq`: a PRE-EMPTIVE takedown — delete issued before the content
@@ -143,7 +134,7 @@ private[sources] object Tombstones {
     * second-epoch pre-emptive takedown.
     */
   def purged(spark: SparkSession, path: String, idCol: String): DataFrame =
-    if (existsPurged(spark, path))
+    if (ledgerExists(spark, path, "tombstones_purged"))
       spark.read.parquet(s"$path/tombstones_purged")
         .groupBy(col(idCol)).agg(max(col("seq")).as("pseq"))
     else

@@ -72,4 +72,15 @@ object GraftInternal {
         df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]],
         isStreaming = false))
   }
+
+  /** Release the persisted blocks behind a [[pinRecomputable]] frame —
+    * the owner's half of the pin, run in a `finally` once the frame's
+    * last consumer is done.
+    */
+  def unpin(pinned: DataFrame): Unit =
+    pinned.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
 }

@@ -199,6 +199,94 @@ class IndexRetractionSpec extends SparkSpecBase {
       "retained mask must keep masking new batches")
   }
 
+  test("keyed IVF store: compact preserves batch keying AND redelivery idempotency") {
+    // the streamed maintainer's layout (buildKeyed + appendCellsBatch)
+    // has no codes/ layer and a batch-keyed cells/ layer: compact must
+    // purge it in place, keep every batch value, and keep the mask
+    val p = freshPath("ivf_keyed")
+    val emb = Tables.embeddings(spark, sfDir)
+    IvfIndexStore.buildKeyed(emb.filter(col("vec_id") % 10 =!= 0), p)
+    val batch0 = emb.filter(col("vec_id") % 20 === 0)
+    IvfIndexStore.appendCellsBatch(spark, batch0, p, 0L)
+    IvfIndexStore.delete(
+      emb.filter(col("vec_id") % 30 === 0).select(col("vec_id")), p)
+    assert(spark.read.parquet(s"$p/cells")
+      .filter(col("vec_id") % 30 === 0).count() > 0L,
+      "the takedown must hit stored rows for this gate")
+    IvfIndexStore.compact(spark, p)
+    assert(StoreLayout.isKeyed(spark, p, "cells"),
+      "compact flattened a batch-keyed cells layer")
+    assert(spark.read.parquet(s"$p/cells").select("batch").distinct()
+      .as[Long].collect().toSet == Set(-1L, 0L),
+      "compact must keep every batch value")
+    assert(spark.read.parquet(s"$p/cells")
+      .filter(col("vec_id") % 30 === 0).count() == 0L,
+      "compact must purge the retracted rows physically")
+    def rows(path: String) = IvfIndexStore.cellsTable(spark, path)
+      .select("vec_id", "cell").as[(Long, Long)].collect().toSet
+    // crash-redelivery of the PRE-compact batch is a no-op: it re-lands
+    // its own layer, the retained mask keeps the takedown masked
+    val afterCompact = rows(p)
+    IvfIndexStore.appendCellsBatch(spark, batch0, p, 0L)
+    assert(rows(p) == afterCompact, "redelivered batch changed the serve set")
+    IvfIndexStore.appendCellsBatch(spark,
+      emb.filter(col("vec_id") % 20 === 10), p, 1L)
+    assert(!rows(p).exists(_._1 % 30 == 0),
+      "retained mask must keep masking new batches")
+  }
+
+  test("IVF flat append onto a batch-keyed store is refused, nothing written") {
+    val emb = Tables.embeddings(spark, sfDir)
+    val p = freshPath("ivf_mix")
+    IvfIndexStore.buildKeyed(emb.filter(col("vec_id") % 10 =!= 0), p)
+    val before = IvfIndexStore.cellsTable(spark, p).count()
+    intercept[IllegalStateException] {
+      IvfIndexStore.append(spark, emb.filter(col("vec_id") % 10 === 0), p)
+    }
+    assert(new java.io.File(s"$p/cells").listFiles()
+      .forall(f => f.getName.startsWith("batch=") || f.getName.startsWith("_") ||
+        f.getName.startsWith(".")), "a refused append left flat files")
+    assert(IvfIndexStore.cellsTable(spark, p).count() == before)
+  }
+
+  test("compact releases its probe pin, for every store") {
+    // every compact pins one tombstone-bounded probe frame; it must be
+    // released before compact returns, on the rewrite and the no-op path
+    val docs = Tables.documents(spark, sfDir)
+    val emb = Tables.embeddings(spark, sfDir)
+    val media = graft.operators.Multimodal.asMedia(docs)
+    val bits = Dedup.adaptiveBits(emb.filter(col("embedding").isNotNull).count())
+    val doomedDocs = docs.filter(col("doc_id") % 10 === 5).select(col("doc_id"))
+    val doomedVecs = emb.filter(col("vec_id") % 10 === 5).select(col("vec_id"))
+    val mh = freshPath("pin_mh")
+    MinhashIndexStore.buildKeyed(docs, mh)
+    MinhashIndexStore.delete(doomedDocs, mh)
+    val fsig = freshPath("pin_fsig")
+    FrameSigIndexStore.buildKeyed(media, fsig)
+    FrameSigIndexStore.delete(doomedDocs, fsig)
+    val ivf = freshPath("pin_ivf")
+    IvfIndexStore.build(emb, ivf)
+    IvfIndexStore.delete(doomedVecs, ivf)
+    val elsh = freshPath("pin_elsh")
+    EmbLshIndexStore.build(emb, elsh, bits)
+    EmbLshIndexStore.delete(doomedVecs, elsh)
+    def persisted: Int = spark.sparkContext.getPersistentRDDs.size
+    Seq[(String, () => Unit)](
+      "minhash" -> (() => MinhashIndexStore.compact(spark, mh)),
+      "framesig" -> (() => FrameSigIndexStore.compact(spark, fsig)),
+      "ivf" -> (() => IvfIndexStore.compact(spark, ivf)),
+      "elsh" -> (() => EmbLshIndexStore.compact(spark, elsh))
+    ).foreach { case (store, compact) =>
+      Seq("rewrite", "repeat").foreach { pass =>
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = true))
+        val before = persisted
+        compact()
+        assert(persisted == before, s"$store $pass compact leaked a persisted RDD")
+      }
+    }
+  }
+
   private def layerFiles(dir: String): Set[String] = {
     import scala.jdk.CollectionConverters._
     val base = java.nio.file.Paths.get(dir)
