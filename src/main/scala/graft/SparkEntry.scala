@@ -2188,10 +2188,10 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- map
 
-  /** Shared SPARK_GRAFT_QUERIES parsing for Verify and Bench: trimmed,
-    * comma-separated names; unknown names warn on stderr instead of
-    * silently selecting nothing (a typo would otherwise look like a
-    * successful empty run).
+  /** Shared SPARK_GRAFT_QUERIES parsing for Verify, Bench, Explain and
+    * ScaleTax: trimmed, comma-separated names; an unknown name throws
+    * an IllegalArgumentException listing every unknown name (a typo
+    * would otherwise look like a successful, smaller run).
     */
   def selectQueries(filter: Option[String]): Map[String, (SparkSession, String) => DataFrame] =
     filter match {
@@ -2199,9 +2199,10 @@ object SparkEntry {
       case Some(raw) =>
         val names = raw.split(",").map(_.trim).filter(_.nonEmpty).toSet
         val unknown = names.diff(queries.keySet)
+        // a typo must fail the run, not time or verify a smaller set
         if (unknown.nonEmpty)
-          System.err.println(
-            s"[graft] SPARK_GRAFT_QUERIES names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
+          throw new IllegalArgumentException(
+            s"SPARK_GRAFT_QUERIES names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
         queries.filter { case (n, _) => names(n) }
     }
 

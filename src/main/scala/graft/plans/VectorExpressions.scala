@@ -173,18 +173,13 @@ case class DotProductDouble(left: Expression, right: Expression)
   *
   * Preferred path: `spark.sql.extensions=graft.plans.GraftExtensions`.
   * For caller-provided sessions, [[GraftFunctions.ensureRegistered]]
-  * registers idempotently at first use.
+  * registers idempotently at first use. Both paths install the same
+  * [[GraftFunctions.descriptors]] and [[GraftFunctions.rules]].
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftFunctions.dotDescriptor)
-    e.injectFunction(GraftFunctions.dotDoubleDescriptor)
-    e.injectFunction(SimHashFunctions.descriptor)
-    e.injectFunction(ShingleHashFunctions.descriptor)
-    e.injectFunction(MinhashSigFunctions.descriptor)
-    e.injectFunction(SortedIntersectFunctions.descriptor)
-    e.injectOptimizerRule(_ => BoundedLevenshteinRewrite)
-    e.injectOptimizerRule(_ => HofDotProductRewrite)
+    GraftFunctions.descriptors.foreach(e.injectFunction)
+    GraftFunctions.rules.foreach(r => e.injectOptimizerRule(_ => r))
   }
 }
 
@@ -199,42 +194,26 @@ object GraftFunctions {
     new ExpressionInfo(classOf[DotProductDouble].getName, "graft_dot_dd"),
     (children: Seq[Expression]) => DotProductDouble(children(0), children(1)))
 
+  /** Every native function graft registers, on either path. */
+  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(dotDescriptor, dotDoubleDescriptor,
+      SimHashFunctions.descriptor, ShingleHashFunctions.descriptor,
+      MinhashSigFunctions.descriptor, CharMinhashSigFunctions.descriptor,
+      SortedIntersectFunctions.descriptor,
+      SortedCommonCountFunctions.descriptor)
+
+  /** Every optimizer rule graft installs, on either path. */
+  val rules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
+    Seq(BoundedLevenshteinRewrite, HofDotProductRewrite)
+
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("graft_dot"))) {
-      reg.registerFunction(dotDescriptor._1, dotDescriptor._2, dotDescriptor._3)
-    }
-    if (!reg.functionExists(FunctionIdentifier("graft_dot_dd"))) {
-      reg.registerFunction(dotDoubleDescriptor._1, dotDoubleDescriptor._2,
-        dotDoubleDescriptor._3)
-    }
-    if (!reg.functionExists(FunctionIdentifier("graft_simhash64"))) {
-      val d = SimHashFunctions.descriptor
-      reg.registerFunction(d._1, d._2, d._3)
-    }
-    if (!reg.functionExists(FunctionIdentifier("graft_shingle_hash60"))) {
-      val d = ShingleHashFunctions.descriptor
-      reg.registerFunction(d._1, d._2, d._3)
-    }
-    if (!reg.functionExists(FunctionIdentifier("graft_minhash_sig"))) {
-      val d = MinhashSigFunctions.descriptor
-      reg.registerFunction(d._1, d._2, d._3)
-    }
-    if (!reg.functionExists(FunctionIdentifier("graft_char_minhash_sig"))) {
-      val d = CharMinhashSigFunctions.descriptor
-      reg.registerFunction(d._1, d._2, d._3)
-    }
-    if (!reg.functionExists(FunctionIdentifier("graft_sorted_intersect"))) {
-      val d = SortedIntersectFunctions.descriptor
-      reg.registerFunction(d._1, d._2, d._3)
-    }
-    if (!reg.functionExists(FunctionIdentifier("graft_sorted_common_count"))) {
-      val d = SortedCommonCountFunctions.descriptor
-      reg.registerFunction(d._1, d._2, d._3)
+    descriptors.foreach { case (id, info, builder) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
     }
     // caller-provided sessions can't take injectOptimizerRule after the
     // fact; experimental.extraOptimizations is the supported late hook
-    val rules = Seq(BoundedLevenshteinRewrite, HofDotProductRewrite)
     val extra = spark.experimental.extraOptimizations
     val missing = rules.filterNot(extra.contains)
     if (missing.nonEmpty)

@@ -35,23 +35,6 @@ object DimFeed {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keys)
 
-  /** SCD2 history maintenance over a dim-delta stream. `loadDateFor`
-    * maps a batch id to that load's effective date (must be stable
-    * across a replay of the same batch — derive it from batch
-    * contents or a batch-id keyed calendar, never wall clock).
-    *
-    * Batch composition is trigger-timing dependent, so one micro-batch
-    * can legally carry SEVERAL changes to the same key (a backlog
-    * drained after downtime); the sink collapses each key to its last
-    * change by `latestBy` (remaining columns break ties, so a replayed
-    * batch collapses identically) BEFORE merging — without this, the
-    * merge's duplicate-key guard would kill the query and the
-    * checkpoint would replay the same poisonous batch forever.
-    * `latestBy` is consumed by the collapse and does not enter the
-    * history. Deltas that outgrow a broadcast (backfills) set
-    * `broadcastDelta = false`. Start with
-    * `.option("checkpointLocation", ...)`.
-    */
   /** File-replay of snapshot loads through [[scd2Sink]]: stages each
     * load as ONE parquet file (mtime-ordered), streams them with
     * `maxFilesPerTrigger = 1` so every load arrives as its own
@@ -70,44 +53,55 @@ object DimFeed {
     val root = new org.apache.hadoop.fs.Path(workDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root)) fs.delete(root, true)
-    val stage = s"$workDir/stage"
-    fs.mkdirs(new org.apache.hadoop.fs.Path(stage))
+    val stage = java.nio.file.Paths.get(s"$workDir/stage")
     loads.zipWithIndex.foreach { case ((df, _), i) =>
-      val tmp = s"$workDir/tmp_$i"
       // __load_seq doubles as the sink's latestBy collapse column; a
       // uniform value per staged file, dropped before the merge
-      df.withColumn("__load_seq", lit(i.toLong))
-        .coalesce(1).write.parquet(tmp)
-      val single = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part file staged in $tmp"))
-      val dst = new java.io.File(s"$stage/load_$i.parquet")
-      java.nio.file.Files.move(single.toPath, dst.toPath)
-      // the file source orders batches by modification time — pin
-      // strictly increasing mtimes so load i is micro-batch i
-      dst.setLastModified(1700000000000L + i * 60000L)
-      ()
+      ReplayDriver.stageFile(df.withColumn("__load_seq", lit(i.toLong)),
+        stage, "load_", i)
     }
     val dates = loads.map(_._2)
-    val schema = spark.read.parquet(s"$stage/load_0.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
     val hist = s"$workDir/history"
-    val q = scd2Sink(src, hist, keys, tracked,
-        (id: Long) => dates(id.toInt), latestBy = "__load_seq")
-      .option("checkpointLocation", s"$workDir/chk")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    ReplayDriver.foreachDrop(ReplayDriver.drops(spark, stage.toString),
+        s"$workDir/chk")(
+      scd2Batch(hist, keys, tracked, id => dates(id.toInt),
+        latestBy = "__load_seq", broadcastDelta = true))
     spark.read.parquet(hist)
   }
 
+  /** SCD2 history maintenance over a dim-delta stream. `loadDateFor`
+    * maps a batch id to that load's effective date (must be stable
+    * across a replay of the same batch — derive it from batch
+    * contents or a batch-id keyed calendar, never wall clock).
+    *
+    * Batch composition is trigger-timing dependent, so one micro-batch
+    * can legally carry SEVERAL changes to the same key (a backlog
+    * drained after downtime); the sink collapses each key to its last
+    * change by `latestBy` (remaining columns break ties, so a replayed
+    * batch collapses identically) BEFORE merging — without this, the
+    * merge's duplicate-key guard would kill the query and the
+    * checkpoint would replay the same poisonous batch forever.
+    * `latestBy` is consumed by the collapse and does not enter the
+    * history. Deltas that outgrow a broadcast (backfills) set
+    * `broadcastDelta = false`. Start with
+    * `.option("checkpointLocation", ...)`.
+    */
   def scd2Sink(deltas: DataFrame, path: String, keys: Seq[String],
       tracked: Seq[String], loadDateFor: Long => String,
       latestBy: String = "ts",
-      broadcastDelta: Boolean = true): DataStreamWriter[Row] =
+      broadcastDelta: Boolean = true): DataStreamWriter[Row] = {
+    val body = scd2Batch(path, keys, tracked, loadDateFor, latestBy,
+      broadcastDelta)
     deltas.writeStream.foreachBatch { (batch: Dataset[Row], id: Long) =>
+      body(batch.toDF(), id)
+    }
+  }
+
+  /** One micro-batch of [[scd2Sink]]: collapse, then merge. */
+  private def scd2Batch(path: String, keys: Seq[String],
+      tracked: Seq[String], loadDateFor: Long => String, latestBy: String,
+      broadcastDelta: Boolean): (DataFrame, Long) => Unit =
+    (batch, id) =>
       if (!batch.isEmpty) {
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.functions.{col, row_number}
@@ -125,5 +119,4 @@ object DimFeed {
           pinResult = false)
         ()
       }
-    }
 }

@@ -76,9 +76,10 @@ object IncrFeed {
       applyBatch(batch.toDF(), id, path, keys, spec)
     }
 
-  /** File-replay of drops through [[incrAggSink]]: stages each drop as
-    * ONE parquet file (mtime-ordered), streams them one micro-batch
-    * each, returns the maintained table. `workDir` is recreated from
+  /** File-replay of drops through the [[incrAggSink]] fold
+    * ([[applyBatch]]): stages each drop as ONE parquet file
+    * (mtime-ordered), streams them one micro-batch each, returns the
+    * maintained table. `workDir` is recreated from
     * scratch — the replay always starts from an empty table and a
     * fresh checkpoint. The gate compares the result to the ONE-SHOT
     * aggregate over all drops (the same oracle as the batch fold).
@@ -89,35 +90,13 @@ object IncrFeed {
     require(drops.nonEmpty, "replayIncrAgg needs at least one drop")
     val (root, fs) = hfs(spark, workDir)
     if (fs.exists(root)) fs.delete(root, true)
-    val stage = s"$workDir/stage"
-    fs.mkdirs(new org.apache.hadoop.fs.Path(stage))
+    val stage = java.nio.file.Paths.get(s"$workDir/stage")
     drops.zipWithIndex.foreach { case (df, i) =>
-      val tmp = s"$workDir/tmp_$i"
-      df.coalesce(1).write.parquet(tmp)
-      val single = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part file staged in $tmp"))
-      val dst = new java.io.File(s"$stage/load_$i.parquet")
-      java.nio.file.Files.move(single.toPath, dst.toPath)
-      dst.setLastModified(1700000000000L + i * 60000L)
-      ()
+      ReplayDriver.stageFile(df, stage, "load_", i)
     }
-    val schema = spark.read.parquet(s"$stage/load_0.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(partsKey)
-    spark.conf.set(partsKey, "8")
-    try {
-      val q = incrAggSink(src, s"$workDir/table", keys, spec)
-        .option("checkpointLocation", s"$workDir/chk")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(partsKey, v)
-      case None => spark.conf.unset(partsKey)
+    ReplayDriver.foreachDrop(ReplayDriver.drops(spark, stage.toString),
+        s"$workDir/chk", persist = false) { (b, id) =>
+      applyBatch(b, id, s"$workDir/table", keys, spec)
     }
     spark.read.parquet(s"$workDir/table/data")
   }

@@ -67,10 +67,34 @@ object GraftInternal {
     val rdd = df.queryExecution.toRdd.map(_.copy())
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rdd.count()
-    ofRows(df.sparkSession,
+    val pinned = ofRows(df.sparkSession,
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd,
         df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]],
         isStreaming = false))
+    val owner = pinOwner.get
+    if (owner != null) owner += pinned
+    pinned
+  }
+
+  private val pinOwner =
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]
+
+  /** Run `body` as the owner of every [[pinRecomputable]] pin it makes
+    * on this thread, and [[unpin]] them all when it returns or throws.
+    * For a unit of work whose pins never outlive it — a streaming
+    * micro-batch, whose driver would otherwise hold every batch's pins
+    * until the session ends. Pins made on other threads (a concurrent
+    * pipeline stage) are not this owner's.
+    */
+  def owningPins[T](body: => T): T = {
+    val outer = pinOwner.get
+    val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    pinOwner.set(mine)
+    try body
+    finally {
+      pinOwner.set(outer)
+      mine.foreach(unpin)
+    }
   }
 
   /** Release the persisted blocks behind a [[pinRecomputable]] frame —

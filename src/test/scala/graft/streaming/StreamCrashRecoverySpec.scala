@@ -38,6 +38,8 @@ class StreamCrashRecoverySpec extends SparkSpecBase {
 
   private def crashKeepBestAt(boundary: Int): Unit = {
     val (staged, work, chk) = StreamReplay.kbPrepareRun(spark, sfDir, 2)
+    val partsBefore = spark.conf.getOption("spark.sql.shuffle.partitions")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
     StreamReplay.kbWriteFault = (id, k) =>
       if (id == 1L && k == boundary)
         throw new RuntimeException(s"injected-crash-at-write-$boundary")
@@ -50,6 +52,16 @@ class StreamCrashRecoverySpec extends SparkSpecBase {
           err.getCause.getMessage.contains("injected-crash"),
         s"stream must die on the injected fault, got: ${err.getMessage}")
     } finally StreamReplay.kbWriteFault = (_, _) => ()
+    // a failed batch still cleans up: the run's conf scope is restored,
+    // and the batch frame and the pins its body made are released
+    // (lineage-cutting localCheckpoints of the iterative solves are
+    // not pins and stay, like in a successful batch)
+    val leaked = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, rdd) => !persistedBefore(id) && !rdd.isCheckpointed }
+    assert(spark.conf.getOption("spark.sql.shuffle.partitions") == partsBefore &&
+      leaked.isEmpty,
+      s"after the crash: partitions ${spark.conf.getOption("spark.sql.shuffle.partitions")}" +
+        s" (was $partsBefore), ${leaked.size} persisted RDDs left: ${leaked.values.mkString(", ")}")
     // batch 1 is durable-but-uncommitted at the boundary: restart from
     // the SAME checkpoint redelivers it against the same work dir
     StreamReplay.kbRunStream(spark, sfDir, staged, work, chk)
