@@ -1,8 +1,8 @@
 package graft
 
 import graft.operators.{CorpusStats, Dedup}
-import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.{Sinks, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The CHAINED corpus-curation run — the LLM-data twin of
@@ -46,20 +46,8 @@ import org.apache.spark.sql.functions._
   */
 object CorpusPipeline {
 
-  import Pipeline.StageResult
-
-  private def timed(name: String)(f: => Long): StageResult = {
-    val t0 = System.nanoTime()
-    val rows = f
-    StageResult(name, rows, (System.nanoTime() - t0) / 1e9)
-  }
-
-  private def overwrite(df: DataFrame, path: String): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, count(lit(1)).as("rows"))
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    obs.get("rows").asInstanceOf[Long]
-  }
+  import Pipeline.{StageResult, timed}
+  import Sinks.overwrite
 
   /** Stage names in dependency order — the public contract between
     * [[runCuration]], the per-stage CLI ([[main]] with a stage
@@ -125,34 +113,16 @@ object CorpusPipeline {
     * contract (see `dags/graft_corpus_dag.py`).
     */
   def runStage(spark: SparkSession, srcDir: String, outDir: String,
-      stage: String): StageResult = {
-    val all = stages(spark, srcDir, outDir).toMap
-    require(all.contains(stage),
-      s"unknown stage '$stage' (expected one of ${StageNames.mkString(", ")})")
-    timed(stage)(all(stage)())
-  }
+      stage: String): StageResult =
+    Pipeline.runNamed(stages(spark, srcDir, outDir), stage)
 
   /** CLI: runCuration(srcDir, outDir), or one stage with a stage
     * argument (the Airflow task unit — dags/graft_corpus_dag.py
     * passes one per task).
     */
-  def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
-      System.err.println(
-        "usage: graft.CorpusPipeline <srcDir> <outDir> [stage]")
-      sys.exit(2)
-    }
-    val Array(srcDir, outDir) = args.take(2)
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
-    val results = args.lift(2) match {
-      case Some(stage) => Seq(runStage(spark, srcDir, outDir, stage))
-      case None => runCuration(spark, srcDir, outDir)
-    }
-    results.foreach(r =>
-      println(f"[corpus] ${r.name}%-18s ${r.rows}%9d rows ${r.seconds}%7.2f s"))
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Pipeline.cli(args, "graft.CorpusPipeline <srcDir> <outDir> [stage]",
+      "corpus")(runCuration, runStage)
 
   /** Content summary of a curation run — one row per stage checkpoint:
     * survivor count, doc_id checksum, and a token total where the

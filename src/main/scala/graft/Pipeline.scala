@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{StarSchema, Views}
 import graft.sources.{Sinks, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** The full reference ETL as one in-library batch pipeline.
   *
@@ -20,24 +20,22 @@ object Pipeline {
 
   case class StageResult(name: String, rows: Long, seconds: Double)
 
-  private def timed(name: String)(f: => Long): StageResult = {
+  private[graft] def timed(name: String)(f: => Long): StageResult = {
     val t0 = System.nanoTime()
     val rows = f
     StageResult(name, rows, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Overwrite `path` and return the row count FROM THE WRITE PASS
-    * itself (`Dataset.observe`): the count accumulates while the rows
-    * stream through the writer, so the table is never read back and
-    * the plan never runs twice. At 100 TB a read-back count doubles
-    * the stage's I/O; an up-front `df.count()` doubles its compute.
+  /** Run the stage named `stage` out of `all` (name → body, in
+    * dependency order), timed; an unknown name is rejected with the
+    * list of known ones.
     */
-  private def overwrite(df: DataFrame, path: String): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    obs.get("rows").asInstanceOf[Long]
+  private[graft] def runNamed(all: Seq[(String, () => Long)],
+      stage: String): StageResult = {
+    val byName = all.toMap
+    require(byName.contains(stage),
+      s"unknown stage '$stage' (expected one of ${all.map(_._1).mkString(", ")})")
+    timed(stage)(byName(stage)())
   }
 
   /** Stage names in dependency order — the public contract between
@@ -127,11 +125,8 @@ object Pipeline {
     // per-stage run must not leak pinned blocks past its stage)
     val (prepped, jf) = prepFrames(spark,
       Tables.events(spark, srcDir), Tables.part(spark, srcDir))
-    val all = stagesPrepped(spark, prepped, jf,
-      Tables.part(spark, srcDir), warehouseDir).toMap
-    require(all.contains(stage),
-      s"unknown stage '$stage' (expected one of ${StageNames.mkString(", ")})")
-    timed(stage)(all(stage)())
+    runNamed(stagesPrepped(spark, prepped, jf,
+      Tables.part(spark, srcDir), warehouseDir), stage)
   }
 
   /** The two frames every stage derives from: the one-parse prepped
@@ -155,25 +150,21 @@ object Pipeline {
     Seq(
       // raw layer: full overwrite, latest drop wins (reference:
       // etl_s3_snowflake_raw_event_ingest.py "overwrite mode")
-      "event_raw" -> (() => overwrite(StarSchema.rawIngestPrepped(prepped), s"$w/event_raw")),
+      "event_raw" -> (() => Sinks.overwrite(StarSchema.rawIngestPrepped(prepped), s"$w/event_raw")),
       // dims keyed on their natural key, insert-if-absent with
       // surrogate ids that stay stable across incremental drops (new
       // keys continue after the stored max — never renumbered)
-      // d_event is one row per EVENT — fact-sized, so don't pin the
-      // returned frame in the block manager (pinResult = false); the
-      // count below is its only consumer before the next load
       "d_event" -> (() => Sinks.mergeDimSurrogate(spark, s"$w/d_event",
-        prepped.select("event_id"), "event_id", "guid_event",
-        pinResult = false).count()),
+        prepped.select("event_id"), "event_id", "guid_event")),
       "d_user" -> (() => Sinks.mergeDimSurrogate(spark, s"$w/d_user",
-        prepped.select("user_id"), "user_id", "guid_user").count()),
+        prepped.select("user_id"), "user_id", "guid_user")),
       "d_parameter" -> (() => Sinks.mergeDimSurrogate(spark, s"$w/d_parameter",
-        StarSchema.parameterNamesPrepped(prepped), "parameter_name", "guid_parameter").count()),
+        StarSchema.parameterNamesPrepped(prepped), "parameter_name", "guid_parameter")),
       // item dim: SCD-1 update on item_id
       "d_item" -> (() => Sinks.mergeDim(spark, s"$w/d_item",
         StarSchema.dItem(part), Seq("item_id"),
         Seq("item_name", "item_brand", "item_type", "item_size", "item_price"),
-        Sinks.Update).count()),
+        Sinks.Update)),
       // fact: SCD-1 update on the composite event/parameter key; the
       // surrogate comes from the STABLE d_event dim (merged above), so
       // fact guids are unique and never renumbered across drops
@@ -196,18 +187,17 @@ object Pipeline {
         Sinks.mergeFactByDate(spark, s"$w/f_events", withGuid,
           Seq("event_id", "event_parameter_name", "event_parameter_value"),
           Seq("event_time", "event_user_id", "event_name", "event_value", "guid_event"))
-          .count()
       }),
       // the four analytic views, rebuilt per load — all derived from
       // the ONE shared fact⋈dim frame (jf)
       "view_yearly_counts" -> (() =>
-        overwrite(Views.yearlyCountsFrom(jf), s"$w/view_yearly_counts")),
+        Sinks.overwrite(Views.yearlyCountsFrom(jf), s"$w/view_yearly_counts")),
       "view_item_rank" -> (() =>
-        overwrite(Views.itemRankFrom(jf), s"$w/view_item_rank")),
+        Sinks.overwrite(Views.itemRankFrom(jf), s"$w/view_item_rank")),
       "view_top_item" -> (() =>
-        overwrite(Views.topItemFrom(jf), s"$w/view_top_item")),
+        Sinks.overwrite(Views.topItemFrom(jf), s"$w/view_top_item")),
       "view_top_platform" -> (() =>
-        overwrite(Views.topPlatformFrom(jf), s"$w/view_top_platform"))
+        Sinks.overwrite(Views.topPlatformFrom(jf), s"$w/view_top_platform"))
     )
   }
 
@@ -260,25 +250,34 @@ object Pipeline {
     ).reduce(_.unionByName(_))
   }
 
-  /** CLI: runDaily(srcDir, warehouseDir). */
-  def main(args: Array[String]): Unit = {
+  /** CLI: runDaily(srcDir, warehouseDir), or one stage with a stage
+    * argument (the Airflow task unit — dags/graft_daily_dag.py passes
+    * one per task).
+    */
+  def main(args: Array[String]): Unit =
+    cli(args, "graft.Pipeline <srcDir> <warehouseDir> [stage]", "pipeline")(
+      runDaily, runStage)
+
+  /** The body both chains' CLIs share: `<srcDir> <outDir> [stage]` —
+    * with a stage argument run exactly that stage, without it the
+    * whole chain in dependency order — then one line per stage.
+    */
+  private[graft] def cli(args: Array[String], usage: String, tag: String)(
+      all: (SparkSession, String, String) => Seq[StageResult],
+      one: (SparkSession, String, String, String) => StageResult): Unit = {
     if (args.length < 2) {
-      System.err.println(
-        "usage: graft.Pipeline <srcDir> <warehouseDir> [stage]")
+      System.err.println(s"usage: $usage")
       sys.exit(2)
     }
     val Array(srcDir, outDir) = args.take(2)
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
-    // with a stage argument, run exactly that stage (the Airflow task
-    // unit — dags/graft_daily_dag.py passes one per task); without,
-    // the whole chain in dependency order
     val results = args.lift(2) match {
-      case Some(stage) => Seq(runStage(spark, srcDir, outDir, stage))
-      case None => runDaily(spark, srcDir, outDir)
+      case Some(stage) => Seq(one(spark, srcDir, outDir, stage))
+      case None => all(spark, srcDir, outDir)
     }
     results.foreach(r =>
-      println(f"[pipeline] ${r.name}%-22s ${r.rows}%9d rows ${r.seconds}%7.2f s"))
+      println(f"[$tag] ${r.name}%-22s ${r.rows}%9d rows ${r.seconds}%7.2f s"))
     spark.stop()
   }
 }

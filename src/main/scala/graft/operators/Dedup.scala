@@ -1096,10 +1096,10 @@ object Dedup {
       maxIter: Int = 20, localThreshold: Long = 1000000L): DataFrame = {
     // materialize the edge list ONCE — without this every iteration
     // recomputes the (possibly expensive) upstream pair generation
-    val symRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .distinct()
-      .localCheckpoint()
+    val symRaw = org.apache.spark.sql.GraftInternal.pinRecomputable(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
+        .distinct())
     // size-adaptive parallelism: near-dup graphs are usually tiny next
     // to the corpus — iterate single-task when small, distributed when not
     val nEdges = symRaw.count()
@@ -1111,7 +1111,12 @@ object Dedup {
     // comparable types fall through to the generic distributed loop
     val longIds = symRaw.schema("src").dataType ==
       org.apache.spark.sql.types.LongType
-    if (longIds && nEdges <= localThreshold) return unionFindLocal(symRaw)
+    // the driver-built answer reads nothing of the pinned edge list,
+    // so the local path releases it; the distributed loop's result
+    // lineage reads its pins and keeps them
+    if (longIds && nEdges <= localThreshold)
+      return try unionFindLocal(symRaw)
+        finally org.apache.spark.sql.GraftInternal.unpin(symRaw)
     val parts = math.max(1L, math.min(
       symRaw.sparkSession.sessionState.conf.numShufflePartitions.toLong,
       nEdges / 500000L + 1L)).toInt

@@ -1,8 +1,9 @@
 package graft.sources
 
 import graft.operators.MergeInto
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Warehouse-side writers — the load half of the reference's ETL.
   *
@@ -18,6 +19,11 @@ import org.apache.spark.sql.functions.col
   *    format's row-level MERGE slots in here unchanged at 100 TB),
   *  - bucketed tables for repeated co-located joins on a hot key
   *    (both sides pre-hashed: the join plans with zero Exchange).
+  *
+  * Like the reference's MERGE statements, the merge writers commit
+  * their table and report a row count; they hand back no frame. A
+  * reader re-reads the path, so no handle has to outlive the next
+  * load's swap.
   */
 object Sinks {
 
@@ -32,90 +38,93 @@ object Sinks {
   /** Insert-if-absent: matched rows keep the stored values. */
   case object Ignore extends MergeMode
 
-  /** Stage-then-swap with a backup window: the previous table version
-    * survives as `.backup` until the new one is in place, so a crash
-    * mid-swap never leaves the path empty; rename failures raise
-    * instead of being silently ignored.
+  /** Overwrite `path` and return the row count FROM THE WRITE PASS
+    * itself (`Dataset.observe`): the count accumulates while the rows
+    * stream through the writer, so the table is never read back and
+    * the plan never runs twice. At 100 TB a read-back count doubles
+    * the stage's I/O; an up-front `df.count()` doubles its compute.
     */
-  /** If a previous swap crashed between its two renames, the table is
-    * missing and the backup holds the only copy — restore it before
-    * anything reads, writes, or deletes.
-    */
-  private def recoverIfNeeded(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path): Unit = {
-    val backup = new org.apache.hadoop.fs.Path(target.toString + ".backup")
-    if (!fs.exists(target) && fs.exists(backup))
-      require(fs.rename(backup, target), s"could not recover $target from backup")
+  private[graft] def overwrite(df: DataFrame, path: String): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    df.observe(obs, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Overwrite).parquet(path)
+    obs.get("rows").asInstanceOf[Long]
   }
 
-  private[graft] def swapInto(spark: SparkSession, stagingPath: String, path: String): Unit = {
-    val staging = new org.apache.hadoop.fs.Path(stagingPath)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val backup = new org.apache.hadoop.fs.Path(path + ".backup")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverIfNeeded(fs, target)
-    if (fs.exists(backup)) fs.delete(backup, true)
-    val hadTarget = fs.exists(target)
-    if (hadTarget)
-      require(fs.rename(target, backup), s"could not back up $path")
-    if (!fs.rename(staging, target)) {
-      if (hadTarget) fs.rename(backup, target)
-      throw new java.io.IOException(s"could not swap $stagingPath into $path")
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Stage-then-swap with a backup window: `target` moves to `backup`,
+    * `staging` is promoted to `target`, and only then is the backup
+    * dropped, so a crash mid-swap never leaves the data without a
+    * copy. Rename failures raise instead of being silently ignored; a
+    * failed promote rolls the backup back first.
+    */
+  private def swap(fs: FileSystem, staging: Path, target: Path,
+      backup: Path): Unit = {
+    recover(fs, target, backup)
+    val had = fs.exists(target)
+    if (had) {
+      fs.mkdirs(backup.getParent)
+      require(fs.rename(target, backup), s"could not back up $target")
     }
-    if (hadTarget) fs.delete(backup, true)
+    if (!fs.rename(staging, target)) {
+      if (had) fs.rename(backup, target)
+      throw new java.io.IOException(s"could not swap $staging into $target")
+    }
+    if (had) fs.delete(backup, true)
+  }
+
+  /** If a previous [[swap]] crashed between its renames, `target` is
+    * missing and `backup` holds the only copy — restore it before
+    * anything reads, writes, or deletes. A backup beside a target that
+    * made it into place is the old version: drop it.
+    */
+  private def recover(fs: FileSystem, target: Path, backup: Path): Unit =
+    if (fs.exists(backup)) {
+      if (!fs.exists(target))
+        require(fs.rename(backup, target), s"could not recover $target from $backup")
+      else fs.delete(backup, true)
+    }
+
+  /** [[swap]] of a whole table directory, backed up at `<path>.backup`. */
+  private[graft] def swapInto(spark: SparkSession, stagingPath: String, path: String): Unit = {
+    val target = new Path(path)
+    swap(fsOf(spark, target), new Path(stagingPath), target, new Path(path + ".backup"))
   }
 
   private def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverIfNeeded(fs, p)
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
+    recover(fs, p, new Path(path + ".backup"))
     fs.exists(p)
   }
 
-  /** Table refresh: merge the delta into the stored table and swap.
-    * Returns the merged frame that was persisted. Existence is a
-    * filesystem check, NOT a read attempt — a transient read failure
-    * must surface, never silently replace the table with the delta.
-    *
-    * With `pinResult` (the default) the returned frame is
-    * `localCheckpoint`ed, NOT a lazy re-read of the path: a lazy handle
-    * snapshots the file listing at creation, so the next merge/compact
-    * swap would silently invalidate it (FILE_NOT_EXIST on first
-    * action). The pin costs block-manager space until the handle is
-    * GC'd — cheap for dims, a non-starter for fact-sized tables: pass
-    * `pinResult = false` there and treat the returned lazy read as
-    * valid only until the next load's swap.
+  /** Write `merged` beside `path`, swap it in, and return its row
+    * count, counted on the write pass.
+    */
+  private def commit(spark: SparkSession, merged: DataFrame, path: String): Long = {
+    val rows = overwrite(merged, path + ".staging")
+    swapInto(spark, path + ".staging", path)
+    rows
+  }
+
+  /** Table refresh: merge the delta into the stored table, swap, and
+    * return the new table's row count. Existence is a filesystem
+    * check, NOT a read attempt — a transient read failure must
+    * surface, never silently replace the table with the delta. The
+    * delta is broadcast into the merge: a dim load is ≪ the dim.
     */
   def mergeDim(spark: SparkSession, path: String, delta: DataFrame,
       keys: Seq[String], updateCols: Seq[String],
-      mode: MergeMode = Update,
-      broadcastDelta: Boolean = true,
-      pinResult: Boolean = true): DataFrame = {
+      mode: MergeMode = Update): Long = {
     val merged = if (tableExists(spark, path)) mode match {
       case Update => MergeInto.upsert(spark.read.parquet(path), delta, keys,
-        updateCols, broadcastDelta = broadcastDelta)
+        updateCols, broadcastDelta = true)
       case Ignore => MergeInto.insertIfAbsent(spark.read.parquet(path), delta, keys)
     } else delta
-    persistAndSwap(spark, merged, path, pinResult)
+    commit(spark, merged, path)
   }
-
-  /** Shared persist policy for the merge writers: stage, swap, and
-    * return either the block-manager-pinned merged frame (survives
-    * later swaps — for dims) or a lazy read of the live table (valid
-    * only until the next swap — for fact-sized results).
-    */
-  private def persistAndSwap(spark: SparkSession, merged: DataFrame,
-      path: String, pinResult: Boolean): DataFrame =
-    if (pinResult) {
-      val pinned = merged.localCheckpoint()
-      pinned.write.mode(SaveMode.Overwrite).parquet(path + ".staging")
-      swapInto(spark, path + ".staging", path)
-      pinned
-    } else {
-      merged.write.mode(SaveMode.Overwrite).parquet(path + ".staging")
-      swapInto(spark, path + ".staging", path)
-      spark.read.parquet(path)
-    }
 
   /** Partition-scoped fact MERGE — the 100 TB load path: rewrite ONLY
     * the date partitions the delta touches, leaving every other date's
@@ -151,13 +160,14 @@ object Sinks {
     * NULL dates are rejected in-plan (they would silently land in a
     * default partition).
     *
-    * Returns a lazy read of the live table (the fact-sized
-    * `pinResult = false` contract — valid until the next load's swap).
+    * Returns the WHOLE table's row count after the load (a count of
+    * the live table), not the drop's: a re-run of the same
+    * drop must report the same number.
     */
   def mergeFactByDate(spark: SparkSession, path: String, delta: DataFrame,
       keys: Seq[String], updateCols: Seq[String],
-      dateCol: String = "event_date"): DataFrame = {
-    import org.apache.spark.sql.functions.{lit, raise_error, when}
+      dateCol: String = "event_date"): Long = {
+    import org.apache.spark.sql.functions.{raise_error, when}
     recoverPartitionSwaps(spark, path)
     val d = delta.filter(
       when(col(dateCol).isNull,
@@ -171,24 +181,24 @@ object Sinks {
     } else {
       val (merged, touched) = factMergeFrames(spark, path, d, keys,
         updateCols, dateCol)
-      val staging = path + ".staging_parts"
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+      val staging = new Path(path + ".staging_parts")
+      val fs = fsOf(spark, staging)
+      fs.delete(staging, true)
       clusterByDate(merged, dateCol, touched.size.toLong)
         .write.mode(SaveMode.Overwrite).partitionBy(dateCol)
-        .parquet(staging)
+        .parquet(staging.toString)
+      val backupRoot = new Path(path + ".pbackup")
       touched.foreach { v =>
         val dirName = s"$dateCol=$v"
-        swapPartition(spark, s"$staging/$dirName", path, dirName)
+        swap(fs, new Path(staging, dirName), new Path(path, dirName),
+          new Path(backupRoot, dirName))
       }
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+      fs.delete(staging, true)
       // all swaps landed → the backup root is empty scaffolding
-      val backupRoot = new org.apache.hadoop.fs.Path(path + ".pbackup")
       if (fs.exists(backupRoot) && fs.listStatus(backupRoot).isEmpty)
         fs.delete(backupRoot, true)
     }
-    spark.read.parquet(path)
+    spark.read.parquet(path).count()
   }
 
   /** Cluster rows by their date partition (plus a hash salt that
@@ -236,47 +246,17 @@ object Sinks {
       broadcastDelta = false), touched)
   }
 
-  /** Crash-safe swap of ONE partition directory, with the backup
-    * parked under `<tablePath>.pbackup/` — outside the table root, so
-    * a reader during the crash window never sees a `date=X.backup`
-    * pseudo-partition. Rename failures raise, mirroring [[swapInto]].
-    */
-  private def swapPartition(spark: SparkSession, stagingDir: String,
-      tablePath: String, dirName: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(s"$tablePath/$dirName")
-    val backupRoot = new org.apache.hadoop.fs.Path(tablePath + ".pbackup")
-    val backup = new org.apache.hadoop.fs.Path(backupRoot, dirName)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(backupRoot)
-    if (fs.exists(backup)) fs.delete(backup, true)
-    val had = fs.exists(target)
-    if (had)
-      require(fs.rename(target, backup), s"could not back up $target")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(stagingDir), target)) {
-      if (had) fs.rename(backup, target)
-      throw new java.io.IOException(
-        s"could not swap $stagingDir into $target")
-    }
-    if (had) fs.delete(backup, true)
-  }
-
   /** If a previous partition swap crashed between its renames, the
     * backup under `<path>.pbackup/` holds the only copy of that
-    * partition — restore any such directory (or drop the backup when
-    * the partition made it into place) before anything reads or
-    * merges. The per-partition analogue of [[recoverIfNeeded]].
+    * partition — [[recover]] every such directory before anything
+    * reads or merges.
     */
   private def recoverPartitionSwaps(spark: SparkSession, path: String): Unit = {
-    val backupRoot = new org.apache.hadoop.fs.Path(path + ".pbackup")
-    val fs = backupRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val backupRoot = new Path(path + ".pbackup")
+    val fs = fsOf(spark, backupRoot)
     if (!fs.exists(backupRoot)) return
-    fs.listStatus(backupRoot).foreach { st =>
-      val target = new org.apache.hadoop.fs.Path(path, st.getPath.getName)
-      if (!fs.exists(target))
-        require(fs.rename(st.getPath, target),
-          s"could not recover $target from partition backup")
-      else fs.delete(st.getPath, true)
-    }
+    fs.listStatus(backupRoot).foreach(st =>
+      recover(fs, new Path(path, st.getPath.getName), st.getPath))
     fs.delete(backupRoot, true)
   }
 
@@ -287,8 +267,8 @@ object Sinks {
     * incremental loads; this is the append-stable correction.)
     */
   def mergeDimSurrogate(spark: SparkSession, path: String, deltaKeys: DataFrame,
-      keyCol: String, guidCol: String, pinResult: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, max}
+      keyCol: String, guidCol: String): Long = {
+    import org.apache.spark.sql.functions.max
     val fresh = deltaKeys.select(col(keyCol)).distinct()
     val merged = if (tableExists(spark, path)) {
       val stored = spark.read.parquet(path)
@@ -314,7 +294,7 @@ object Sinks {
           .withColumn(guidCol, col(guidCol) + col("__guid_offset"))
           .drop("__guid_offset"))
     } else graft.operators.SurrogateKey.withDenseId(fresh, Seq(keyCol), guidCol)
-    persistAndSwap(spark, merged, path, pinResult)
+    commit(spark, merged, path)
   }
 
   /** SCD2 history refresh: fold one load into the stored history
@@ -326,14 +306,12 @@ object Sinks {
     */
   def mergeDimScd2(spark: SparkSession, path: String, delta: DataFrame,
       keys: Seq[String], tracked: Seq[String],
-      loadDate: org.apache.spark.sql.Column,
-      broadcastDelta: Boolean = true,
-      pinResult: Boolean = true): DataFrame = {
+      loadDate: org.apache.spark.sql.Column): Long = {
     val merged = if (tableExists(spark, path))
       graft.operators.Scd2.merge(spark.read.parquet(path), delta, keys,
-        tracked, loadDate, broadcastDelta = broadcastDelta)
+        tracked, loadDate)
     else graft.operators.Scd2.init(delta, keys, loadDate)
-    persistAndSwap(spark, merged, path, pinResult)
+    commit(spark, merged, path)
   }
 
   /** Small-file compaction: rewrite a table directory into

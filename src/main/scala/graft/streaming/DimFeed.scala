@@ -65,7 +65,7 @@ object DimFeed {
     ReplayDriver.foreachDrop(ReplayDriver.drops(spark, stage.toString),
         s"$workDir/chk")(
       scd2Batch(hist, keys, tracked, id => dates(id.toInt),
-        latestBy = "__load_seq", broadcastDelta = true))
+        latestBy = "__load_seq"))
     spark.read.parquet(hist)
   }
 
@@ -82,16 +82,12 @@ object DimFeed {
     * merge's duplicate-key guard would kill the query and the
     * checkpoint would replay the same poisonous batch forever.
     * `latestBy` is consumed by the collapse and does not enter the
-    * history. Deltas that outgrow a broadcast (backfills) set
-    * `broadcastDelta = false`. Start with
-    * `.option("checkpointLocation", ...)`.
+    * history. Start with `.option("checkpointLocation", ...)`.
     */
   def scd2Sink(deltas: DataFrame, path: String, keys: Seq[String],
       tracked: Seq[String], loadDateFor: Long => String,
-      latestBy: String = "ts",
-      broadcastDelta: Boolean = true): DataStreamWriter[Row] = {
-    val body = scd2Batch(path, keys, tracked, loadDateFor, latestBy,
-      broadcastDelta)
+      latestBy: String = "ts"): DataStreamWriter[Row] = {
+    val body = scd2Batch(path, keys, tracked, loadDateFor, latestBy)
     deltas.writeStream.foreachBatch { (batch: Dataset[Row], id: Long) =>
       body(batch.toDF(), id)
     }
@@ -99,8 +95,8 @@ object DimFeed {
 
   /** One micro-batch of [[scd2Sink]]: collapse, then merge. */
   private def scd2Batch(path: String, keys: Seq[String],
-      tracked: Seq[String], loadDateFor: Long => String, latestBy: String,
-      broadcastDelta: Boolean): (DataFrame, Long) => Unit =
+      tracked: Seq[String], loadDateFor: Long => String,
+      latestBy: String): (DataFrame, Long) => Unit =
     (batch, id) =>
       if (!batch.isEmpty) {
         import org.apache.spark.sql.expressions.Window
@@ -112,11 +108,8 @@ object DimFeed {
           .orderBy((col(latestBy).desc +: tieBreak.toSeq): _*)
         val latest = batch.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn", latestBy)
-        // pinResult = false: the returned handle is dropped here, so
-        // localCheckpointing a growing history every batch buys nothing
         Sinks.mergeDimScd2(batch.sparkSession, path, latest, keys, tracked,
-          lit(loadDateFor(id)), broadcastDelta = broadcastDelta,
-          pinResult = false)
+          lit(loadDateFor(id)))
         ()
       }
 }

@@ -12,7 +12,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQu
   *    mtime-stamped parquet file, so a one-file-per-trigger source
   *    replays loads in staging order. [[staged]] memoizes a staging
   *    dir per JVM by (tag, dataset): staged loads are a pure function
-  *    of the dataset, so only the stream itself runs per call.
+  *    of the dataset, so only the stream itself runs per call. Staging
+  *    dirs and [[runDir]]s are deleted when the JVM exits, the
+  *    lifetime of the memo.
   *  - '''Source.''' [[drops]] streams a staged dir, its schema read
   *    from the first staged file, one file per trigger by default.
   *  - '''Run.''' Every sink runs through one run-to-end step: graft's
@@ -64,9 +66,9 @@ private[graft] object ReplayDriver {
   def stagedWith[T](tag: String, key: String)(
       fill: java.nio.file.Path => T): (String, T) = {
     val (dir, derived) = stagedDirs.computeIfAbsent((tag, key), _ => {
-      val st = java.nio.file.Files.createTempDirectory(s"graft_$tag")
-      val derived = fill(st)
-      (st.toString, derived)
+      val st = runDir(tag)
+      val derived = fill(java.nio.file.Paths.get(st))
+      (st, derived)
     })
     (dir, derived.asInstanceOf[T])
   }
@@ -76,8 +78,11 @@ private[graft] object ReplayDriver {
     stagedWith(tag, key)(fill)._1
 
   /** A fresh per-run dir (store copy, sink, checkpoint). */
-  def runDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+  def runDir(name: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+    org.apache.spark.sql.GraftInternal.deleteOnExit(dir)
+    dir
+  }
 
   /** Stream the staged loads under `dir` in mtime order, schema from
     * the first staged file.

@@ -34,9 +34,6 @@ object Profile {
     if (sys.env.get("SPARK_GRAFT_PROFILE").contains("delta")) {
       deltaAnatomy(spark, dir); spark.stop(); return
     }
-    if (sys.env.get("SPARK_GRAFT_PROFILE").contains("chain")) {
-      chainAnatomy(spark, dir); spark.stop(); return
-    }
     if (sys.env.get("SPARK_GRAFT_PROFILE").contains("reappend")) {
       reappendAnatomy(spark, dir); spark.stop(); return
     }
@@ -169,96 +166,6 @@ object Profile {
       df.select(xxhash64(struct(col("*"))).as("h"))
         .agg(expr("bit_xor(h)")).collect()
     }
-  }
-
-  /** `SPARK_GRAFT_PROFILE=chain`: stage anatomy of ONE daily-chain
-    * load (r18 optimization round): the bench trio pipeline_daily /
-    * pipeline_late / stream_late_events is the suite's top cost block
-    * and each is 2+ chain loads; this splits one load's wall between
-    * the prep scan, the surrogate machinery, the merge joins and the
-    * write/swap choreography, so the optimization targets the right
-    * stage. Mirrors Pipeline.stagesPrepped in order.
-    */
-  private def chainAnatomy(spark: SparkSession, dir: String): Unit = {
-    def timeA(label: String)(f: => Any): Unit = {
-      val t0 = System.nanoTime()
-      f
-      println(f"[prof] $label%-44s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
-    val wh = java.nio.file.Files.createTempDirectory("graft_chain_prof")
-      .toString + "/wh"
-    val events = Tables.events(spark, dir)
-      .filter(col("event_id").isNotNull)
-    val part = Tables.part(spark, dir)
-    val prepped = StarSchema.prep(events)
-    timeA("prep scan (keys-forced, no cache)") {
-      prepped.select(xxhash64(struct(col("event_id"), col("event_time"),
-        col("user_id"), col("event_type"), col("value"),
-        map_keys(col("props_map")))).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
-    }
-    prepped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    timeA("prep persist+count")(prepped.count())
-    val raw = StarSchema.rawIngestPrepped(prepped)
-    timeA("rawIngest surrogate (hash-force)") {
-      raw.select(xxhash64(struct(col("*"))).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
-    }
-    timeA("rawIngest write (observe)") {
-      val obs = org.apache.spark.sql.Observation()
-      raw.observe(obs, count(lit(1)).as("rows"))
-        .write.mode("overwrite").parquet(s"$wh/event_raw")
-      obs.get("rows")
-    }
-    timeA("d_event merge (fresh)") {
-      graft.sources.Sinks.mergeDimSurrogate(spark, s"$wh/d_event",
-        prepped.select("event_id"), "event_id", "guid_event",
-        pinResult = false).count()
-    }
-    timeA("d_event merge (re-run, anti+offset)") {
-      graft.sources.Sinks.mergeDimSurrogate(spark, s"$wh/d_event",
-        prepped.select("event_id"), "event_id", "guid_event",
-        pinResult = false).count()
-    }
-    timeA("d_user merge (fresh)") {
-      graft.sources.Sinks.mergeDimSurrogate(spark, s"$wh/d_user",
-        prepped.select("user_id"), "user_id", "guid_user").count()
-    }
-    val dEvent = spark.read.parquet(s"$wh/d_event")
-    val withGuid = StarSchema.fEventsFlatPrepped(prepped)
-      .join(dEvent, Seq("event_id"))
-      .withColumn("event_date", to_date(col("event_time")))
-    timeA("f_events flat+join (hash-force)") {
-      withGuid.select(xxhash64(struct(col("*"))).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
-    }
-    timeA("f_events mergeFactByDate (fresh)") {
-      graft.sources.Sinks.mergeFactByDate(spark, s"$wh/f_events", withGuid,
-        Seq("event_id", "event_parameter_name", "event_parameter_value"),
-        Seq("event_time", "event_user_id", "event_name", "event_value",
-          "guid_event")).count()
-    }
-    timeA("f_events mergeFactByDate (re-run)") {
-      graft.sources.Sinks.mergeFactByDate(spark, s"$wh/f_events", withGuid,
-        Seq("event_id", "event_parameter_name", "event_parameter_value"),
-        Seq("event_time", "event_user_id", "event_name", "event_value",
-          "guid_event")).count()
-    }
-    val jf = Views.viewJoinedPrepped(prepped, part)
-    jf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    timeA("view join persist+count")(jf.count())
-    timeA("4 views from jf") {
-      Seq(Views.yearlyCountsFrom(jf), Views.itemRankFrom(jf),
-        Views.topItemFrom(jf), Views.topPlatformFrom(jf))
-        .zipWithIndex.foreach { case (v, i) =>
-          val obs = org.apache.spark.sql.Observation()
-          v.observe(obs, count(lit(1)).as("rows"))
-            .write.mode("overwrite").parquet(s"$wh/view_$i")
-          obs.get("rows")
-        }
-    }
-    jf.unpersist(false)
-    prepped.unpersist(false)
   }
 
   /** `SPARK_GRAFT_PROFILE=lateevents`: per-micro-batch anatomy of the

@@ -4,10 +4,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-/** Bridge to `private[sql]` internals used by
-  * [[graft.operators.SurrogateKey]]: building a DataFrame from an
-  * InternalRow RDD without the external-Row encode/decode round trip
-  * (which dominates the cost of RDD-based operators on wide rows).
+/** Bridge to Spark-private (`private[sql]`, `private[spark]`)
+  * internals, first used by [[graft.operators.SurrogateKey]]: building
+  * a DataFrame from an InternalRow RDD without the external-Row
+  * encode/decode round trip (which dominates the cost of RDD-based
+  * operators on wide rows).
   */
 object GraftInternal {
 
@@ -30,6 +31,14 @@ object GraftInternal {
   def expressionOf(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** Test-only observation hook: [[pinRecomputable]] materializes via
+    * a raw RDD action (no SQL execution id), so QueryExecutionListener
+    * never sees a pinned stage's plan — plan-audit specs register a
+    * callback here to assert on it (e.g. that the delta serve's stored
+    * index scan sits inside a pinned stage). Never set in production.
+    */
+  @volatile var pinObserver: DataFrame => Unit = null
+
   /** Eagerly materialize `df` into a MEMORY_AND_DISK-persisted
     * InternalRow RDD wrapped back as a [[org.apache.spark.sql.execution.LogicalRDD]]
     * — `Dataset.localCheckpoint(eager = true)` minus the lineage
@@ -48,19 +57,9 @@ object GraftInternal {
     * iterator reuses UnsafeRow buffers.)
     *
     * NOT a substitute for `localCheckpoint` where the truncation
-    * itself is load-bearing: read-then-overwrite swaps
-    * ([[graft.sources.Sinks]]) must never recompute from an
-    * overwritten source, and iterative loops cut lineage depth on
+    * itself is load-bearing: iterative loops cut lineage depth on
     * purpose.
     */
-  /** Test-only observation hook: [[pinRecomputable]] materializes via
-    * a raw RDD action (no SQL execution id), so QueryExecutionListener
-    * never sees a pinned stage's plan — plan-audit specs register a
-    * callback here to assert on it (e.g. that the delta serve's stored
-    * index scan sits inside a pinned stage). Never set in production.
-    */
-  @volatile var pinObserver: DataFrame => Unit = null
-
   def pinRecomputable(df: DataFrame): DataFrame = {
     val obs = pinObserver
     if (obs != null) obs(df)
@@ -107,4 +106,12 @@ object GraftInternal {
         r.rdd.unpersist(blocking = false); ()
       case _ => ()
     }
+
+  /** Delete `dir` when the JVM exits, through Spark's own shutdown
+    * hook (the one that removes its local dirs) — for temp dirs whose
+    * lifetime is the JVM's.
+    */
+  def deleteOnExit(dir: String): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(
+      new java.io.File(dir))
 }

@@ -20,6 +20,11 @@ class CorpusPipelineSpec extends SparkSpecBase {
 
   private def read(t: String) = spark.read.parquet(s"$wh/$t")
 
+  test("a curation run leaves nothing persisted or cached") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_corpus_pins").toString
+    assertLeavesNoPins(CorpusPipeline.runCuration(spark, sfDir, dir))
+  }
+
   test("stages are containment-ordered: clean ⊆ canonical ⊆ quality-kept") {
     val kept = read("corpus_quality").filter(col("keep"))
       .select("doc_id").as[Long].collect().toSet

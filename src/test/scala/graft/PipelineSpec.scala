@@ -98,6 +98,13 @@ class PipelineSpec extends SparkSpecBase {
       guidSum(s"$wFull/d_user", "guid_user"))
   }
 
+  test("a daily load leaves nothing persisted or cached") {
+    val w = Files.createTempDirectory("graft_wh_pins").toString
+    val events = graft.sources.Tables.events(spark, sfDir)
+    val part = graft.sources.Tables.part(spark, sfDir)
+    assertLeavesNoPins(Pipeline.runDailyLoad(spark, events, part, w))
+  }
+
   test("surrogate keys stay stable and unique across incremental drops") {
     import spark.implicits._
     val path = Files.createTempDirectory("graft_sur").toString + "/d"

@@ -39,11 +39,49 @@ trait SparkSpecBase extends AnyFunSuite
     * frames), so this only stops suite N's garbage taxing suite N+1.
     */
   override def afterAll(): Unit = {
-    try {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    } catch { case _: Throwable => () }
+    try releasePins(blocking = false)
+    catch { case _: Throwable => () }
     super.afterAll()
+  }
+
+  private def releasePins(blocking: Boolean): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking))
+  }
+
+  /** Run `op` once (warm-up), drop every pin the session holds, run it
+    * again, and assert the second run left no persisted RDD and no
+    * CacheManager entry behind. The session tracks persisted RDDs by
+    * weak reference, so a pin the op drops without releasing would
+    * vanish from the count at the next GC: a watcher holds every RDD
+    * persisted during the run until the count is taken.
+    * (`numCachedEntries` is package-private in Scala but public in
+    * bytecode, so it is read reflectively.)
+    */
+  protected def assertLeavesNoPins(op: => Any): Unit = {
+    def pins: (Set[Int], Int) = {
+      val cm = spark.sharedState.cacheManager
+      (spark.sparkContext.getPersistentRDDs.keySet.toSet,
+        cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int])
+    }
+    op
+    releasePins(blocking = true)
+    val before = pins
+    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val watcher = new Thread(() =>
+      while (running.get) {
+        spark.sparkContext.getPersistentRDDs.values.foreach(held.add)
+        Thread.sleep(5)
+      })
+    watcher.setDaemon(true)
+    watcher.start()
+    try op finally { running.set(false); watcher.join() }
+    val after = pins
+    held.clear()
+    assert(after == before,
+      s"left ${(after._1 -- before._1).size} persisted RDDs and " +
+        s"${after._2 - before._2} cache entries behind")
   }
 }

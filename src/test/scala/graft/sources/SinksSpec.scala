@@ -45,19 +45,18 @@ class SinksSpec extends SparkSpecBase {
       (2L, "p", 1L, day("2024-01-02"), 99.0),
       (4L, "r", 3L, day("2024-01-02"), 40.0)
     ).toDF("event_id", "pname", "pval", "event_date", "v")
-    val merged = Sinks.mergeFactByDate(spark, path, delta,
-      Seq("event_id", "pname", "pval"), Seq("v"))
-    assert(merged.count() == 4)
-    val got = merged.select("event_id", "v").orderBy("event_id")
+    assert(Sinks.mergeFactByDate(spark, path, delta,
+      Seq("event_id", "pname", "pval"), Seq("v")) == 4)
+    val got = spark.read.parquet(path).select("event_id", "v").orderBy("event_id")
       .as[(Long, Double)].collect().toSeq
     assert(got == Seq((1L, 10.0), (2L, 99.0), (3L, 30.0), (4L, 40.0)))
     // untouched dates: same files, same mtimes — never rewritten
     assert(files("2024-01-01") == before01)
     assert(files("2024-01-03") == before03)
     // idempotent re-merge of the same drop
-    val again = Sinks.mergeFactByDate(spark, path, delta,
+    Sinks.mergeFactByDate(spark, path, delta,
       Seq("event_id", "pname", "pval"), Seq("v"))
-    assert(again.select("event_id", "v").orderBy("event_id")
+    assert(spark.read.parquet(path).select("event_id", "v").orderBy("event_id")
       .as[(Long, Double)].collect().toSeq == got)
   }
 
@@ -85,9 +84,9 @@ class SinksSpec extends SparkSpecBase {
     // the next load recovers the partition BEFORE merging
     val delta = Seq((3L, "q", day("2024-01-03"), 3.0))
       .toDF("event_id", "pname", "event_date", "v")
-    val merged = Sinks.mergeFactByDate(spark, path, delta,
+    Sinks.mergeFactByDate(spark, path, delta,
       Seq("event_id", "pname"), Seq("v"))
-    assert(merged.count() == 3)
+    assert(spark.read.parquet(path).count() == 3)
     assert(!fs.exists(backupRoot))
   }
 
@@ -111,12 +110,15 @@ class SinksSpec extends SparkSpecBase {
     Sinks.mergeDim(spark, path, v1, Seq("k"), Seq("name", "price"))
     val delta = Seq((2L, "B", 9.0), (3L, "c", 3.0)).toDF("k", "name", "price")
     // SCD-1: 2 updates, 3 inserts
-    val updated = Sinks.mergeDim(spark, path, delta, Seq("k"), Seq("name", "price"),
-      Sinks.Update).orderBy("k").as[(Long, String, Double)].collect().toSeq
+    assert(Sinks.mergeDim(spark, path, delta, Seq("k"), Seq("name", "price"),
+      Sinks.Update) == 3)
+    val updated = spark.read.parquet(path)
+      .orderBy("k").as[(Long, String, Double)].collect().toSeq
     assert(updated == Seq((1L, "a", 1.0), (2L, "B", 9.0), (3L, "c", 3.0)))
     // ignore: existing keys keep their values
     val delta2 = Seq((3L, "CLASH", 0.0), (4L, "d", 4.0)).toDF("k", "name", "price")
-    val ignored = Sinks.mergeDim(spark, path, delta2, Seq("k"), Nil, Sinks.Ignore)
+    assert(Sinks.mergeDim(spark, path, delta2, Seq("k"), Nil, Sinks.Ignore) == 4)
+    val ignored = spark.read.parquet(path)
       .orderBy("k").as[(Long, String, Double)].collect().toSeq
     assert(ignored == Seq((1L, "a", 1.0), (2L, "B", 9.0), (3L, "c", 3.0), (4L, "d", 4.0)))
   }
@@ -124,41 +126,22 @@ class SinksSpec extends SparkSpecBase {
   test("mergeDimSurrogate: NULL natural key gets ONE surrogate across loads") {
     val path = Files.createTempDirectory("graft_dim_null").toString + "/dim"
     val load1 = Seq(Option("a"), Option("b"), Option.empty[String]).toDF("nk")
-    val v1 = Sinks.mergeDimSurrogate(spark, path, load1, "nk", "guid")
+    assert(Sinks.mergeDimSurrogate(spark, path, load1, "nk", "guid") == 3)
+    val v1 = spark.read.parquet(path)
     assert(v1.count() == 3)
     assert(v1.filter(col("nk").isNull).count() == 1)
     // re-deliver the same keys (incl. NULL) plus one new: only the new
     // key gets a surrogate; the NULL row is matched, not re-inserted
     val g1 = v1.filter(col("nk").isNull).select("guid").head().getLong(0)
     val load2 = Seq(Option("a"), Option.empty[String], Option("c")).toDF("nk")
-    val v2 = Sinks.mergeDimSurrogate(spark, path, load2, "nk", "guid")
+    assert(Sinks.mergeDimSurrogate(spark, path, load2, "nk", "guid") == 4)
+    val v2 = spark.read.parquet(path)
     assert(v2.count() == 4, v2.collect().toSeq.toString)
     assert(v2.filter(col("nk").isNull).count() == 1)
     // surrogates stay unique and stable
     assert(v2.select("guid").distinct().count() == 4)
     val g2 = v2.filter(col("nk").isNull).select("guid").head().getLong(0)
     assert(g1 == g2)
-  }
-
-  test("held merge result survives subsequent loads and compaction") {
-    // regression: mergeDim/mergeDimSurrogate used to return a lazy
-    // spark.read.parquet(path) whose file listing the NEXT swap renamed
-    // away — any held handle then failed with FILE_NOT_EXIST
-    val path = Files.createTempDirectory("graft_dim_held").toString + "/dim"
-    val v1 = Sinks.mergeDim(spark, path,
-      Seq((1L, "a"), (2L, "b")).toDF("k", "name"), Seq("k"), Seq("name"))
-    val s1 = Sinks.mergeDimSurrogate(spark, path + "_s",
-      Seq("x", "y").toDF("nk"), "nk", "guid")
-    // second loads swap both table directories out from under any lazy reader
-    Sinks.mergeDim(spark, path,
-      Seq((2L, "B"), (3L, "c")).toDF("k", "name"), Seq("k"), Seq("name"))
-    Sinks.mergeDimSurrogate(spark, path + "_s", Seq("z").toDF("nk"), "nk", "guid")
-    Sinks.compact(spark, path, rowsPerFile = 1000L)
-    // the held v1/s1 handles must still answer from their own snapshot
-    assert(v1.orderBy("k").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a"), (2L, "b")))
-    assert(s1.count() == 2)
-    assert(s1.select("guid").distinct().count() == 2)
   }
 
   test("compaction shrinks file count and preserves rows") {
