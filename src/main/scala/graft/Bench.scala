@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, struct, xxhash64}
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -21,10 +21,7 @@ object Bench {
       else df.count()
       ()
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       // ContextCleaner's periodic GC defaults to 30 MINUTES — longer
       // than the whole suite — so shuffle files and dead pinned blocks
       // from finished queries were never reclaimed and taxed every

@@ -15,12 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Profile {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def time(label: String)(df: => DataFrame): Unit = {

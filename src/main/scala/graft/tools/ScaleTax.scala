@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scaling-tax probe (env-gated tool, outside every query path): runs
   * selected declared entries under the EXACT bench session shape
@@ -24,10 +24,7 @@ object ScaleTax {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
