@@ -51,19 +51,26 @@ object TextFunctions {
       i => concat_ws(" ", slice(w, i + 1, lit(n))))
   }
 
-  /** [[wordShingles]] over an ALREADY-MATERIALIZED words-array column.
-    * The inline form above re-evaluates the regex `split` for every
-    * shingle element (the split expression sits inside the lambda, and
-    * HOFs run interpreted) — measured ~50× the cost of the split
-    * itself on the corpus. Callers on a hot path project
-    * [[words]] into its own column first and shingle from that; the
-    * split is non-cheap and referenced twice, so CollapseProject
-    * keeps the two projections separate.
+  /** THE word-shingle law over a words-array column, as builtins: the
+    * array of `concat_ws(' ', w[i..i+n))` for i ∈ [0, max(size-n, 0)]
+    * — null tokens skipped, one short shingle when there are fewer
+    * than n words. It is the reference the [[shingleSet]] kernel is
+    * spec-pinned against (with [[jaccard]] as the reference verify);
+    * no library path runs it, because the `transform` lambda runs
+    * interpreted.
     */
   def shinglesFromWords(w: Column, n: Int): Column =
     transform(
       sequence(lit(0), greatest(size(w) - n, lit(0))),
       i => concat_ws(" ", slice(w, i + 1, lit(n))))
+
+  /** The [[shinglesFromWords]] law as a SET, via the codegen kernel
+    * [[graft.plans.ShingleSetUtil]]: sorted (binary order), distinct,
+    * one pass over the tokens — the input [[sortedJaccard]] expects.
+    * Requires [[graft.plans.GraftFunctions.ensureRegistered]].
+    */
+  def shingleSet(w: Column, n: Int): Column =
+    call_function("graft_shingle_set", w, lit(n))
 
   /** Full MinHash signature from a words-array column via the codegen
     * kernel [[graft.plans.MinhashSigUtil]] — one pass over the tokens,
@@ -147,7 +154,13 @@ object TextFunctions {
         (0 until rows).map(r => element_at(sig, b * rows + r + 1).as(s"s$r"))): _*)
     }: _*)
 
-  /** Exact Jaccard similarity of two string-array columns (as sets). */
+  /** Exact Jaccard similarity of two string-array columns (as sets),
+    * rounded to 4 places; 0.0 when both are empty. The reference law:
+    * it fills hash sets per row (`array_distinct` twice,
+    * `array_intersect`, `array_union`), so library paths verify with
+    * [[sortedJaccard]] over [[shingleSet]]s instead, which specs pin
+    * equal to this.
+    */
   def jaccard(a: Column, b: Column): Column = {
     val da = array_distinct(a)
     val db = array_distinct(b)
@@ -155,6 +168,15 @@ object TextFunctions {
     val uni = size(array_union(da, db)).cast("double")
     when(uni === 0, lit(0.0)).otherwise(round(inter / uni, 4))
   }
+
+  /** [[jaccard]] of two SORTED, DISTINCT string sets (what
+    * [[shingleSet]] returns): the ratio is the two-pointer-merge
+    * kernel [[graft.plans.SortedJaccardUtil]], the `round(…, 4)` the
+    * same builtin [[jaccard]] applies. Requires
+    * [[graft.plans.GraftFunctions.ensureRegistered]].
+    */
+  def sortedJaccard(a: Column, b: Column): Column =
+    round(call_function("graft_sorted_jaccard", a, b), 4)
 
   /** 64-bit SimHash over a token array. A builtin can't express the
     * 64-lane signed bit-count accumulation without a 64× explode (a real

@@ -177,26 +177,41 @@ object Dedup {
     * candidate pair. Exposed so pair-consuming compositions (keep-
     * lowest dedup actions, cluster building, the corpus pipeline) can
     * share the one candidate computation instead of re-deriving it.
+    * NULL-text docs are the caller's to filter (every library caller
+    * does): they sign nothing and their shingle set is NULL.
+    *
+    * Shape: ONE feature projection. Each document's words feed both
+    * its signature (the codegen minhash kernel) and its sorted shingle
+    * set (`graft_shingle_set`), below a [[spreadForKernel]] exchange on
+    * doc_id; there is no candidate-id union, no semi-join re-fetch of
+    * candidate text and no second shingling pass. Column pruning
+    * narrows that exchange per consumer, so the executed plan holds
+    * two, each splitting the text itself: (doc_id, sig), read by both
+    * sides of the band self-join, and (doc_id, sh), read by both verify
+    * joins — each built once and reused, so each kernel runs once per
+    * document. The verify is a two-pointer merge
+    * (`graft_sorted_jaccard`), not four hash-set builtins.
+    *
+    * The trade: the shingle exchange carries EVERY document's set,
+    * not only the candidates', so the pass shuffles more bytes than
+    * a lean signature-only exchange (a perfbench curation op's shuffle
+    * writes went from 1.8 to 4.9 MB, 4 cores). Pruning the verify to
+    * candidates instead costs a union, a distinct, a semi-join and a
+    * second split of the candidates' text — stages that cost more time
+    * than the bytes they save at the scale the curation chain runs.
     */
   def minhashNearDupPairs(docs: DataFrame, numHashes: Int = 32,
       bands: Int = 8, maxBandFreq: Option[Long] = None): DataFrame = {
     graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     val rows = numHashes / bands
-    // ONE signature pass: the codegen minhash kernel folds shingle
-    // construction, the per-shingle md5 base hash, and all k affine
-    // minima into a single per-row call (the interpreted HOF stack it
-    // replaces re-ran the regex split per shingle — ~50× slower,
-    // measured). LEAN signatures — shingle arrays are NOT retained
-    // past the scan stage, so the band explode, the candidate
-    // self-join, and the pair distinct all move (doc_id, band-tuple)
-    // longs only; the verify re-shingles CANDIDATE docs from a
-    // semi-join-pruned second fetch instead of dragging every
-    // document's shingle array through the exchanges
-    val sigs = docs
+    // two-step projection: materialize the words array, THEN sign and
+    // shingle it, so neither kernel re-runs the split
+    val feats = spreadForKernel(docs
       .select(col("doc_id"), TF.words(col("text")).as("w"))
       .select(col("doc_id"),
-        TF.minhashSigWords(col("w"), 3, numHashes).as("sig"))
-    val banded = sigs.select(
+        TF.minhashSigWords(col("w"), 3, numHashes).as("sig"),
+        TF.shingleSet(col("w"), 3).as("sh")), "doc_id")
+    val banded = feats.select(
       col("doc_id"), explode(TF.bandTuples(col("sig"), bands, rows)).as("bk"))
     // HOT-BAND CAP (opt-in, standard LSH practice): a corpus-frequent
     // shingle set — boilerplate headers/footers shared by MILLIONS of
@@ -224,26 +239,13 @@ object Dedup {
         col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    // candidate ids come FROM the pair frame (both orientations), so
-    // the band self-join runs once — its exchange is shared with the
-    // verify via ReusedExchange instead of a second lean band join
-    val candIds = pairs.select(col("id_a").as("doc_id"))
-      .unionByName(pairs.select(col("id_b").as("doc_id")))
-      .distinct()
-    // two-step projection: materialize the words array, THEN shingle —
-    // keeps the regex split out of the per-element lambda. Candidate
-    // frames feed compute-dense kernels (the re-shingle here, the
-    // Jaccard verify below) — parallelism pinned, or AQE's byte-based
-    // coalescing serializes both stages ([[spreadForKernel]])
-    val candSh = spreadForKernel(
-      docs.join(candIds, Seq("doc_id"), "left_semi"), "doc_id")
-      .select(col("doc_id"), TF.words(col("text")).as("w"))
-      .select(col("doc_id"), TF.shinglesFromWords(col("w"), 3).as("shingles"))
+    // the verify is compute-dense on a byte-tiny pair frame — its
+    // parallelism is pinned too, or AQE coalescing serializes it
     spreadForKernel(pairs, "id_a")
-      .join(candSh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .join(candSh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b")
+      .join(feats.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(feats.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        TF.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+        TF.sortedJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
   }
 
   /** The near-dup ACTION twin of [[exactKeep]]: every document with a
@@ -654,7 +656,7 @@ object Dedup {
     // the caller's drop election and the shingle kernel
     val repSh = org.apache.spark.sql.GraftInternal.pinRecomputable(reps
       .select(col("doc_id"), TF.words(col("text")).as("w"))
-      .select(col("doc_id"), TF.shinglesFromWords(col("w"), 3).as("shingles")))
+      .select(col("doc_id"), TF.shingleSet(col("w"), 3).as("shingles")))
     val bandsRaw = MinhashIndexStore.bandRows(reps)
     val deltaBands =
       if (shared) org.apache.spark.sql.GraftInternal.pinRecomputable(bandsRaw)
@@ -679,7 +681,7 @@ object Dedup {
       .join(broadcast(repSh.select(col("doc_id").as("id_b"),
         col("shingles").as("sh_b"))), "id_b")
       .select(col("id_a"), col("id_b"),
-        TF.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+        TF.sortedJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
     val internalOut =
       if (shared) org.apache.spark.sql.GraftInternal.pinRecomputable(internalRaw)
       else internalRaw
@@ -847,7 +849,7 @@ object Dedup {
         Seq("doc_id"), "left_semi"), "doc_id")
       .select(col("doc_id"), TF.words(col("text")).as("w"))
       .select(col("doc_id").as("crep"),
-        TF.shinglesFromWords(col("w"), 3).as("shingles"))
+        TF.shingleSet(col("w"), 3).as("shingles"))
     // cross verify at (delta rep × distinct stored text) grain —
     // PINNED so the verify provably stays at rep grain: left lazy,
     // the optimizer reorders the expansion join below the jaccard
@@ -861,7 +863,7 @@ object Dedup {
           col("shingles").as("sh_a")), "delta_id")
         .join(crepSh.select(col("crep"), col("shingles").as("sh_b")), "crep")
         .select(col("delta_id"), col("crep"),
-          TF.jaccard(col("sh_a"), col("sh_b")).as("jaccard")))
+          TF.sortedJaccard(col("sh_a"), col("sh_b")).as("jaccard")))
     // … expanded back to raw id pairs: copies of one text share their
     // band rows, so a (delta, text) collision pairs the delta rep with
     // every candidate copy of that text — exactly the raw band join's
@@ -1002,8 +1004,7 @@ object Dedup {
     val repDocs = docs.filter(col("text").isNotNull)
       .join(grpSizes.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
     graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
-    // LEAN signature pin (the minhashNearDupPairs discipline, applied
-    // to the char-gram family): the pinned frame carries ids + the
+    // LEAN signature pin: the pinned frame carries ids + the
     // 64-hash signature ONLY — the banded self-join and the pair
     // distinct move signature longs, never gram arrays. The old form
     // pinned the sorted-distinct gram SET for every rep alongside the
@@ -1100,23 +1101,32 @@ object Dedup {
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
         .distinct())
-    // size-adaptive parallelism: near-dup graphs are usually tiny next
-    // to the corpus — iterate single-task when small, distributed when not
-    val nEdges = symRaw.count()
     // adaptive: a bounded-size graph (≤1M directed edges, the usual
     // case — near-dup graphs are tiny next to the corpus) solves in
     // one driver-side union-find pass instead of paying per-iteration
-    // job overhead; larger graphs take the distributed loop below
-    // local fast path requires long node ids (union-find keys); other
-    // comparable types fall through to the generic distributed loop
+    // job overhead; larger graphs take the distributed loop below.
+    // One bounded collect both sizes the graph and fetches it: more
+    // than `localThreshold` rows back means "too big for the driver".
+    // The local fast path requires long node ids (union-find keys);
+    // other comparable types fall through to the generic distributed
+    // loop
     val longIds = symRaw.schema("src").dataType ==
       org.apache.spark.sql.types.LongType
-    // the driver-built answer reads nothing of the pinned edge list,
-    // so the local path releases it; the distributed loop's result
-    // lineage reads its pins and keeps them
-    if (longIds && nEdges <= localThreshold)
-      return try unionFindLocal(symRaw)
-        finally org.apache.spark.sql.GraftInternal.unpin(symRaw)
+    if (longIds) {
+      val spark = symRaw.sparkSession
+      import spark.implicits._
+      val bounded = symRaw
+        .limit(math.min(localThreshold, Int.MaxValue - 1L).toInt + 1)
+        .as[(Long, Long)].collect()
+      // the driver-built answer reads nothing of the pinned edge list,
+      // so the local path releases it; the distributed loop's result
+      // lineage reads its pins and keeps them
+      if (bounded.length <= localThreshold)
+        return try unionFindLocal(spark, bounded)
+          finally org.apache.spark.sql.GraftInternal.unpin(symRaw)
+    }
+    // size-adaptive parallelism for the distributed loop
+    val nEdges = symRaw.count()
     val parts = math.max(1L, math.min(
       symRaw.sparkSession.sessionState.conf.numShufflePartitions.toLong,
       nEdges / 500000L + 1L)).toInt
@@ -1276,8 +1286,8 @@ object Dedup {
     * O(E α(E)), path compression + union by min — component = minimum
     * node id, matching the distributed loop's labeling exactly.
     */
-  private def unionFindLocal(sym: DataFrame): DataFrame = {
-    val spark = sym.sparkSession
+  private def unionFindLocal(spark: org.apache.spark.sql.SparkSession,
+      edges: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
@@ -1289,8 +1299,6 @@ object Dedup {
       }
       r
     }
-    val edges = sym.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].collect()
     edges.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { // union by smaller root so component = min id

@@ -200,7 +200,9 @@ object GraftFunctions {
       SimHashFunctions.descriptor, ShingleHashFunctions.descriptor,
       MinhashSigFunctions.descriptor, CharMinhashSigFunctions.descriptor,
       SortedIntersectFunctions.descriptor,
-      SortedCommonCountFunctions.descriptor)
+      SortedCommonCountFunctions.descriptor,
+      ShingleJaccardFunctions.shingleSetDescriptor,
+      ShingleJaccardFunctions.sortedJaccardDescriptor)
 
   /** Every optimizer rule graft installs, on either path. */
   val rules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
@@ -213,10 +215,14 @@ object GraftFunctions {
       if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
     }
     // caller-provided sessions can't take injectOptimizerRule after the
-    // fact; experimental.extraOptimizations is the supported late hook
-    val extra = spark.experimental.extraOptimizations
-    val missing = rules.filterNot(extra.contains)
+    // fact; experimental.extraOptimizations is the supported late hook.
+    // A session built with GraftExtensions already runs the rules in its
+    // operator-optimization batches — appending them again would run
+    // each rule a second (and third) time per plan
+    val held = spark.sessionState.optimizer.batches.flatMap(_.rules).toSet
+    val missing = rules.filterNot(held.contains)
     if (missing.nonEmpty)
-      spark.experimental.extraOptimizations = extra ++ missing
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations ++ missing
   }
 }

@@ -32,9 +32,6 @@ object Profile {
     if (sys.env.get("SPARK_GRAFT_PROFILE").contains("reappend")) {
       reappendAnatomy(spark, dir); spark.stop(); return
     }
-    if (sys.env.get("SPARK_GRAFT_PROFILE").contains("pairs")) {
-      pairsAnatomy(spark, dir); spark.stop(); return
-    }
     if (sys.env.get("SPARK_GRAFT_PROFILE").contains("kbstream")) {
       keepBestStreamAnatomy(spark, dir); spark.stop(); return
     }
@@ -71,56 +68,6 @@ object Profile {
         l.contains("Window"))
       .foreach(l => println("[prof]   " + l.trim.take(150)))
     spark.stop()
-  }
-
-  /** `SPARK_GRAFT_PROFILE=pairs`: stage split of the banded
-    * [[Dedup.minhashNearDupPairs]] pass over the canonical corpus —
-    * the hot kernel shared by dedup_keep_best / dedup_minhash_keep /
-    * pipeline_corpus / the keep-best stream (r18: 5.8 s of the 5.9 s
-    * scored action). Where does it go: signature kernel, band
-    * self-join + distinct, candidate shingle fetch, verify joins?
-    */
-  private def pairsAnatomy(spark: SparkSession, dir: String): Unit = {
-    import graft.functions.{TextFunctions => TF}
-    def time(label: String)(df: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      df.select(xxhash64(struct(col("*"))).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
-      println(f"[prof] $label%-44s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
-    graft.plans.GraftFunctions.ensureRegistered(spark)
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val hashable = docs.filter(col("text").isNotNull)
-    val canonIds = Dedup.exact(hashable).select(col("keep_id").as("doc_id"))
-      .persist()
-    val canonDocs = hashable.join(canonIds, Seq("doc_id"), "left_semi")
-    time("warmup: canon ids")(canonIds)
-    val sigs = canonDocs
-      .select(col("doc_id"), TF.words(col("text")).as("w"))
-      .select(col("doc_id"), TF.minhashSigWords(col("w"), 3, 32).as("sig"))
-    time("signature kernel (32 hashes)")(sigs.select(col("doc_id"),
-      size(col("sig")).as("n")))
-    val banded = sigs.select(
-      col("doc_id"), explode(TF.bandTuples(col("sig"), 8, 4)).as("bk"))
-    time("banded explode")(banded.select(col("doc_id"), col("bk.band")))
-    val pairs = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    time("band self-join + distinct (2 sig passes)")(pairs)
-    val candIds = pairs.select(col("id_a").as("doc_id"))
-      .unionByName(pairs.select(col("id_b").as("doc_id")))
-      .distinct()
-    val candSh = docs.join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), TF.words(col("text")).as("w"))
-      .select(col("doc_id"), TF.shinglesFromWords(col("w"), 3).as("shingles"))
-    time("candidate shingles")(candSh.select(col("doc_id"),
-      size(col("shingles")).as("n")))
-    time("FULL verified pairs")(
-      Dedup.minhashNearDupPairs(canonDocs).filter(col("jaccard") >= 0.5))
-    time("FULL rep 2")(
-      Dedup.minhashNearDupPairs(canonDocs).filter(col("jaccard") >= 0.5))
   }
 
   /** `SPARK_GRAFT_PROFILE=reappend`: step anatomy of the
@@ -453,19 +400,19 @@ object Profile {
         Seq("doc_id"), "left_semi")
       .select(col("doc_id"), TF.words(col("text")).as("w"))
       .select(col("doc_id").as("crep"),
-        TF.shinglesFromWords(col("w"), 3).as("shingles"))
+        TF.shingleSet(col("w"), 3).as("shingles"))
     time("crep shingles")(crepSh.select(col("crep"),
       size(col("shingles")).as("n")))
     val repSh = reps
       .select(col("doc_id"), TF.words(col("text")).as("w"))
-      .select(col("doc_id"), TF.shinglesFromWords(col("w"), 3).as("shingles"))
+      .select(col("doc_id"), TF.shingleSet(col("w"), 3).as("shingles"))
     val crossRep = candCorpus.join(candMap, Seq("stored_id"))
       .select(col("delta_id"), col("crep")).distinct()
       .join(repSh.select(col("doc_id").as("delta_id"),
         col("shingles").as("sh_a")), "delta_id")
       .join(crepSh.select(col("crep"), col("shingles").as("sh_b")), "crep")
       .select(col("delta_id"), col("crep"),
-        TF.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+        TF.sortedJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
     time("crossRep verify")(crossRep)
     val crossOut = crossRep.join(candMap, Seq("crep"))
       .select(least(col("delta_id"), col("stored_id")).as("id_a"),

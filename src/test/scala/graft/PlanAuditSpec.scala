@@ -551,6 +551,11 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(shingleBuilds <= 2, s"shingle-string builds $shingleBuilds\n$p")
     // the exact-collapse groupBy is computed once and reused
     assert(fin.contains("ReusedExchange"), p)
+    // one feature pass builds every shingle set, and the verify is the
+    // sorted-set merge, never the hash-set builtins
+    val shingleSets = "graft_shingle_set".r.findAllIn(fin).length
+    assert(shingleSets == 1, s"shingle-set kernel count $shingleSets\n$p")
+    assert(!fin.contains("array_intersect") && !fin.contains("array_union"), p)
   }
 
   test("keep-best action: argmax window partitions by component, never the corpus grain") {
