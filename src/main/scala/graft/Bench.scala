@@ -1,4 +1,5 @@
 package graft
+import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, struct, xxhash64}
 object Bench {
@@ -37,7 +38,7 @@ object Bench {
     // numbers reflect steady state rather than first-query JIT cost
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
+      Tables.read(spark, s"$sfDir/region.parquet").count()
       SparkEntry.queries.get("raw_ingest").foreach(fn => fn(spark, sfDir).count())
     } catch { case _: Throwable => () }
     // best-of-N per query (default 2): a single cold pass makes the

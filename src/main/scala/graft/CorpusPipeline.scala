@@ -65,7 +65,7 @@ object CorpusPipeline {
       outDir: String): Seq[(String, () => Long)] = {
     val docs = Tables.documents(spark, srcDir)
     val w = outDir.stripSuffix("/")
-    def read(t: String) = spark.read.parquet(s"$w/$t")
+    def read(t: String) = Tables.read(spark, s"$w/$t")
     Seq(
       "corpus_quality" -> (() =>
         overwrite(CorpusStats.gopherQuality(docs), s"$w/corpus_quality")),
@@ -133,7 +133,7 @@ object CorpusPipeline {
     */
   def curationSummary(spark: SparkSession, outDir: String): DataFrame = {
     val w = outDir.stripSuffix("/")
-    def read(t: String) = spark.read.parquet(s"$w/$t")
+    def read(t: String) = Tables.read(spark, s"$w/$t")
     def row(stage: String, df: DataFrame, valSum: org.apache.spark.sql.Column): DataFrame =
       df.agg(count(lit(1)).as("n_docs"),
           coalesce(sum(col("doc_id")), lit(0L)).cast("long").as("id_sum"),

@@ -92,10 +92,11 @@ object Pipeline {
       phases.flatMap { names =>
         if (names.size == 1) Seq(timed(names.head)(stageMap(names.head)()))
         else {
-          // materialize the shared view join once before the view fan-
-          // out, so four concurrent first-readers don't race to fill
-          // the same cache partitions with duplicate work
-          if (names.head.startsWith("view")) { jf.count(); () }
+          // the four views share the persisted view join (jf) with no
+          // count beforehand: concurrent readers of a block not yet
+          // cached wait on Spark's block write lock while the first
+          // reader computes it, so no work is duplicated, and a count
+          // first would only add a serial round to the load
           val pool = java.util.concurrent.Executors
             .newFixedThreadPool(names.size)
           implicit val ec: scala.concurrent.ExecutionContext =
@@ -171,20 +172,22 @@ object Pipeline {
       "f_events" -> (() => {
         // d_event is one row per event — fact-sized, so this is a
         // shuffle join on the key, NOT a broadcast
-        val dEvent = spark.read.parquet(s"$w/d_event")
+        val dEvent = Tables.read(spark, s"$w/d_event")
+        // partition date derives from the immutable event time, so a
+        // drop only ever touches its own dates — the precondition
+        // that makes the partition-scoped MERGE exact
+        val eventDate = org.apache.spark.sql.functions.to_date(
+          org.apache.spark.sql.functions.col("event_time"))
         val withGuid = StarSchema.fEventsFlatPrepped(prepped)
           .join(dEvent, Seq("event_id"))
-          // partition date derives from the immutable event time, so a
-          // drop only ever touches its own dates — the precondition
-          // that makes the partition-scoped MERGE exact
-          .withColumn("event_date",
-            org.apache.spark.sql.functions.to_date(
-              org.apache.spark.sql.functions.col("event_time")))
+          .withColumn("event_date", eventDate)
         // PARTITION-SCOPED merge: only the drop's event dates are
         // read or rewritten; at 100 TB the stage cost scales with the
         // DROP, not the warehouse (a full-table stage-and-swap here
-        // rewrote the entire fact per daily load)
+        // rewrote the entire fact per daily load). The dates come from
+        // the pinned drop, so the d_event join runs once, in the write.
         Sinks.mergeFactByDate(spark, s"$w/f_events", withGuid,
+          prepped.select(eventDate.as("event_date")),
           Seq("event_id", "event_parameter_name", "event_parameter_value"),
           Seq("event_time", "event_user_id", "event_name", "event_value", "guid_event"))
       }),
@@ -215,7 +218,7 @@ object Pipeline {
   def warehouseSummary(spark: SparkSession, warehouseDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val w = warehouseDir.stripSuffix("/")
-    def read(t: String) = spark.read.parquet(s"$w/$t")
+    def read(t: String) = Tables.read(spark, s"$w/$t")
     def row(tbl: String, df: DataFrame, nKeys: Column, keySum: Column,
         valSum: Column): DataFrame =
       df.agg(count(lit(1)).as("n_rows"), nKeys.cast("long").as("n_keys"),

@@ -38,7 +38,7 @@ object MergeInto {
     * `<=>` join semantics). Lazy — costs one shuffle of the delta,
     * nothing on the driver.
     */
-  private[operators] def requireUniqueKeys(delta: DataFrame, keys: Seq[String]): DataFrame = {
+  private[graft] def requireUniqueKeys(delta: DataFrame, keys: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
     delta
       .withColumn("__key_dups", count(lit(1)).over(w))

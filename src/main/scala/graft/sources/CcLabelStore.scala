@@ -35,5 +35,5 @@ object CcLabelStore {
     })
 
   def labelsTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/labels")
+    Tables.read(spark, s"$path/labels")
 }

@@ -320,14 +320,14 @@ object FrameSigIndexStore {
   private def foldedSizes(spark: SparkSession, path: String,
       excludeBatch: Option[Long],
       excludeTakedown: Option[Long] = None): DataFrame = {
-    val raw = spark.read.parquet(s"$path/sizes")
+    val raw = Tables.read(spark, s"$path/sizes")
     val base = excludeBatch.fold(raw)(b => raw.filter(col("batch") =!= b))
       .drop("batch")
       .select(col("doc_id"), col("n_copies").cast("long").as("n_copies"))
     val folded =
       if (index.has(spark, path, "sizes_deltas"))
         base.unionByName(
-            spark.read.parquet(s"$path/sizes_deltas")
+            Tables.read(spark, s"$path/sizes_deltas")
               .filter(excludeTakedown.fold(lit(true))(col("takedown") =!= _))
               .select(col("doc_id"),
                 col("n_copies").cast("long").as("n_copies")))

@@ -112,7 +112,7 @@ object GramStore {
     * the payload is d + d² doubles — data-size independent.
     */
   def moments(spark: SparkSession, path: String): (Long, Array[Double], Array[Double]) = {
-    val rows = spark.read.parquet(s"$path/moments")
+    val rows = Tables.read(spark, s"$path/moments")
       .select(col("n"), col("s"), col("ss")).collect()
     require(rows.nonEmpty, s"empty gram store at $path")
     val d = rows.head.getSeq[Double](1).length

@@ -149,7 +149,7 @@ object IvfIndexStore {
       val labeled = assignStored(delta, centroidsTable(spark, path))
         .select(col("vec_id"), col("embedding"), col("cell"))
       Seq("cells" -> labeled,
-        "codes" -> codeRows(labeled, spark.read.parquet(s"$path/grid")))
+        "codes" -> codeRows(labeled, Tables.read(spark, s"$path/grid")))
     }
 
   /** Memoized build-then-append lifecycle for the rollover gate: train
@@ -315,7 +315,7 @@ object IvfIndexStore {
     index.ensureDeleted(removed, path)(build(corpus, path, cells, iters))
 
   def centroidsTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/centroids")
+    Tables.read(spark, s"$path/centroids")
       .withColumn("cell", col("cell").cast("long"))
 
   /** Serve top-k from the STORED index: no training in the plan — the
@@ -343,7 +343,7 @@ object IvfIndexStore {
     graft.plans.GraftFunctions.ensureRegistered(spark)
     val probed = Similarity.probeCells(centroidsTable(spark, path),
       probeRows, nprobe)
-    val gridRow = spark_grid(spark.read.parquet(s"$path/grid"))
+    val gridRow = spark_grid(Tables.read(spark, s"$path/grid"))
     val codes = index.table(spark, path, "codes")
     val recon = zip_with(col("codes"), col("ms"), (c, m) => {
       val step = (m.getField("mx") - m.getField("mn")) / 255d

@@ -95,7 +95,7 @@ object MixtureStore {
     * back to zero) leave the datasheet.
     */
   def slices(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/slices")
+    Tables.read(spark, s"$path/slices")
       .groupBy(col("lang"), col("source"))
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"))

@@ -127,7 +127,7 @@ object NbModelStore {
     * (fully retracted) leave the vocabulary.
     */
   def counts(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/counts")
+    Tables.read(spark, s"$path/counts")
       .groupBy(col("token")).agg(
         sum(col("cnt_pos")).as("cnt_pos"),
         sum(col("cnt_neg")).as("cnt_neg"))
@@ -144,7 +144,7 @@ object NbModelStore {
     * [[Classifier.nbPrior]]'s law over the folded doc counts.
     */
   def prior(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/doccounts")
+    Tables.read(spark, s"$path/doccounts")
       .agg(round(log(
         sum(col("n_pos")).cast("double") / sum(col("n_neg"))) * lit(10000.0))
         .cast("bigint").as("prior_e4"))
@@ -161,7 +161,7 @@ object NbModelStore {
       // byte-parity with a store that never saw the retraction
       SwapRecovery.compactSwap(spark, path, "counts")(counts(spark, path))
       SwapRecovery.compactSwap(spark, path, "doccounts")(
-        spark.read.parquet(s"$path/doccounts")
+        Tables.read(spark, s"$path/doccounts")
           .agg(sum(col("n_pos")).as("n_pos"),
             sum(col("n_neg")).as("n_neg")))
     }

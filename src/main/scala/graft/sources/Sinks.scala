@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions.{col, count, lit}
   *    dates are read or rewritten; partition pruning also turns
   *    daily/backfill reads into file skips),
   *  - read-merge-overwrite for SCD-1 dims (the dim is ≪ the fact, so
-  *    rewriting it per load is the cheap, atomic-enough option — a table
-  *    format's row-level MERGE slots in here unchanged at 100 TB),
+  *    rewriting it on a load that changes it is the cheap,
+  *    atomic-enough option — a table format's row-level MERGE slots in
+  *    here unchanged at 100 TB; a load that changes no row writes
+  *    nothing),
   *  - bucketed tables for repeated co-located joins on a hot key
   *    (both sides pre-hashed: the join plans with zero Exchange).
   *
@@ -114,16 +116,57 @@ object Sinks {
     * check, NOT a read attempt — a transient read failure must
     * surface, never silently replace the table with the delta. The
     * delta is broadcast into the merge: a dim load is ≪ the dim.
+    *
+    * A load that would change no row ([[unchangedRows]]) writes
+    * nothing: the table keeps its files and its count is returned. A
+    * daily drop that re-delivers the whole item table is that load.
     */
   def mergeDim(spark: SparkSession, path: String, delta: DataFrame,
       keys: Seq[String], updateCols: Seq[String],
       mode: MergeMode = Update): Long = {
-    val merged = if (tableExists(spark, path)) mode match {
-      case Update => MergeInto.upsert(spark.read.parquet(path), delta, keys,
-        updateCols, broadcastDelta = true)
-      case Ignore => MergeInto.insertIfAbsent(spark.read.parquet(path), delta, keys)
-    } else delta
-    commit(spark, merged, path)
+    if (!tableExists(spark, path)) return commit(spark, delta, path)
+    val stored = Tables.read(spark, path)
+    val merged = mode match {
+      case Update => MergeInto.upsert(stored, delta, keys, updateCols,
+        broadcastDelta = true)
+      case Ignore => MergeInto.insertIfAbsent(stored, delta, keys)
+    }
+    def shape(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    val unchanged =
+      if (shape(merged) != shape(stored)) None
+      else unchangedRows(stored, delta, keys, updateCols, mode)
+    unchanged.getOrElse(commit(spark, merged, path))
+  }
+
+  /** The stored row count if merging `delta` into `stored` would
+    * change no row, else None. A delta row changes the table when no
+    * stored row has its key (an insert) or, under [[Update]], when a
+    * stored row with its key differs from it in an updated column.
+    * Keys and columns compare null-safely (`<=>`), as the merge
+    * matches them. One action: a delta ⟕ stored join and the stored
+    * row count, aggregated together. Under [[Update]] the delta is
+    * key-checked first ([[MergeInto.requireUniqueKeys]]), so a
+    * repeated key raises here as it would in the merge.
+    */
+  private def unchangedRows(stored: DataFrame, delta: DataFrame,
+      keys: Seq[String], updateCols: Seq[String],
+      mode: MergeMode): Option[Long] = {
+    import org.apache.spark.sql.functions.count_if
+    val (d, compared) = mode match {
+      case Update => (MergeInto.requireUniqueKeys(delta, keys), updateCols)
+      case Ignore => (delta, Nil)
+    }
+    val t = stored.withColumn("__t_present", lit(true)).alias("t")
+    val cond = keys.map(k => col(s"s.$k") <=> col(s"t.$k")).reduce(_ && _)
+    val changed = compared.foldLeft(col("t.__t_present").isNull)((acc, c) =>
+      acc || !(col(s"s.$c") <=> col(s"t.$c")))
+    val perDeltaRow = d.alias("s").join(t, cond, "left_outer")
+      .select(changed.as("changed"), lit(false).as("stored"))
+    val perStoredRow = stored.select(lit(false).as("changed"),
+      lit(true).as("stored"))
+    val r = perDeltaRow.unionByName(perStoredRow)
+      .agg(count_if(col("changed")), count_if(col("stored"))).head()
+    if (r.getLong(0) == 0L) Some(r.getLong(1)) else None
   }
 
   /** Partition-scoped fact MERGE — the 100 TB load path: rewrite ONLY
@@ -139,9 +182,12 @@ object Sinks {
     * — is immutable, so a drop (on-time or late) can only create or
     * update rows WITHIN its own event dates. Mechanics per load:
     *
-    *  1. the delta's touched date set (a distinct-collect bounded by
-    *     the drop's calendar span — single-digit rows for a daily
-    *     feed, never data-sized),
+    *  1. the touched date set, collected from `dates` — a frame whose
+    *     `dateCol` holds the drop's dates (a distinct-collect bounded
+    *     by the drop's calendar span — single-digit rows for a daily
+    *     feed, never data-sized). The caller passes the drop itself,
+    *     not the delta: the delta usually joins a dim, and collecting
+    *     its dates would run that join once more than the write does,
     *  2. a pruned read of the stored fact: `date ∈ touched` is a
     *     PARTITION filter, so untouched dates are eliminated in the
     *     file manifest and never scanned,
@@ -150,7 +196,9 @@ object Sinks {
     *  4. stage-and-swap of ONLY the touched `date=...` directories,
     *     each through a crash-safe backup parked OUTSIDE the table
     *     root (`<path>.pbackup/` — a backup inside the root would be
-    *     picked up by partition discovery during the crash window).
+    *     picked up by partition discovery during the crash window). A
+    *     declared date that neither the delta nor the table holds
+    *     stages nothing and is skipped.
     *
     * PRECONDITION (holds for the fact by construction): the merge key
     * determines the partition date — a key's stored row lives in the
@@ -158,47 +206,43 @@ object Sinks {
     * dates would leave its old row in an untouched partition; that
     * cannot happen when the date derives from an immutable event time.
     * NULL dates are rejected in-plan (they would silently land in a
-    * default partition).
+    * default partition), and so is a delta row dated outside the
+    * declared set (it would be staged and never swapped in).
     *
     * Returns the WHOLE table's row count after the load (a count of
     * the live table), not the drop's: a re-run of the same
     * drop must report the same number.
     */
   def mergeFactByDate(spark: SparkSession, path: String, delta: DataFrame,
-      keys: Seq[String], updateCols: Seq[String],
+      dates: DataFrame, keys: Seq[String], updateCols: Seq[String],
       dateCol: String = "event_date"): Long = {
-    import org.apache.spark.sql.functions.{raise_error, when}
     recoverPartitionSwaps(spark, path)
-    val d = delta.filter(
-      when(col(dateCol).isNull,
-        raise_error(lit(s"mergeFactByDate: NULL $dateCol in delta — " +
-          "rows would land in a default partition"))).otherwise(lit(true)))
-    if (!tableExists(spark, path)) {
-      val nDates = d.select(col(dateCol)).distinct().count()
-      clusterByDate(d, dateCol, nDates)
-        .write.partitionBy(dateCol).parquet(path + ".staging")
+    val fresh = !tableExists(spark, path)
+    val (merged, touched) = factMergeFrames(spark, path, delta, dates, keys,
+      updateCols, dateCol)
+    val clustered = clusterByDate(merged, dateCol, touched.size.toLong)
+    if (fresh) {
+      clustered.write.partitionBy(dateCol).parquet(path + ".staging")
       swapInto(spark, path + ".staging", path)
     } else {
-      val (merged, touched) = factMergeFrames(spark, path, d, keys,
-        updateCols, dateCol)
       val staging = new Path(path + ".staging_parts")
       val fs = fsOf(spark, staging)
       fs.delete(staging, true)
-      clusterByDate(merged, dateCol, touched.size.toLong)
-        .write.mode(SaveMode.Overwrite).partitionBy(dateCol)
+      clustered.write.mode(SaveMode.Overwrite).partitionBy(dateCol)
         .parquet(staging.toString)
       val backupRoot = new Path(path + ".pbackup")
       touched.foreach { v =>
         val dirName = s"$dateCol=$v"
-        swap(fs, new Path(staging, dirName), new Path(path, dirName),
-          new Path(backupRoot, dirName))
+        val staged = new Path(staging, dirName)
+        if (fs.exists(staged))
+          swap(fs, staged, new Path(path, dirName), new Path(backupRoot, dirName))
       }
       fs.delete(staging, true)
       // all swaps landed → the backup root is empty scaffolding
       if (fs.exists(backupRoot) && fs.listStatus(backupRoot).isEmpty)
         fs.delete(backupRoot, true)
     }
-    spark.read.parquet(path).count()
+    Tables.read(spark, path).count()
   }
 
   /** Cluster rows by their date partition (plus a hash salt that
@@ -231,19 +275,32 @@ object Sinks {
 
   /** The pruned-merge plan [[mergeFactByDate]] executes, exposed for
     * the plan audit: (merged frame over ONLY the touched partitions,
-    * touched date values). The fact scan inside `merged` must carry
-    * `dateCol IN touched` as a partition filter — the audit asserts
-    * untouched partitions are pruned from the file manifest.
+    * touched date values collected from `dates`). The fact scan inside
+    * `merged` must carry `dateCol IN touched` as a partition filter —
+    * the audit asserts untouched partitions are pruned from the file
+    * manifest. With no stored table the merged frame is the checked
+    * delta itself.
     */
   private[graft] def factMergeFrames(spark: SparkSession, path: String,
-      delta: DataFrame, keys: Seq[String], updateCols: Seq[String],
-      dateCol: String): (DataFrame, Seq[Any]) = {
-    val touched = delta.select(col(dateCol)).distinct()
+      delta: DataFrame, dates: DataFrame, keys: Seq[String],
+      updateCols: Seq[String], dateCol: String): (DataFrame, Seq[Any]) = {
+    import org.apache.spark.sql.functions.{raise_error, when}
+    val touched = dates.select(col(dateCol)).distinct()
       .collect().map(_.get(0)).toSeq
-    val storedTouched = spark.read.parquet(path)
-      .filter(col(dateCol).isin(touched: _*))
-    (MergeInto.upsert(storedTouched, delta, keys, updateCols,
-      broadcastDelta = false), touched)
+    val checked = delta.filter(
+      when(col(dateCol).isNull,
+        raise_error(lit(s"mergeFactByDate: NULL $dateCol in delta — " +
+          "rows would land in a default partition")))
+      .when(!col(dateCol).isin(touched: _*),
+        raise_error(lit(s"mergeFactByDate: $dateCol outside the declared " +
+          "dates — rows would be staged and never swapped in")))
+      .otherwise(lit(true)))
+    val merged =
+      if (!tableExists(spark, path)) checked
+      else MergeInto.upsert(
+        Tables.read(spark, path).filter(col(dateCol).isin(touched: _*)),
+        checked, keys, updateCols, broadcastDelta = false)
+    (merged, touched)
   }
 
   /** If a previous partition swap crashed between its renames, the
@@ -271,7 +328,7 @@ object Sinks {
     import org.apache.spark.sql.functions.max
     val fresh = deltaKeys.select(col(keyCol)).distinct()
     val merged = if (tableExists(spark, path)) {
-      val stored = spark.read.parquet(path)
+      val stored = Tables.read(spark, path)
       // null-safe anti join: a plain equi-anti never matches NULL, so a
       // NULL natural key would be re-inserted with a fresh surrogate on
       // every incremental load
@@ -308,7 +365,7 @@ object Sinks {
       keys: Seq[String], tracked: Seq[String],
       loadDate: org.apache.spark.sql.Column): Long = {
     val merged = if (tableExists(spark, path))
-      graft.operators.Scd2.merge(spark.read.parquet(path), delta, keys,
+      graft.operators.Scd2.merge(Tables.read(spark, path), delta, keys,
         tracked, loadDate)
     else graft.operators.Scd2.init(delta, keys, loadDate)
     commit(spark, merged, path)
@@ -320,7 +377,7 @@ object Sinks {
     */
   def compact(spark: SparkSession, path: String, rowsPerFile: Long): Long = {
     require(tableExists(spark, path), s"no table at $path") // also recovers backups
-    val df = spark.read.parquet(path)
+    val df = Tables.read(spark, path)
     val rows = df.count()
     val files = math.max(1L, (rows + rowsPerFile - 1) / rowsPerFile).toInt
     df.repartition(files).write.mode(SaveMode.Overwrite).parquet(path + ".compacting")
@@ -367,7 +424,7 @@ object Sinks {
     * from directory values).
     */
   def readScd2(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.read(spark, path)
       .withColumn(graft.operators.Scd2.CurrentCol,
         col(graft.operators.Scd2.CurrentCol).cast("boolean"))
       .withColumn(graft.operators.Scd2.CloseYearCol,

@@ -70,7 +70,7 @@ object SketchStore {
     * is VALIDATED against it, never trusted.
     */
   def storedK(spark: SparkSession, path: String): Int = {
-    val ks = spark.read.parquet(s"$path/sketch")
+    val ks = Tables.read(spark, s"$path/sketch")
       .select(col("k")).distinct().collect().map(_.getInt(0)).sorted
     require(ks.length == 1,
       s"sketch store at $path holds layers with mixed k ${ks.mkString(",")} " +
@@ -162,7 +162,7 @@ object SketchStore {
     */
   private def foldedAt(spark: SparkSession, path: String,
       kk: Int): DataFrame = {
-    val layers = spark.read.parquet(s"$path/sketch")
+    val layers = Tables.read(spark, s"$path/sketch")
     val union = layers
       .select(col("lang"), explode(col("hs")).as("h")).distinct()
     val w = Window.partitionBy(col("lang")).orderBy(col("h"))

@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.types._
 
 /** Schema'd table loaders.
@@ -10,13 +12,55 @@ import org.apache.spark.sql.types._
   * (reference: astro-sdk-tutorial/dags/etl_s3_snowflake_raw_event_ingest.py:30,
   * etl_s3_snowflake_d_item.py:20). Here the same surface is a schema'd
   * `spark.read` — parquet for the driver testdata, CSV with an explicit
-  * schema for raw drops. Explicit schemas (never `inferSchema`) so a
-  * 100 TB ingest does not pay a sampling pass and cannot drift types.
+  * schema for raw drops. Every read states its schema up front: CSV
+  * drops carry a declared one (never `inferSchema`, so a 100 TB ingest
+  * does not pay a sampling pass and cannot drift types), and parquet
+  * tables pass the schema of their own footer ([[read]]).
   */
 object Tables {
 
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    * Inference launches a one-task Spark job that opens one data file's
+    * footer — the first by path among the root's files, or within the
+    * `k=v` partition directories. This reads that same footer on the
+    * driver and hands the schema to the reader; partition columns are
+    * still discovered from the directory names, so the frame's schema
+    * is the inferred one. A path with no data file there (missing,
+    * empty, or holding parquet summary files) is read the inferring
+    * way, with its own errors.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the first file in full-path order: a directory's files sort as
+    // if its name ended in "/", so this walk meets them in that order
+    def firstFile(children: Array[FileStatus]): Option[FileStatus] =
+      children
+        .filter(st => GraftParquet.listed(st.getPath.getName) &&
+          (st.isDirectory && st.getPath.getName.contains("=") ||
+            st.isFile && !GraftParquet.summary(st.getPath.getName)))
+        .sortBy(st => st.getPath.getName + (if (st.isDirectory) "/" else ""))
+        .iterator
+        .flatMap(st =>
+          if (st.isFile) Some(st) else firstFile(fs.listStatus(st.getPath)))
+        .nextOption()
+    val first = scala.util.Try(fs.getFileStatus(root)).toOption.flatMap { st =>
+      if (st.isFile) Some(st)
+      else {
+        val children = fs.listStatus(root)
+        if (children.exists(c => GraftParquet.summary(c.getPath.getName))) None
+        else firstFile(children)
+      }
+    }
+    first match {
+      case Some(f) =>
+        spark.read.schema(GraftParquet.footerSchema(spark, f)).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -59,7 +59,7 @@ private[sources] final class TombstonedLayers(name: String,
   def table(spark: SparkSession, path: String,
       layerName: String = primary.name,
       excluding: Option[Long] = None): DataFrame = {
-    val raw = spark.read.parquet(s"$path/$layerName")
+    val raw = Tables.read(spark, s"$path/$layerName")
     mask(spark, path, layer(layerName).cast(
       excluding.fold(raw)(b => raw.filter(col("batch") =!= b)).drop("batch")))
   }
@@ -83,7 +83,7 @@ private[sources] final class TombstonedLayers(name: String,
 
   private def liveIds(spark: SparkSession, path: String,
       present: Seq[Layer]): DataFrame =
-    present.map(l => spark.read.parquet(s"$path/${l.name}").select(col(idCol)))
+    present.map(l => Tables.read(spark, s"$path/${l.name}").select(col(idCol)))
       .reduce(_ unionByName _)
 
   /** Fold outstanding tombstones into the files: every present layer is
@@ -123,7 +123,7 @@ private[sources] final class TombstonedLayers(name: String,
                 val keyedLayer = StoreLayout.isKeyed(spark, path, l.name)
                 val parts = if (keyedLayer) "batch" +: l.partCols else l.partCols
                 swap(spark, path, l.name) { staged =>
-                  writer(l.cast(spark.read.parquet(s"$path/${l.name}"))
+                  writer(l.cast(Tables.read(spark, s"$path/${l.name}"))
                       .join(broadcast(purgeSet), Seq(idCol), "left_anti"), parts)
                     .mode(SaveMode.Overwrite).parquet(staged)
                 }

@@ -70,7 +70,7 @@ private[sources] object Tombstones {
     val spark = ids.sparkSession
     val next =
       if (exists(spark, path)) {
-        val row = spark.read.parquet(s"$path/tombstones")
+        val row = Tables.read(spark, s"$path/tombstones")
           .agg(max(col("seq"))).first()
         (if (row.isNullAt(0)) 0L else row.getLong(0)) + 1L
       } else 1L
@@ -85,12 +85,12 @@ private[sources] object Tombstones {
     * resurrecting rows).
     */
   def all(spark: SparkSession, path: String, idCol: String): DataFrame =
-    spark.read.parquet(s"$path/tombstones").select(col(idCol)).distinct()
+    Tables.read(spark, s"$path/tombstones").select(col(idCol)).distinct()
 
   /** Every retracted id with its CURRENT epoch (max seq). */
   def allWithSeq(spark: SparkSession, path: String,
       idCol: String): DataFrame =
-    spark.read.parquet(s"$path/tombstones")
+    Tables.read(spark, s"$path/tombstones")
       .groupBy(col(idCol)).agg(max(col("seq")).as("seq"))
 
   /** The serve mask with epochs: ids whose latest tombstone is NOT yet
@@ -100,7 +100,7 @@ private[sources] object Tombstones {
       idCol: String): DataFrame = {
     val t = allWithSeq(spark, path, idCol)
     if (ledgerExists(spark, path, "tombstones_expired")) {
-      val e = spark.read.parquet(s"$path/tombstones_expired")
+      val e = Tables.read(spark, s"$path/tombstones_expired")
         .groupBy(col(idCol)).agg(max(col("seq")).as("eseq"))
       t.join(e, Seq(idCol), "left_outer")
         .filter(col("eseq").isNull || col("seq") > col("eseq"))
@@ -135,7 +135,7 @@ private[sources] object Tombstones {
     */
   def purged(spark: SparkSession, path: String, idCol: String): DataFrame =
     if (ledgerExists(spark, path, "tombstones_purged"))
-      spark.read.parquet(s"$path/tombstones_purged")
+      Tables.read(spark, s"$path/tombstones_purged")
         .groupBy(col(idCol)).agg(max(col("seq")).as("pseq"))
     else
       allWithSeq(spark, path, idCol).limit(0)

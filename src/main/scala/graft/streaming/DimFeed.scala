@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.Sinks
+import graft.sources.{Sinks, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -66,7 +66,7 @@ object DimFeed {
         s"$workDir/chk")(
       scd2Batch(hist, keys, tracked, id => dates(id.toInt),
         latestBy = "__load_seq"))
-    spark.read.parquet(hist)
+    Tables.read(spark, hist)
   }
 
   /** SCD2 history maintenance over a dim-delta stream. `loadDateFor`

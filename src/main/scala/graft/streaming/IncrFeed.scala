@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.IncrementalAgg
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -54,7 +55,7 @@ object IncrFeed {
       val partial = IncrementalAgg.partial(batch, keys, spec)
       val merged =
         if (fs.exists(tablePath))
-          IncrementalAgg.fold(spark.read.parquet(table), partial, keys, spec)
+          IncrementalAgg.fold(Tables.read(spark, table), partial, keys, spec)
         else partial
       val staging = s"$table.staging"
       // the staging write is the action that drains the read of the
@@ -98,6 +99,6 @@ object IncrFeed {
         s"$workDir/chk", persist = false) { (b, id) =>
       applyBatch(b, id, s"$workDir/table", keys, spec)
     }
-    spark.read.parquet(s"$workDir/table/data")
+    Tables.read(spark, s"$workDir/table/data")
   }
 }

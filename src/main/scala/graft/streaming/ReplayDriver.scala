@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 
@@ -92,7 +93,7 @@ private[graft] object ReplayDriver {
     val first = new java.io.File(dir).listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(_.toString).min
-    spark.readStream.schema(spark.read.parquet(first).schema)
+    spark.readStream.schema(Tables.read(spark, first).schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(dir)
   }

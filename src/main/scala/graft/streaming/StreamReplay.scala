@@ -87,7 +87,7 @@ object StreamReplay {
       mode: OutputMode = OutputMode.Complete()): DataFrame =
     ReplayDriver.intoMemory(spark, mode, nanos = true) {
       val path = s"$dir/events.parquet"
-      val batchSchema = spark.read.parquet(path).schema
+      val batchSchema = graft.sources.Tables.read(spark, path).schema
       // the testdata table is one bare file; a brace glob makes the file
       // stream source resolve basePath to the parent DIRECTORY (it
       // rejects a file basePath) while still matching only this table
@@ -305,7 +305,7 @@ object StreamReplay {
     // query is down (same flush discipline as the single-run replay)
     land(1); land(2); land(3)
     runOnce() // run 2: resumes the SAME checkpoint and state store
-    spark.read.parquet(sink).filter(col("user_id") =!= -1L)
+    graft.sources.Tables.read(spark, sink).filter(col("user_id") =!= -1L)
   }
 
   /** Exactly-once ingest over an at-least-once delivery channel: stage
@@ -377,11 +377,11 @@ object StreamReplay {
       } else Seq(src)
     (0 until copies).foreach { i =>
       srcFiles.zipWithIndex.foreach { case (f, j) =>
-        stageFile(spark.read.parquet(f.toString), stage, "delivery_",
-          i * srcFiles.size + j)
+        stageFile(graft.sources.Tables.read(spark, f.toString), stage,
+          "delivery_", i * srcFiles.size + j)
       }
     }
-    val batchSchema = spark.read.parquet(stage.toString).schema
+    val batchSchema = graft.sources.Tables.read(spark, stage.toString).schema
     // span-derived delay: one bounded agg over the staged files —
     // ceil(max(ts) - min(ts)) in days, plus one day of slack
     val staged = normalizeTs(batchSchema,
@@ -439,7 +439,7 @@ object StreamReplay {
     ReplayDriver.foreachDrop(ReplayDriver.drops(spark, s"$staged/drops"),
         ReplayDriver.runDir("ccstream_chk")) { (b, id) =>
       if (!b.isEmpty) {
-        val stored = spark.read.parquet(labelsRef.get)
+        val stored = graft.sources.Tables.read(spark, labelsRef.get)
         val baseEdges = spark.read
           .option("recursiveFileLookup", "true")
           .parquet(s"$run/edges")
@@ -463,7 +463,7 @@ object StreamReplay {
           .parquet(s"$run/edges/drop_$id")
       }
     }
-    spark.read.parquet(labelsRef.get)
+    graft.sources.Tables.read(spark, labelsRef.get)
   }
 
   /** The indexed near-dup ingest the three near-dup index families
@@ -947,7 +947,7 @@ object StreamReplay {
 
   private def kbRead(spark: SparkSession, root: String,
       uptoBatch: Long): DataFrame =
-    kbLayers(root, uptoBatch).map(l => spark.read.parquet(l._1))
+    kbLayers(root, uptoBatch).map(l => graft.sources.Tables.read(spark, l._1))
       .reduce(_ unionByName _)
 
   /** Latest-wins read of the layered component labeling: a blast-
@@ -961,7 +961,7 @@ object StreamReplay {
     import org.apache.spark.sql.expressions.Window
     kbLayers(root, uptoBatch)
       .map { case (p, l) =>
-        spark.read.parquet(p).withColumn("layer", lit(l)) }
+        graft.sources.Tables.read(spark, p).withColumn("layer", lit(l)) }
       .reduce(_ unionByName _)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("node")).orderBy(col("layer").desc)))
@@ -1120,7 +1120,7 @@ object StreamReplay {
       // the base run of the BATCH operator, stored as the canonical
       // table's base layer + the base labeling the first drop's blast
       // radius is computed against
-      val baseEdges = spark.read.parquet(s"$stage/edges_base")
+      val baseEdges = Tables.read(spark, s"$stage/edges_base")
       Dedup.connectedComponents(baseEdges, "id_a", "id_b")
         .write.parquet(s"$stage/labels_base")
       // scored form: quality at clustered-node grain (r16 anatomy —
@@ -1193,7 +1193,7 @@ object StreamReplay {
             .select(col("id_a"), col("id_b")),
           s"$work/edges/batch_$id")
         kbWriteFault(id, 1)
-        val newEdges = spark.read.parquet(s"$work/edges/batch_$id")
+        val newEdges = Tables.read(spark, s"$work/edges/batch_$id")
         val nBatch = observedWrite(b.select(col("doc_id")),
           s"$work/seen/batch_$id")
         kbWriteFault(id, 2)
@@ -1214,7 +1214,7 @@ object StreamReplay {
           solved.select(col("node"), col("component")),
           s"$work/labels/batch_$id")
         kbWriteFault(id, 4)
-        val region = spark.read.parquet(s"$work/labels/batch_$id")
+        val region = Tables.read(spark, s"$work/labels/batch_$id")
         val regionIds = region.select(col("node").as("doc_id"))
         // quality scored at REGION grain only — never the corpus
         val regionQuality = docs
@@ -1275,7 +1275,7 @@ object StreamReplay {
         // own metrics layer wholesale).
         val prefix =
           if (id == 0) kbRead(spark, s"$work/seen", id).count()
-          else spark.read.parquet(s"$work/metrics/batch_${id - 1}")
+          else Tables.read(spark, s"$work/metrics/batch_${id - 1}")
             .select(col("prefix_docs")).head().getLong(0) + nBatch
         import spark.implicits._
         Seq((id, nBatch, nEdges, nRegion, nUpserts, nRetracts,
@@ -1374,13 +1374,13 @@ object StreamReplay {
     ReplayDriver.foreachDrop(ReplayDriver.drops(spark, s"$staged/drops"),
         ReplayDriver.runDir("rtstream_chk")) { (b, id) =>
       if (!b.isEmpty) {
-        val stored = spark.read.parquet(labelsRef.get)
+        val stored = graft.sources.Tables.read(spark, labelsRef.get)
         // the graph the stored labels describe: base edges minus every
         // PRIOR removal (this batch's tombstones land after the repair)
         val removedSoFar = spark.read
           .option("recursiveFileLookup", "true")
           .parquet(s"$run/removed")
-        val edgesNow = spark.read.parquet(s"$run/edges")
+        val edgesNow = graft.sources.Tables.read(spark, s"$run/edges")
           .join(removedSoFar.withColumnRenamed("node", "src"),
             Seq("src"), "left_anti")
           .join(removedSoFar.withColumnRenamed("node", "dst"),
@@ -1396,6 +1396,6 @@ object StreamReplay {
           .parquet(s"$run/removed/drop_$id")
       }
     }
-    spark.read.parquet(labelsRef.get)
+    graft.sources.Tables.read(spark, labelsRef.get)
   }
 }

@@ -691,13 +691,13 @@ class PlanAuditSpec extends SparkSpecBase {
     val warehouse = (1 to 10).map(i =>
       (i.toLong, "p", day(f"2024-01-$i%02d"), i.toDouble))
       .toDF("event_id", "pname", "event_date", "v")
-    graft.sources.Sinks.mergeFactByDate(spark, path, warehouse,
+    graft.sources.Sinks.mergeFactByDate(spark, path, warehouse, warehouse,
       Seq("event_id", "pname"), Seq("v"))
     val delta = Seq((3L, "p", day("2024-01-03"), 99.0),
       (42L, "q", day("2024-01-03"), 42.0))
       .toDF("event_id", "pname", "event_date", "v")
     val (merged, touched) = graft.sources.Sinks.factMergeFrames(
-      spark, path, delta, Seq("event_id", "pname"), Seq("v"), "event_date")
+      spark, path, delta, delta, Seq("event_id", "pname"), Seq("v"), "event_date")
     assert(touched == Seq(day("2024-01-03")))
     // sparkPlan, not executedPlan: AQE wraps the final plan and hides
     // the scan from a collect over the wrapper

@@ -149,7 +149,7 @@ class IndexLeaseSpec extends SparkSpecBase {
     } finally {
       sys.props.remove("graft.lease.staleMs")
       stop.set(true); beat.join()
-      java.nio.file.Files.delete(marker)
+      java.nio.file.Files.deleteIfExists(marker)
       ()
     }
   }

@@ -29,7 +29,7 @@ class SinksSpec extends SparkSpecBase {
       (2L, "p", 1L, day("2024-01-02"), 20.0),
       (3L, "q", 2L, day("2024-01-03"), 30.0)
     ).toDF("event_id", "pname", "pval", "event_date", "v")
-    Sinks.mergeFactByDate(spark, path, load1,
+    Sinks.mergeFactByDate(spark, path, load1, load1,
       Seq("event_id", "pname", "pval"), Seq("v"))
     def files(d: String): Map[String, Long] = {
       val dir = new java.io.File(s"$path/event_date=$d")
@@ -45,7 +45,7 @@ class SinksSpec extends SparkSpecBase {
       (2L, "p", 1L, day("2024-01-02"), 99.0),
       (4L, "r", 3L, day("2024-01-02"), 40.0)
     ).toDF("event_id", "pname", "pval", "event_date", "v")
-    assert(Sinks.mergeFactByDate(spark, path, delta,
+    assert(Sinks.mergeFactByDate(spark, path, delta, delta,
       Seq("event_id", "pname", "pval"), Seq("v")) == 4)
     val got = spark.read.parquet(path).select("event_id", "v").orderBy("event_id")
       .as[(Long, Double)].collect().toSeq
@@ -54,7 +54,7 @@ class SinksSpec extends SparkSpecBase {
     assert(files("2024-01-01") == before01)
     assert(files("2024-01-03") == before03)
     // idempotent re-merge of the same drop
-    Sinks.mergeFactByDate(spark, path, delta,
+    Sinks.mergeFactByDate(spark, path, delta, delta,
       Seq("event_id", "pname", "pval"), Seq("v"))
     assert(spark.read.parquet(path).select("event_id", "v").orderBy("event_id")
       .as[(Long, Double)].collect().toSeq == got)
@@ -67,7 +67,7 @@ class SinksSpec extends SparkSpecBase {
       (1L, "p", day("2024-01-01"), 1.0),
       (2L, "p", day("2024-01-02"), 2.0)
     ).toDF("event_id", "pname", "event_date", "v")
-    Sinks.mergeFactByDate(spark, path, load1,
+    Sinks.mergeFactByDate(spark, path, load1, load1,
       Seq("event_id", "pname"), Seq("v"))
     // simulate a crash window: partition dir renamed to the backup,
     // replacement never landed (the backup root is OUTSIDE the table
@@ -84,7 +84,7 @@ class SinksSpec extends SparkSpecBase {
     // the next load recovers the partition BEFORE merging
     val delta = Seq((3L, "q", day("2024-01-03"), 3.0))
       .toDF("event_id", "pname", "event_date", "v")
-    Sinks.mergeFactByDate(spark, path, delta,
+    Sinks.mergeFactByDate(spark, path, delta, delta,
       Seq("event_id", "pname"), Seq("v"))
     assert(spark.read.parquet(path).count() == 3)
     assert(!fs.exists(backupRoot))
@@ -96,7 +96,7 @@ class SinksSpec extends SparkSpecBase {
       (2L, Option.empty[java.sql.Date], 2.0))
       .toDF("event_id", "event_date", "v")
     val ex = intercept[Exception] {
-      Sinks.mergeFactByDate(spark, path, bad, Seq("event_id"), Seq("v"))
+      Sinks.mergeFactByDate(spark, path, bad, bad, Seq("event_id"), Seq("v"))
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e =>
@@ -121,6 +121,101 @@ class SinksSpec extends SparkSpecBase {
     val ignored = spark.read.parquet(path)
       .orderBy("k").as[(Long, String, Double)].collect().toSeq
     assert(ignored == Seq((1L, "a", 1.0), (2L, "B", 9.0), (3L, "c", 3.0), (4L, "d", 4.0)))
+  }
+
+  /** The messages of `t` and its causes, outermost first. */
+  private def causeMessages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(e =>
+      Option(e.getMessage).toSeq ++ causeMessages(e.getCause))
+
+  /** Each data file of a table: name → mtime. */
+  private def dataFiles(path: String): Map[String, Long] =
+    new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> f.lastModified()).toMap
+
+  test("mergeDim: a delta that changes no row leaves every file in place") {
+    val path = Files.createTempDirectory("graft_dim_same").toString + "/dim"
+    val v1 = Seq((1L, Option("a"), 1.0), (2L, Option.empty[String], 2.0),
+      (3L, Option("c"), 3.0)).toDF("k", "name", "price")
+    assert(Sinks.mergeDim(spark, path, v1, Seq("k"), Seq("name", "price")) == 3)
+    val before = dataFiles(path)
+    assert(before.nonEmpty)
+    Thread.sleep(1100) // mtime granularity guard
+    // a re-delivered subset, NULL cell included, in both modes
+    val same = v1.filter(col("k") =!= 3L)
+    assert(Sinks.mergeDim(spark, path, same, Seq("k"), Seq("name", "price")) == 3)
+    assert(Sinks.mergeDim(spark, path, same, Seq("k"), Nil, Sinks.Ignore) == 3)
+    assert(dataFiles(path) == before)
+    // under Ignore a changed value on a stored key is still no change
+    val clash = Seq((1L, Option("CLASH"), 0.0)).toDF("k", "name", "price")
+    assert(Sinks.mergeDim(spark, path, clash, Seq("k"), Nil, Sinks.Ignore) == 3)
+    assert(dataFiles(path) == before)
+    assert(spark.read.parquet(path).orderBy("k")
+      .as[(Long, Option[String], Double)].collect().toSeq ==
+      Seq((1L, Some("a"), 1.0), (2L, None, 2.0), (3L, Some("c"), 3.0)))
+  }
+
+  test("mergeDim: one changed row rewrites the table") {
+    val path = Files.createTempDirectory("graft_dim_one").toString + "/dim"
+    val v1 = Seq((1L, Option("a"), 1.0), (2L, Option.empty[String], 2.0))
+      .toDF("k", "name", "price")
+    Sinks.mergeDim(spark, path, v1, Seq("k"), Seq("name", "price"))
+    Seq(
+      Seq((1L, Option("a"), 1.0), (2L, Option("b"), 2.0)), // NULL → value
+      Seq((1L, Option("a"), 1.0), (2L, Option.empty[String], 2.0),
+        (9L, Option("z"), 9.0))                           // an insert
+    ).foreach { rows =>
+      val before = dataFiles(path)
+      Thread.sleep(1100)
+      val n = Sinks.mergeDim(spark, path, rows.toDF("k", "name", "price"),
+        Seq("k"), Seq("name", "price"))
+      assert(dataFiles(path) != before, rows)
+      assert(n == spark.read.parquet(path).count())
+      rows.foreach { case (k, name, price) =>
+        assert(spark.read.parquet(path).filter(col("k") === k)
+          .as[(Long, Option[String], Double)].collect().toSeq ==
+          Seq((k, name, price)))
+      }
+    }
+  }
+
+  test("mergeDim: a duplicate-key delta raises even when every row is stored") {
+    val path = Files.createTempDirectory("graft_dim_dup").toString + "/dim"
+    val v1 = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "name", "price")
+    Sinks.mergeDim(spark, path, v1, Seq("k"), Seq("name", "price"))
+    val dup = v1.unionByName(v1.filter(col("k") === 1L))
+    val ex = intercept[Exception] {
+      Sinks.mergeDim(spark, path, dup, Seq("k"), Seq("name", "price"))
+    }
+    assert(causeMessages(ex).exists(_.contains("duplicate keys")), ex.toString)
+  }
+
+  test("mergeFactByDate: a delta row outside the declared dates fails and swaps nothing") {
+    val path = Files.createTempDirectory("graft_factdates").toString + "/fact"
+    def day(s: String) = java.sql.Date.valueOf(s)
+    val load1 = Seq((1L, day("2024-01-01"), 1.0), (2L, day("2024-01-02"), 2.0))
+      .toDF("event_id", "event_date", "v")
+    Sinks.mergeFactByDate(spark, path, load1, load1, Seq("event_id"), Seq("v"))
+    def parts: Map[String, Map[String, Long]] =
+      new java.io.File(path).listFiles().filter(_.isDirectory)
+        .map(d => d.getName -> dataFiles(d.toString)).toMap
+    val before = parts
+    Thread.sleep(1100)
+    val delta = Seq((1L, day("2024-01-01"), 10.0), (3L, day("2024-01-03"), 3.0))
+      .toDF("event_id", "event_date", "v")
+    val ex = intercept[Exception] {
+      Sinks.mergeFactByDate(spark, path, delta,
+        delta.filter(col("event_id") === 1L), Seq("event_id"), Seq("v"))
+    }
+    assert(causeMessages(ex).exists(_.contains("outside the declared dates")), ex.toString)
+    assert(parts == before)
+    // a declared date that no row carries is no swap failure
+    val withEmpty = delta.filter(col("event_id") === 1L)
+    assert(Sinks.mergeFactByDate(spark, path, withEmpty, delta,
+      Seq("event_id"), Seq("v")) == 2)
+    assert(spark.read.parquet(path).orderBy("event_id")
+      .select("event_id", "v").as[(Long, Double)].collect().toSeq ==
+      Seq((1L, 10.0), (2L, 2.0)))
   }
 
   test("mergeDimSurrogate: NULL natural key gets ONE surrogate across loads") {
