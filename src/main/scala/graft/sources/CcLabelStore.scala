@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Solve-once / maintain-many persistence for connected-component
   * labels — the stored side of
@@ -8,12 +8,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * near-dup graph is solved once and its `(node, component)` labeling
   * persisted; each day's delta edges re-solve only the affected
   * components against this table, never the whole graph. Same memo
-  * contract as the other index stores ([[IvfIndexStore.ensure]]).
+  * contract as every other store ([[StoreLayers.once]]).
   */
 object CcLabelStore {
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val store = StoreLayers("cc", "labels")
 
   /** Deterministic per-dataset label location under the JVM temp dir. */
   def defaultPath(datasetDir: String): String =
@@ -22,17 +21,13 @@ object CcLabelStore {
   /** Solve the base graph once and persist its labeling. */
   def build(baseEdges: DataFrame, srcCol: String, dstCol: String,
       path: String): Unit =
-    graft.operators.Dedup
-      .connectedComponents(baseEdges, srcCol, dstCol)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/labels")
+    store.overwrite(path)("labels" ->
+      graft.operators.Dedup.connectedComponents(baseEdges, srcCol, dstCol))
 
   /** [[build]] at most once per JVM per path. */
   def ensure(baseEdges: DataFrame, srcCol: String, dstCol: String,
       path: String): Unit =
-    built.computeIfAbsent(path, _ => {
-      build(baseEdges, srcCol, dstCol, path)
-      java.lang.Boolean.TRUE
-    })
+    store.once("plain", path)(build(baseEdges, srcCol, dstCol, path))
 
   def labelsTable(spark: SparkSession, path: String): DataFrame =
     Tables.read(spark, s"$path/labels")

@@ -36,7 +36,7 @@ object EmbLshIndexStore {
 
   /** The single `sigs/` layer, keyed by `vec_id` (see [[TombstonedLayers]]). */
   private val index = TombstonedLayers("elsh", "vec_id",
-    TombstonedLayers.partitioned("sigs", "table_id", "int"))
+    StoreLayers.partitioned("sigs", "table_id", "int"))
 
   def defaultPath(datasetDir: String, bits: Int): String =
     StorePaths.keyedTmp("elsh", datasetDir, s"_t${NumTables}_b$bits")

@@ -51,9 +51,9 @@ object FrameSigIndexStore {
     * in [[sizesTable]] after compact+expire shrank the mask).
     */
   private val index = TombstonedLayers("framesig", "doc_id",
-    TombstonedLayers.partitioned("bands", "band", "int"),
-    TombstonedLayers.Layer("sizes"),
-    TombstonedLayers.Layer("sizes_deltas", Seq("takedown")))
+    StoreLayers.partitioned("bands", "band", "int"),
+    StoreLayers.Layer("sizes"),
+    StoreLayers.Layer("sizes_deltas", Seq("takedown")))
 
   /** Deterministic per-dataset index location under the JVM temp dir. */
   def defaultPath(datasetDir: String): String =

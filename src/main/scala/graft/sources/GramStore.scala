@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scan-once / serve-many persistence for the PCA sufficient
@@ -20,13 +20,13 @@ import org.apache.spark.sql.functions._
   * rounding absorbs (the same tolerance class as the cross-engine
   * oracle itself, SURVEY §5). Layout under `path`: `moments/` — one
   * row per delta write: (n BIGINT, s ARRAY<DOUBLE> d, ss ARRAY<DOUBLE>
-  * d² row-major). Mutations run under the single-writer [[IndexLease]];
-  * [[compact]] folds the layers to one row via the checked rename-swap.
+  * d² row-major). [[StoreLayers]] owns the writes, the lease, compaction
+  * and the lifecycle memo; this object keeps the delta-row law
+  * ([[momentRows]]) and the fold law ([[moments]]).
   */
 object GramStore {
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val store = StoreLayers("gram", "moments")
 
   def defaultPath(datasetDir: String, tag: String): String =
     StorePaths.keyedTmp("gram", datasetDir, s"_$tag")
@@ -56,38 +56,19 @@ object GramStore {
 
   def build(emb: DataFrame, path: String,
       vecCol: String = "embedding"): Unit =
-    momentRows(emb, 1, vecCol)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/moments")
+    store.overwrite(path)("moments" -> momentRows(emb, 1, vecCol))
 
   /** Fold a drop's moments in — O(d²) bytes per write, no rescan. */
   def append(emb: DataFrame, path: String,
       vecCol: String = "embedding"): Unit =
-    IndexLease.withLease(emb.sparkSession, path, "gram-append") {
-      StoreLayout.assertWritable(emb.sparkSession, path, "moments",
-        keyed = false)
-      momentRows(emb, 1, vecCol)
-        .write.mode(SaveMode.Append).parquet(s"$path/moments")
-    }
+    store.append(emb.sparkSession, path, "append")(
+      Seq("moments" -> momentRows(emb, 1, vecCol)))
 
   /** Retract vectors — append NEGATED moments for the removed slice. */
   def delete(emb: DataFrame, path: String,
       vecCol: String = "embedding"): Unit =
-    IndexLease.withLease(emb.sparkSession, path, "gram-delete") {
-      StoreLayout.assertWritable(emb.sparkSession, path, "moments",
-        keyed = false)
-      momentRows(emb, -1, vecCol)
-        .write.mode(SaveMode.Append).parquet(s"$path/moments")
-    }
-
-  private def foldBatch(emb: DataFrame, path: String, batchId: Long,
-      sign: Int, who: String, vecCol: String): Unit =
-    IndexLease.withLease(emb.sparkSession, path, who) {
-      StoreLayout.assertWritable(emb.sparkSession, path, "moments",
-        keyed = true)
-      momentRows(emb, sign, vecCol)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(StoreLayout.batchDir(path, "moments", batchId))
-    }
+    store.append(emb.sparkSession, path, "delete")(
+      Seq("moments" -> momentRows(emb, -1, vecCol)))
 
   /** [[append]] for STREAMED maintenance: the drop's moment layer is
     * keyed by micro-batch id and written with Overwrite, so a
@@ -100,12 +81,14 @@ object GramStore {
     */
   def appendBatch(emb: DataFrame, path: String, batchId: Long,
       vecCol: String = "embedding"): Unit =
-    foldBatch(emb, path, batchId, 1, "gram-append-batch", vecCol)
+    store.append(emb.sparkSession, path, "append-batch", Some(batchId))(
+      Seq("moments" -> momentRows(emb, 1, vecCol)))
 
   /** [[delete]]'s batch-keyed twin for streamed takedown feeds. */
   def deleteBatch(emb: DataFrame, path: String, batchId: Long,
       vecCol: String = "embedding"): Unit =
-    foldBatch(emb, path, batchId, -1, "gram-delete-batch", vecCol)
+    store.append(emb.sparkSession, path, "delete-batch", Some(batchId))(
+      Seq("moments" -> momentRows(emb, -1, vecCol)))
 
   /** The folded statistics, driver-pinned: layers are one row each
     * (bounded by mutation count; [[compact]] returns it to one), and
@@ -129,40 +112,28 @@ object GramStore {
     (n, s, ss)
   }
 
-  /** Fold the delta layers into one row via the shared checked
-    * rename-swap ([[SwapRecovery.compactSwap]]).
+  /** Fold the delta layers into one row
+    * ([[StoreLayers.compactFolded]]).
     */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexLease.withLease(spark, path, "gram-compact") {
-      SwapRecovery.compactSwap(spark, path, "moments") {
-        val (n, s, ss) = moments(spark, path)
-        import spark.implicits._
-        Seq((n, s.toSeq, ss.toSeq)).toDF("n", "s", "ss")
-      }
+    store.compactFolded(spark, path) { _ =>
+      val (n, s, ss) = moments(spark, path)
+      import spark.implicits._
+      Seq((n, s.toSeq, ss.toSeq)).toDF("n", "s", "ss")
     }
 
   /** Memoized build-then-append lifecycle for the rollover gate. */
-  def ensureRolled(base: DataFrame, drop: DataFrame, path: String): Unit = {
-    require(!built.containsKey(s"deleted:$path"),
-      s"$path was built by ensureDeleted; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"rolled:$path", _ => {
+  def ensureRolled(base: DataFrame, drop: DataFrame, path: String): Unit =
+    store.once("rolled", path, "deleted") {
       build(base, path)
       append(drop, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+    }
 
   /** Memoized build-then-delete lifecycle for the retraction gate. */
   def ensureDeleted(corpus: DataFrame, removed: DataFrame,
-      path: String): Unit = {
-    require(!built.containsKey(s"rolled:$path"),
-      s"$path was built by ensureRolled; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"deleted:$path", _ => {
+      path: String): Unit =
+    store.once("deleted", path, "rolled") {
       build(corpus, path)
       delete(removed, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+    }
 }

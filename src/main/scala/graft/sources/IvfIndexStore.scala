@@ -39,8 +39,8 @@ object IvfIndexStore {
     * [[TombstonedLayers]]); a batch-keyed store has `cells/` only.
     */
   private val index = TombstonedLayers("ivf", "vec_id",
-    TombstonedLayers.partitioned("cells", "cell", "long"),
-    TombstonedLayers.partitioned("codes", "cell", "long"))
+    StoreLayers.partitioned("cells", "cell", "long"),
+    StoreLayers.partitioned("codes", "cell", "long"))
 
   /** Deterministic per-(dataset, params) index location under the JVM
     * temp dir.

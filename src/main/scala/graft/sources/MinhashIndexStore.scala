@@ -42,7 +42,7 @@ object MinhashIndexStore {
 
   /** The single `bands/` layer, keyed by `doc_id` (see [[TombstonedLayers]]). */
   private val index = TombstonedLayers("minhash", "doc_id",
-    TombstonedLayers.partitioned("bands", "band", "int"))
+    StoreLayers.partitioned("bands", "band", "int"))
 
   /** Deterministic per-dataset index location under the JVM temp dir. */
   def defaultPath(datasetDir: String): String =

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.CorpusStats
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scan-once / serve-many persistence for the corpus mixture datasheet
@@ -23,15 +23,14 @@ import org.apache.spark.sql.functions._
   * leaves the served datasheet entirely, as if never ingested.
   *
   * Layout under `path`: `slices/` — (lang, source, n_docs, n_tokens)
-  * signed delta layers, appended per mutation. Mutations run under the
-  * single-writer [[IndexLease]]; [[compact]] folds the layers to one
-  * row per slice via the checked rename-swap ([[SwapRecovery]] repairs
-  * stranded crash layouts at entry).
+  * signed delta layers, appended per mutation. [[StoreLayers]] owns the
+  * writes, the lease, compaction and the lifecycle memo; this object
+  * keeps the delta-row law ([[CorpusStats.sliceCounts]]) and the fold
+  * law ([[slices]]).
   */
 object MixtureStore {
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val store = StoreLayers("mixture", "slices")
 
   /** Deterministic per-dataset store location under the JVM temp dir. */
   def defaultPath(datasetDir: String, tag: String): String =
@@ -39,30 +38,15 @@ object MixtureStore {
 
   /** Count the base corpus once and persist the per-slice statistics. */
   def build(docs: DataFrame, path: String): Unit =
-    CorpusStats.sliceCounts(docs, 1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/slices")
+    store.overwrite(path)("slices" -> CorpusStats.sliceCounts(docs, 1))
 
   /** Fold a drop's counts in — one pass over the drop, O(|slices|)
     * bytes written, no corpus rescan. Counts are sums, so
     * append ≡ rebuild from the unioned corpus (gate-pinned).
     */
   def append(docs: DataFrame, path: String): Unit =
-    IndexLease.withLease(docs.sparkSession, path, "mixture-append") {
-      StoreLayout.assertWritable(docs.sparkSession, path, "slices",
-        keyed = false)
-      CorpusStats.sliceCounts(docs, 1)
-        .write.mode(SaveMode.Append).parquet(s"$path/slices")
-    }
-
-  private def foldBatch(docs: DataFrame, path: String, batchId: Long,
-      sign: Int, who: String): Unit =
-    IndexLease.withLease(docs.sparkSession, path, who) {
-      StoreLayout.assertWritable(docs.sparkSession, path, "slices",
-        keyed = true)
-      CorpusStats.sliceCounts(docs, sign)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(StoreLayout.batchDir(path, "slices", batchId))
-    }
+    store.append(docs.sparkSession, path, "append")(
+      Seq("slices" -> CorpusStats.sliceCounts(docs, 1)))
 
   /** [[append]] for STREAMED maintenance: the drop's count layer is
     * keyed by micro-batch id and written with Overwrite, so a
@@ -72,11 +56,13 @@ object MixtureStore {
     * `batchId = -1` is the convention for a pre-built base layer.
     */
   def appendBatch(docs: DataFrame, path: String, batchId: Long): Unit =
-    foldBatch(docs, path, batchId, 1, "mixture-append-batch")
+    store.append(docs.sparkSession, path, "append-batch", Some(batchId))(
+      Seq("slices" -> CorpusStats.sliceCounts(docs, 1)))
 
   /** [[delete]]'s batch-keyed twin for streamed takedown feeds. */
   def deleteBatch(docs: DataFrame, path: String, batchId: Long): Unit =
-    foldBatch(docs, path, batchId, -1, "mixture-delete-batch")
+    store.append(docs.sparkSession, path, "delete-batch", Some(batchId))(
+      Seq("slices" -> CorpusStats.sliceCounts(docs, -1)))
 
   /** Retract documents — the takedown path: append NEGATED counts for
     * the removed docs. Integer group inverse, so the served datasheet
@@ -84,12 +70,8 @@ object MixtureStore {
     * previously counted into the store may be retracted.
     */
   def delete(docs: DataFrame, path: String): Unit =
-    IndexLease.withLease(docs.sparkSession, path, "mixture-delete") {
-      StoreLayout.assertWritable(docs.sparkSession, path, "slices",
-        keyed = false)
-      CorpusStats.sliceCounts(docs, -1)
-        .write.mode(SaveMode.Append).parquet(s"$path/slices")
-    }
+    store.append(docs.sparkSession, path, "delete")(
+      Seq("slices" -> CorpusStats.sliceCounts(docs, -1)))
 
   /** The folded per-slice counts; fully-retracted slices (doc count
     * back to zero) leave the datasheet.
@@ -107,39 +89,27 @@ object MixtureStore {
   def served(spark: SparkSession, path: String): DataFrame =
     CorpusStats.mixtureFromSlices(slices(spark, path))
 
-  /** Fold the delta layers into one row per slice via the checked
-    * rename-swap; after compaction retraction deltas are physically
-    * gone — the retention guarantee takedowns need.
+  /** Fold the delta layers into one row per slice
+    * ([[StoreLayers.compactFolded]]); after compaction retraction
+    * deltas are physically gone — the retention guarantee takedowns
+    * need. Zero-count slices stay out of the compacted layer too —
+    * byte parity with a store that never saw the retraction.
     */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexLease.withLease(spark, path, "mixture-compact") {
-      // keep zero-count slices out of the compacted layer too — byte
-      // parity with a store that never saw the retraction
-      SwapRecovery.compactSwap(spark, path, "slices")(slices(spark, path))
-    }
+    store.compactFolded(spark, path)(_ => slices(spark, path))
 
   /** Memoized build-then-append lifecycle for the rollover gate. */
-  def ensureRolled(base: DataFrame, drop: DataFrame, path: String): Unit = {
-    require(!built.containsKey(s"deleted:$path"),
-      s"$path was built by ensureDeleted; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"rolled:$path", _ => {
+  def ensureRolled(base: DataFrame, drop: DataFrame, path: String): Unit =
+    store.once("rolled", path, "deleted") {
       build(base, path)
       append(drop, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+    }
 
   /** Memoized build-then-delete lifecycle for the retraction gate. */
   def ensureDeleted(corpus: DataFrame, removed: DataFrame,
-      path: String): Unit = {
-    require(!built.containsKey(s"rolled:$path"),
-      s"$path was built by ensureRolled; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"deleted:$path", _ => {
+      path: String): Unit =
+    store.once("deleted", path, "rolled") {
       build(corpus, path)
       delete(removed, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+    }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.Classifier
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Train-once / serve-many persistence for the Naive Bayes quality
@@ -28,17 +28,15 @@ import org.apache.spark.sql.functions._
   *  - `doccounts/` — (n_pos, n_neg) signed 1-row delta layers for the
   *                   prior odds.
   *
-  * Serve reads are lock-free; mutations run under the store's
-  * single-writer [[IndexLease]]; [[compact]] folds the delta layers
-  * into one via the same checked rename-swap as the index stores
-  * ([[SwapRecovery]] repairs stranded layouts at entry). A token whose
-  * folded total returns to zero leaves the served vocabulary entirely —
-  * exactly as if it had never been counted.
+  * Serve reads are lock-free; [[StoreLayers]] owns the writes, the
+  * lease, compaction and the lifecycle memo, and this object keeps the
+  * delta-row law ([[deltas]]) and the fold law ([[counts]], [[prior]]).
+  * A token whose folded total returns to zero leaves the served
+  * vocabulary entirely — exactly as if it had never been counted.
   */
 object NbModelStore {
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val store = StoreLayers("nbmodel", "counts", "doccounts")
 
   /** Deterministic per-dataset store location under the JVM temp dir. */
   def defaultPath(datasetDir: String, tag: String): String =
@@ -49,27 +47,15 @@ object NbModelStore {
       sum(when(col("label"), sign.toLong).otherwise(0L)).as("n_pos"),
       sum(when(col("label"), 0L).otherwise(sign.toLong)).as("n_neg"))
 
-  private def writeDeltas(docs: DataFrame, labels: DataFrame, sign: Int,
-      path: String, mode: SaveMode): Unit = {
-    if (mode == SaveMode.Append) {
-      // BOTH layers: a flat delta appended into a batch-keyed layer is
-      // silently invisible to partition discovery (StoreLayout's
-      // measured failure mode) — and a takedown that lands invisibly
-      // is the worst kind of wrong
-      StoreLayout.assertWritable(docs.sparkSession, path, "counts",
-        keyed = false)
-      StoreLayout.assertWritable(docs.sparkSession, path, "doccounts",
-        keyed = false)
-    }
-    Classifier.tokenClassCounts(docs, labels, sign)
-      .write.mode(mode).parquet(s"$path/counts")
-    docCountRows(labels, sign)
-      .write.mode(mode).parquet(s"$path/doccounts")
-  }
+  /** One signed delta per layer: token class counts and doc counts. */
+  private def deltas(docs: DataFrame, labels: DataFrame,
+      sign: Int): Seq[(String, DataFrame)] =
+    Seq("counts" -> Classifier.tokenClassCounts(docs, labels, sign),
+      "doccounts" -> docCountRows(labels, sign))
 
   /** Count the base corpus once and persist the statistics. */
   def build(docs: DataFrame, labels: DataFrame, path: String): Unit =
-    writeDeltas(docs, labels, 1, path, SaveMode.Overwrite)
+    store.overwrite(path)(deltas(docs, labels, 1): _*)
 
   /** Fold a labeled drop INTO the stored statistics: append its count
     * deltas. Counts are sums, so append ≡ rebuild from the unioned
@@ -77,22 +63,7 @@ object NbModelStore {
     * cannot interleave with [[compact]]'s snapshot-rewrite-swap.
     */
   def append(docs: DataFrame, labels: DataFrame, path: String): Unit =
-    IndexLease.withLease(docs.sparkSession, path, "nbmodel-append") {
-      writeDeltas(docs, labels, 1, path, SaveMode.Append)
-    }
-
-  private def foldBatch(docs: DataFrame, labels: DataFrame, path: String,
-      batchId: Long, sign: Int, who: String): Unit =
-    IndexLease.withLease(docs.sparkSession, path, who) {
-      StoreLayout.assertWritable(docs.sparkSession, path, "counts",
-        keyed = true)
-      Classifier.tokenClassCounts(docs, labels, sign)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(StoreLayout.batchDir(path, "counts", batchId))
-      docCountRows(labels, sign)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(StoreLayout.batchDir(path, "doccounts", batchId))
-    }
+    store.append(docs.sparkSession, path, "append")(deltas(docs, labels, 1))
 
   /** [[append]] for STREAMED maintenance: both count layers are keyed
     * by micro-batch id and written with Overwrite, so a
@@ -103,12 +74,14 @@ object NbModelStore {
     */
   def appendBatch(docs: DataFrame, labels: DataFrame, path: String,
       batchId: Long): Unit =
-    foldBatch(docs, labels, path, batchId, 1, "nbmodel-append-batch")
+    store.append(docs.sparkSession, path, "append-batch", Some(batchId))(
+      deltas(docs, labels, 1))
 
   /** [[delete]]'s batch-keyed twin for streamed takedown feeds. */
   def deleteBatch(docs: DataFrame, labels: DataFrame, path: String,
       batchId: Long): Unit =
-    foldBatch(docs, labels, path, batchId, -1, "nbmodel-delete-batch")
+    store.append(docs.sparkSession, path, "delete-batch", Some(batchId))(
+      deltas(docs, labels, -1))
 
   /** Retract documents from the model — the takedown path. Appends
     * NEGATIVE count deltas for the retracted docs' tokens
@@ -116,12 +89,11 @@ object NbModelStore {
     * fold makes the served model exactly the fresh-train model over the
     * survivors. Only docs previously counted into the store may be
     * retracted (the group inverse of something never added is
-    * meaningless).
+    * meaningless). A flat delta into a batch-keyed store is refused
+    * before it lands: partition discovery would drop it silently.
     */
   def delete(docs: DataFrame, labels: DataFrame, path: String): Unit =
-    IndexLease.withLease(docs.sparkSession, path, "nbmodel-delete") {
-      writeDeltas(docs, labels, -1, path, SaveMode.Append)
-    }
+    store.append(docs.sparkSession, path, "delete")(deltas(docs, labels, -1))
 
   /** The folded (token, cnt_pos, cnt_neg) statistics; zero-total tokens
     * (fully retracted) leave the vocabulary.
@@ -150,45 +122,33 @@ object NbModelStore {
         .cast("bigint").as("prior_e4"))
 
   /** Fold the delta layers into one: rewrite `counts/` and `doccounts/`
-    * as their folded sums via the checked rename-swap ([[SwapRecovery]]
-    * repairs any stranded crash layout first). After compaction the
-    * serve-side SUM sees a single layer and retraction deltas are
-    * physically gone — the retention guarantee takedowns need.
+    * as their folded sums ([[StoreLayers.compactFolded]]). After
+    * compaction the serve-side SUM sees a single layer and retraction
+    * deltas are physically gone — the retention guarantee takedowns
+    * need. Zero-total tokens stay out of the compacted counts layer
+    * too — byte parity with a store that never saw the retraction.
     */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexLease.withLease(spark, path, "nbmodel-compact") {
-      // keep zero-total rows out of the compacted counts layer too —
-      // byte-parity with a store that never saw the retraction
-      SwapRecovery.compactSwap(spark, path, "counts")(counts(spark, path))
-      SwapRecovery.compactSwap(spark, path, "doccounts")(
+    store.compactFolded(spark, path) {
+      case "counts" => counts(spark, path)
+      case "doccounts" =>
         Tables.read(spark, s"$path/doccounts")
-          .agg(sum(col("n_pos")).as("n_pos"),
-            sum(col("n_neg")).as("n_neg")))
+          .agg(sum(col("n_pos")).as("n_pos"), sum(col("n_neg")).as("n_neg"))
     }
 
   /** Memoized build-then-append lifecycle for the rollover gate. */
   def ensureRolled(base: DataFrame, baseLabels: DataFrame, drop: DataFrame,
-      dropLabels: DataFrame, path: String): Unit = {
-    require(!built.containsKey(s"deleted:$path"),
-      s"$path was built by ensureDeleted; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"rolled:$path", _ => {
+      dropLabels: DataFrame, path: String): Unit =
+    store.once("rolled", path, "deleted") {
       build(base, baseLabels, path)
       append(drop, dropLabels, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+    }
 
   /** Memoized build-then-delete lifecycle for the retraction gate. */
   def ensureDeleted(corpus: DataFrame, labels: DataFrame, removed: DataFrame,
-      removedLabels: DataFrame, path: String): Unit = {
-    require(!built.containsKey(s"rolled:$path"),
-      s"$path was built by ensureRolled; use a distinct path per lifecycle")
-    built.computeIfAbsent(s"deleted:$path", _ => {
+      removedLabels: DataFrame, path: String): Unit =
+    store.once("deleted", path, "rolled") {
       build(corpus, labels, path)
       delete(removed, removedLabels, path)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+    }
 }

@@ -95,7 +95,11 @@ object Sinks {
     swap(fsOf(spark, target), new Path(stagingPath), target, new Path(path + ".backup"))
   }
 
-  private def tableExists(spark: SparkSession, path: String): Boolean = {
+  /** True iff the table at `path` exists, after restoring the backup a
+    * crashed [[swap]] left behind — the existence check every reader
+    * of a swapped table makes before it reads anything.
+    */
+  private[graft] def tableExists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     val fs = fsOf(spark, p)
     recover(fs, p, new Path(path + ".backup"))
@@ -222,7 +226,10 @@ object Sinks {
       updateCols, dateCol)
     val clustered = clusterByDate(merged, dateCol, touched.size.toLong)
     if (fresh) {
-      clustered.write.partitionBy(dateCol).parquet(path + ".staging")
+      // Overwrite: a first load that died after staging must not
+      // block every later one on the stray `.staging` dir
+      clustered.write.mode(SaveMode.Overwrite).partitionBy(dateCol)
+        .parquet(path + ".staging")
       swapInto(spark, path + ".staging", path)
     } else {
       val staging = new Path(path + ".staging_parts")

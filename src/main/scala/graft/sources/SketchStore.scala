@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * semilattice has no inverse — removing a hash cannot recover the
   * k+1-th minimum it displaced). [[delete]] throws; takedowns REBUILD
   * from the survivors ([[build]] is the rebuild). This is the honest
-  * contrast to the two abelian stores ([[NbModelStore]], [[GramStore]],
+  * contrast to the three abelian stores ([[NbModelStore]], [[GramStore]],
   * [[MixtureStore]]): exact-state stores retract in O(|takedown|),
   * sketch stores pay a survivor pass — which is why exact sufficient
   * statistics are preferred wherever they stay bounded.
@@ -36,13 +36,13 @@ import org.apache.spark.sql.functions._
   * ([[storedK]]) rather than trusting a caller's default, because a
   * mismatched k silently re-cuts the sketch and breaks both the
   * `n_kept < k` exact branch and the `(k−1)·2³²/kth` estimator.
-  * Mutations run under the single-writer [[IndexLease]]; [[compact]]
-  * folds to one row per lang via the checked rename-swap.
+  * [[StoreLayers]] owns the writes, the lease, compaction and the
+  * lifecycle memo; this object keeps the delta-row law ([[sketchRows]])
+  * and the fold law ([[folded]]).
   */
 object SketchStore {
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val store = StoreLayers("kmv", "sketch")
 
   def defaultPath(datasetDir: String, tag: String): String =
     StorePaths.keyedTmp("kmv", datasetDir, s"_$tag")
@@ -101,21 +101,17 @@ object SketchStore {
 
   /** Sketch the base corpus once and persist the state. */
   def build(docs: DataFrame, path: String, k: Int = 64): Unit =
-    sketchRows(docs, k)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/sketch")
+    store.overwrite(path)("sketch" -> sketchRows(docs, k))
 
   /** Fold a drop in: sketch ONLY the drop, append its layer. The
     * semilattice fold makes append ≡ rebuild over the union
     * (gate-pinned bit-identical). The drop is cut at the STORE's
-    * persisted k (a caller-passed k is validated, k < 0 = use stored).
+    * persisted k (a caller-passed k is validated, k < 0 = use stored),
+    * resolved inside the lease.
     */
   def append(docs: DataFrame, path: String, k: Int = -1): Unit =
-    IndexLease.withLease(docs.sparkSession, path, "kmv-append") {
-      StoreLayout.assertWritable(docs.sparkSession, path, "sketch",
-        keyed = false)
-      sketchRows(docs, resolveK(docs.sparkSession, path, k))
-        .write.mode(SaveMode.Append).parquet(s"$path/sketch")
-    }
+    store.append(docs.sparkSession, path, "append")(Seq(
+      "sketch" -> sketchRows(docs, resolveK(docs.sparkSession, path, k))))
 
   /** [[append]] for STREAMED maintenance: the drop's sketch layer is
     * keyed by micro-batch id and written with Overwrite, so a
@@ -128,13 +124,8 @@ object SketchStore {
     */
   def appendBatch(docs: DataFrame, path: String, batchId: Long,
       k: Int = -1): Unit =
-    IndexLease.withLease(docs.sparkSession, path, "kmv-append-batch") {
-      StoreLayout.assertWritable(docs.sparkSession, path, "sketch",
-        keyed = true)
-      sketchRows(docs, resolveK(docs.sparkSession, path, k))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(StoreLayout.batchDir(path, "sketch", batchId))
-    }
+    store.append(docs.sparkSession, path, "append-batch", Some(batchId))(Seq(
+      "sketch" -> sketchRows(docs, resolveK(docs.sparkSession, path, k))))
 
   /** Lossy sketch state has no group inverse — a takedown CANNOT be
     * folded in (removing a hash cannot recover the k+1-th minimum it
@@ -193,25 +184,21 @@ object SketchStore {
               col("kth_hash").cast("double")), 4).as("est_distinct"))
   }
 
-  /** Fold the layers to one row per lang via the checked rename-swap.
-    * Exact for the sketch: the k-min-of-union IS the semilattice state.
-    * The compacted layer keeps the persisted k column.
+  /** Fold the layers to one row per lang
+    * ([[StoreLayers.compactFolded]]). Exact for the sketch: the
+    * k-min-of-union IS the semilattice state. The compacted layer keeps
+    * the persisted k column.
     */
   def compact(spark: SparkSession, path: String, k: Int = -1): Unit =
-    IndexLease.withLease(spark, path, "kmv-compact") {
-      SwapRecovery.compactSwap(spark, path, "sketch")(
-        folded(spark, path, k)
-          .select(col("lang"), col("n_rows"), col("hs"), col("k")))
-    }
+    store.compactFolded(spark, path)(_ =>
+      folded(spark, path, k)
+        .select(col("lang"), col("n_rows"), col("hs"), col("k")))
 
   /** Memoized build-then-append lifecycle for the rollover gate. */
   def ensureRolled(base: DataFrame, drop: DataFrame, path: String,
-      k: Int = 64): Unit = {
-    built.computeIfAbsent(s"rolled:$path", _ => {
+      k: Int = 64): Unit =
+    store.once("rolled", path) {
       build(base, path, k)
       append(drop, path, k)
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+    }
 }

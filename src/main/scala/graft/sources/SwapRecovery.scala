@@ -4,15 +4,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Crash recovery for the compaction rename swap
-  * ([[TombstonedLayers.swap]]) shared by the retractable index stores
-  * (through [[TombstonedLayers]]) and the single-layer stores (through
-  * [[compactSwap]]).
+  * ([[StoreLayers.swap]]) every persisted store compacts through: the
+  * retractable index stores ([[TombstonedLayers.compact]]) and the
+  * mergeable-state stores ([[StoreLayers.compactFolded]]).
   *
   * The swap sequence is: write `<layer>_compacted` → rename `<layer>`
   * to `<layer>_old` → rename `<layer>_compacted` to `<layer>` → delete
-  * `<layer>_old` → delete `tombstones`. A crash between any two steps
-  * leaves exactly one of these states on disk, and each is recoverable
-  * to a COMPLETE serving index:
+  * `<layer>_old` → delete `tombstones` (tombstoned stores only). A
+  * crash between any two steps leaves exactly one of these states on
+  * disk, and each is recoverable to a COMPLETE serving index:
   *
   *  1. `<layer>` + partial/complete `<layer>_compacted` — the swap
   *     never started; drop the staging dir (tombstones still mask).
@@ -107,29 +107,4 @@ object SwapRecovery {
 
   private[sources] def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The checked compact swap every SINGLE-LAYER store shares
-    * ([[GramStore]], [[MixtureStore]], [[SketchStore]], and each of
-    * [[NbModelStore]]'s two layers): repair any stranded layout, then
-    * stage the caller's folded frame through [[TombstonedLayers.swap]]
-    * (the one checked rename sequence). `folded` is by-name so it reads
-    * the PRE-swap layer. Callers hold the store's [[IndexLease]] — this
-    * helper does not take it.
-    */
-  private[sources] def compactSwap(spark: SparkSession, path: String,
-      layer: String)(folded: => org.apache.spark.sql.DataFrame): Unit = {
-    recover(spark, path, layer)
-    // a batch-keyed layer (streamed maintenance) stays keyed across
-    // compaction — the folded row lands at batch=-1 — so the stream
-    // can keep folding batch layers in afterwards; a flat/keyed mix
-    // would be silently lossy to read (StoreLayout's invariant)
-    val keyed = StoreLayout.isKeyed(spark, path, layer)
-    val staged =
-      if (keyed)
-        folded.withColumn("batch", org.apache.spark.sql.functions.lit(-1L))
-          .write.partitionBy("batch")
-      else folded.write
-    TombstonedLayers.swap(spark, path, layer)(staged.mode(
-      org.apache.spark.sql.SaveMode.Overwrite).parquet)
-  }
 }

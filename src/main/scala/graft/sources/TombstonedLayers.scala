@@ -7,17 +7,13 @@ import org.apache.spark.sql.functions._
 /** The tombstoned-layer kernel of the four retractable index stores
   * ([[MinhashIndexStore]], [[FrameSigIndexStore]], [[IvfIndexStore]],
   * [[EmbLshIndexStore]]). A store declares its id column and its
-  * layers (name, partition columns, read-side cast); this class owns
-  * every operation over the shared [[Tombstones]] ledgers, so the
-  * crash and retention rules hold for all four by construction:
+  * layers; [[StoreLayers]] owns how they are written, leased, swapped
+  * and memoized, and this class adds every operation over the shared
+  * [[Tombstones]] ledgers, so the crash and retention rules hold for
+  * all four by construction:
   *
-  *  - every mutation runs under the store's single-writer
-  *    [[IndexLease]] (a racing append can never land in a doomed
-  *    pre-swap dir);
   *  - compact and expire [[SwapRecovery.recover]] every existing layer
   *    on entry, so the renames always begin from a clean layout;
-  *  - every swap rename is checked ([[TombstonedLayers.swap]]) — a
-  *    failure aborts before anything destructive;
   *  - a keyed store writes the purged ledger BEFORE the swap (the
   *    expiry gate — see [[Tombstones.purged]]);
   *  - a KEYED store (primary layer batch-keyed, streamed maintenance)
@@ -28,13 +24,11 @@ import org.apache.spark.sql.functions._
   *    after the rewrite (zero-masking serve).
   */
 private[sources] final class TombstonedLayers(name: String,
-    idCol: String, layers: Seq[TombstonedLayers.Layer]) {
-  import TombstonedLayers._
+    idCol: String, layers: Seq[StoreLayers.Layer])
+    extends StoreLayers(name, layers) {
+  import StoreLayers._
 
   private val primary = layers.head
-
-  private def layer(n: String): Layer = layers.find(_.name == n)
-    .getOrElse(throw new IllegalArgumentException(s"$name store has no layer $n"))
 
   /** True iff `<layer>/` is on disk. */
   def has(spark: SparkSession, path: String, layerName: String): Boolean =
@@ -159,62 +153,6 @@ private[sources] final class TombstonedLayers(name: String,
       }
     }
 
-  /** A fresh FLAT build: each (layer, rows) replaces `<layer>/`. */
-  def overwrite(path: String)(rows: (String, DataFrame)*): Unit =
-    rows.foreach { case (l, df) =>
-      writer(df, layer(l).partCols).mode(SaveMode.Overwrite).parquet(s"$path/$l")
-    }
-
-  /** Fold rows into the store under the lease. FLAT (no `batchId`):
-    * each (layer, rows) appends to `<layer>/`. BATCH-KEYED: each lands
-    * with Overwrite in `<layer>/batch=<id>/`, in order, so a
-    * crash-redelivered batch re-lands its own layers instead of
-    * double-appending (`-1` is the pre-built base layer). A fold that
-    * would mix the two layouts in a layer is refused before anything is
-    * written ([[StoreLayout.assertWritable]]) — a mix is silently lossy
-    * to read; a flat fold checks every declared layer before `rows`
-    * reads anything (a keyed store lacks the flat-only layers).
-    */
-  def append(spark: SparkSession, path: String, who: String,
-      batchId: Option[Long] = None)(rows: => Seq[(String, DataFrame)]): Unit =
-    IndexLease.withLease(spark, path, s"$name-$who") {
-      if (batchId.isEmpty) layers.foreach { l =>
-        StoreLayout.assertWritable(spark, path, l.name, keyed = false)
-      }
-      val writes = rows
-      if (batchId.isDefined) writes.foreach { case (l, _) =>
-        StoreLayout.assertWritable(spark, path, l, keyed = true)
-      }
-      writes.foreach { case (l, df) =>
-        val w = writer(df, layer(l).partCols)
-        batchId.fold(w.mode(SaveMode.Append).parquet(s"$path/$l"))(b =>
-          w.mode(SaveMode.Overwrite).parquet(StoreLayout.batchDir(path, l, b)))
-      }
-    }
-
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Run a store `lifecycle` (`plain`, `rolled`, `deleted` …) at most
-    * once per JVM per path: `body` runs inside the map's per-key lock,
-    * so a concurrent caller blocks until the store is fully on disk,
-    * and a body that throws leaves no entry so the next caller retries.
-    * A path already built by one of the `conflicts` lifecycles is
-    * refused — two lifecycles never satisfy each other's contract.
-    */
-  def once(lifecycle: String, path: String, conflicts: String*)(
-      body: => Unit): Unit = {
-    conflicts.find(c => built.containsKey(s"$c:$path")).foreach { c =>
-      throw new IllegalArgumentException(
-        s"$path was built by the $c lifecycle; use a distinct path per lifecycle")
-    }
-    built.computeIfAbsent(s"$lifecycle:$path", _ => {
-      body
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
-
   /** Memoized build-then-delete lifecycle for the retraction gates: the
     * first caller per JVM per path wipes the path (keyed temp paths are
     * deterministic ACROSS processes, so an earlier JVM's dir must not
@@ -232,41 +170,7 @@ private[sources] final class TombstonedLayers(name: String,
 
 private[sources] object TombstonedLayers {
 
-  /** One stored layer: its directory name under the store path, its
-    * partition columns (without `batch`, which a keyed layer adds), and
-    * the cast that restores the written type of a partition column
-    * (discovery reads it back as the directory value).
-    */
-  final case class Layer(name: String, partCols: Seq[String] = Nil,
-      cast: DataFrame => DataFrame = identity)
-
-  /** A layer partitioned by one column, read back as type `tpe`. */
-  def partitioned(name: String, partCol: String, tpe: String): Layer =
-    Layer(name, Seq(partCol), _.withColumn(partCol, col(partCol).cast(tpe)))
-
-  def apply(name: String, idCol: String, layers: Layer*): TombstonedLayers =
+  def apply(name: String, idCol: String,
+      layers: StoreLayers.Layer*): TombstonedLayers =
     new TombstonedLayers(name, idCol, layers)
-
-  private def writer(df: DataFrame, parts: Seq[String]) =
-    if (parts.isEmpty) df.write else df.write.partitionBy(parts: _*)
-
-  /** The one checked rename swap of a stored layer: `stage` writes the
-    * replacement to the given `<layer>_compacted` dir, the live layer
-    * is renamed aside, staging is promoted, the old bytes are dropped.
-    * Every rename is CHECKED — a failed rename throws before anything
-    * destructive, never falling through to leave a stale layer serving
-    * unmasked. Each crash point leaves a layout [[SwapRecovery.recover]]
-    * repairs. Callers hold the store's [[IndexLease]].
-    */
-  private[sources] def swap(spark: SparkSession, path: String,
-      layer: String)(stage: String => Unit): Unit = {
-    stage(s"$path/${layer}_compacted")
-    val fs = SwapRecovery.fsOf(spark, path)
-    SwapRecovery.renameOrThrow(fs, new Path(s"$path/$layer"),
-      new Path(s"$path/${layer}_old"))
-    SwapRecovery.renameOrThrow(fs, new Path(s"$path/${layer}_compacted"),
-      new Path(s"$path/$layer"))
-    fs.delete(new Path(s"$path/${layer}_old"), true)
-    ()
-  }
 }

@@ -50,11 +50,14 @@ object IncrFeed {
       keys: Seq[String], spec: IncrementalAgg.Spec): Unit = {
     val spark = batch.sparkSession
     val table = s"$path/data"
-    val (tablePath, fs) = hfs(spark, table)
+    val (_, fs) = hfs(spark, table)
+    // recover FIRST: after a crash between the swap's two renames the
+    // folded state (and its marker) lives only in `data.backup`
+    val exists = graft.sources.Sinks.tableExists(spark, table)
     if (id > appliedBatch(spark, table)) {
       val partial = IncrementalAgg.partial(batch, keys, spec)
       val merged =
-        if (fs.exists(tablePath))
+        if (exists)
           IncrementalAgg.fold(Tables.read(spark, table), partial, keys, spec)
         else partial
       val staging = s"$table.staging"

@@ -46,10 +46,7 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object StreamReplay {
 
-  /** [[ReplayDriver.stageFile]]: one mtime-ordered single-file load. */
-  private[graft] def stageFile(df: DataFrame, stage: java.nio.file.Path,
-      name: String, idx: Int): Unit =
-    ReplayDriver.stageFile(df, stage, name, idx)
+  import ReplayDriver.stageFile
 
   /** Recursive file-level copy — gives a replay run its own mutable
     * copy of a staged base index (parquet dirs are plain files).
@@ -1150,7 +1147,7 @@ object StreamReplay {
   private[graft] def kbRunStream(spark: SparkSession, dir: String,
       staged: String, work: String, chk: String): Unit = {
     import graft.operators.{CorpusStats, Dedup}
-    import graft.sources.{MinhashIndexStore, Tables}
+    import graft.sources.{MinhashIndexStore, Sinks, Tables}
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
     val slim = docs.select(col("doc_id"), col("text"))
@@ -1159,14 +1156,6 @@ object StreamReplay {
       (b, id) =>
         val t0 = System.nanoTime()
         val ow = org.apache.spark.sql.SaveMode.Overwrite
-        // work counters ride on the writes via observe() — zero
-        // extra jobs for the blast-radius evidence
-        def observedWrite(df: DataFrame, path: String): Long = {
-          val obs = org.apache.spark.sql.Observation()
-          df.observe(obs, count(lit(1)).as("rows"))
-            .write.mode(ow).parquet(path)
-          obs.get("rows").asInstanceOf[Long]
-        }
         val hash = b.filter(col("text").isNotNull)
         // ONE shared delta side per batch (pinned election window,
         // pinned signature/band frame, pinned internal verify):
@@ -1187,14 +1176,14 @@ object StreamReplay {
         // stored side horizon-bounded like every other read here:
         // exclude this batch's own band layer so a post-fold
         // redelivery recomputes the original edge set
-        val nEdges = observedWrite(
+        val nEdges = Sinks.overwrite(
           Dedup.minhashDeltaPairsWith(side, slim,
               MinhashIndexStore.bandsTableExcluding(spark, idxPath, id))
             .select(col("id_a"), col("id_b")),
           s"$work/edges/batch_$id")
         kbWriteFault(id, 1)
         val newEdges = Tables.read(spark, s"$work/edges/batch_$id")
-        val nBatch = observedWrite(b.select(col("doc_id")),
+        val nBatch = Sinks.overwrite(b.select(col("doc_id")),
           s"$work/seen/batch_$id")
         kbWriteFault(id, 2)
         // batch-id-keyed Overwrite (same law as the delta layers
@@ -1210,7 +1199,7 @@ object StreamReplay {
         val priorEdges = kbRead(spark, s"$work/edges", id - 1)
         val (_, solved) = Dedup.connectedComponentsDelta(stored,
           priorEdges, newEdges, "id_a", "id_b")
-        val nRegion = observedWrite(
+        val nRegion = Sinks.overwrite(
           solved.select(col("node"), col("component")),
           s"$work/labels/batch_$id")
         kbWriteFault(id, 4)
@@ -1242,7 +1231,7 @@ object StreamReplay {
           .select(col("node").as("doc_id"))
         // retract DELTA: region losers + this batch's exact twins
         // (retracting a never-canonical id is a fold no-op)
-        val nRetracts = observedWrite(
+        val nRetracts = Sinks.overwrite(
           losers.unionByName(twinDropped).distinct(),
           s"$work/canon_retracts/batch_$id")
         kbWriteFault(id, 5)
@@ -1252,7 +1241,7 @@ object StreamReplay {
           .join(twinDropped, Seq("doc_id"), "left_anti")
           .join(regionIds, Seq("doc_id"), "left_anti")
         val upsertIds = winners.unionByName(singles).distinct()
-        val nUpserts = observedWrite(
+        val nUpserts = Sinks.overwrite(
           docs.join(upsertIds, Seq("doc_id"), "left_semi")
             .select(col("doc_id"), col("lang"), col("source"),
               col("n_chars")),

@@ -90,6 +90,23 @@ class SinksSpec extends SparkSpecBase {
     assert(!fs.exists(backupRoot))
   }
 
+  test("mergeFactByDate: a stray .staging from a crashed first load does not block the next") {
+    val path = Files.createTempDirectory("graft_factstray").toString + "/fact"
+    def day(s: String) = java.sql.Date.valueOf(s)
+    def load(rows: (Long, String, Long, java.sql.Date, Double)*) =
+      rows.toDF("event_id", "pname", "pval", "event_date", "v")
+    // the first load died after writing its staging dir: no table yet
+    load((9L, "z", 9L, day("2024-01-09"), 90.0))
+      .write.partitionBy("event_date").parquet(path + ".staging")
+    val first = load((1L, "p", 1L, day("2024-01-01"), 10.0),
+      (2L, "q", 2L, day("2024-01-02"), 20.0))
+    assert(Sinks.mergeFactByDate(spark, path, first, first,
+      Seq("event_id", "pname", "pval"), Seq("v")) == 2)
+    assert(spark.read.parquet(path).select("event_id", "v").orderBy("event_id")
+      .as[(Long, Double)].collect().toSeq == Seq((1L, 10.0), (2L, 20.0)))
+    assert(!new java.io.File(path + ".staging").exists())
+  }
+
   test("mergeFactByDate rejects NULL partition dates in-plan") {
     val path = Files.createTempDirectory("graft_factnull").toString + "/fact"
     val bad = Seq((1L, Option(java.sql.Date.valueOf("2024-01-01")), 1.0),

@@ -128,4 +128,59 @@ class SwapRecoverySpec extends SparkSpecBase {
     assert(SwapRecovery.recover(spark, p, "bands") == "clean")
     assert(serve(p) == freshAnswer)
   }
+
+  // the single-layer fold-and-swap of a mergeable-state store, on the
+  // batch-keyed layout a stream maintains: a base layer, a drop and a
+  // takedown, each in its own batch=<id> dir
+  private def survivors = docs.filter(col("doc_id") % 10 =!= 5)
+
+  private def keyedMixture(tag: String): (String, org.apache.hadoop.fs.FileSystem) = {
+    val p = freshPath(tag)
+    MixtureStore.appendBatch(docs.filter(col("doc_id") % 10 =!= 0), p, -1L)
+    MixtureStore.appendBatch(docs.filter(col("doc_id") % 10 === 0), p, 0L)
+    MixtureStore.deleteBatch(docs.filter(col("doc_id") % 10 === 5), p, 1L)
+    (p, SwapRecovery.fsOf(spark, p))
+  }
+
+  private def mixture(path: String): Seq[org.apache.spark.sql.Row] =
+    MixtureStore.served(spark, path).orderBy("lang", "source").collect().toSeq
+
+  private lazy val freshMixture: Seq[org.apache.spark.sql.Row] = {
+    val p = freshPath("mix_fresh")
+    MixtureStore.build(survivors, p)
+    mixture(p)
+  }
+
+  /** The fold the store compacts to, staged the way its compaction does. */
+  private def stageFold(p: String, folded: org.apache.spark.sql.DataFrame): Unit =
+    folded.withColumn("batch", lit(-1L))
+      .write.partitionBy("batch").parquet(s"$p/slices_compacted")
+
+  private def assertCompactedAtBase(p: String): Unit = {
+    val layer = spark.read.parquet(s"$p/slices")
+    assert(layer.select("batch").distinct().as[Long].collect().toSeq == Seq(-1L))
+    assert(layer.count() == freshMixture.size.toLong)
+    assert(mixture(p) == freshMixture)
+  }
+
+  test("keyed mergeable store: a stranded <layer>_compacted is dropped, compact serves the fresh fold") {
+    val (p, _) = keyedMixture("m1")
+    // a crash while staging: a PARTIAL fold (one language) is stranded
+    // beside the live layer; promoting it would lose every other slice
+    stageFold(p, MixtureStore.slices(spark, p).filter(col("lang") === "en"))
+    MixtureStore.compact(spark, p)
+    assert(!new java.io.File(s"$p/slices_compacted").exists())
+    assertCompactedAtBase(p)
+  }
+
+  test("keyed mergeable store: <layer>_old + <layer>_compacted is promoted, compact serves the fresh fold") {
+    val (p, fs) = keyedMixture("m2")
+    // a crash mid-swap: the full fold was staged, the live layer
+    // renamed aside, and staging never promoted
+    stageFold(p, MixtureStore.slices(spark, p))
+    fs.rename(hp(s"$p/slices"), hp(s"$p/slices_old"))
+    MixtureStore.compact(spark, p)
+    assert(!new java.io.File(s"$p/slices_old").exists())
+    assertCompactedAtBase(p)
+  }
 }

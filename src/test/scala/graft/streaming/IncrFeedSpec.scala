@@ -57,4 +57,25 @@ class IncrFeedSpec extends SparkSpecBase {
       .withColumn("sum_value", col("sum_value").cast("double"))
     assert(done.exceptAll(oneShot).count() === 0)
   }
+
+  test("a batch redelivered after a crash between the swap's renames folds onto the backed-up state") {
+    val work = fresh("midswap")
+    val done = fresh("midswap_done")
+    val ds = drops
+    (0 to 1).foreach(i => IncrFeed.applyBatch(ds(i), i.toLong, work, keys, spec))
+    (0 to 2).foreach(i => IncrFeed.applyBatch(ds(i), i.toLong, done, keys, spec))
+    // the layout of a crash during batch 2's swap, after the live table
+    // was backed up and before staging was promoted
+    val fs = new org.apache.hadoop.fs.Path(work)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hp(s: String) = new org.apache.hadoop.fs.Path(s)
+    assert(fs.rename(hp(s"$work/data"), hp(s"$work/data.backup")))
+    assert(fs.rename(hp(s"$done/data"), hp(s"$work/data.staging")))
+    IncrFeed.applyBatch(ds(2), 2L, work, keys, spec)
+    val out = spark.read.parquet(s"$work/data")
+      .withColumn("sum_value", col("sum_value").cast("double"))
+    assert(out.exceptAll(oneShot).count() === 0)
+    assert(oneShot.exceptAll(out).count() === 0)
+    assert(IncrFeed.appliedBatch(spark, s"$work/data") === 2L)
+  }
 }

@@ -83,7 +83,7 @@ class StreamCrashRecoverySpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, sfDir)
     val stage = java.nio.file.Files.createTempDirectory("graft_crash_drops")
     (0 to 2).foreach { i =>
-      StreamReplay.stageFile(emb.filter(col("vec_id") % 3 === i),
+      ReplayDriver.stageFile(emb.filter(col("vec_id") % 3 === i),
         stage, "drop_", i)
     }
     val drops = stage.toString
@@ -131,7 +131,7 @@ class StreamCrashRecoverySpec extends SparkSpecBase {
     val docs = Tables.documents(spark, sfDir)
     val stage = java.nio.file.Files.createTempDirectory("graft_crash_kmvdrops")
     (0 to 2).foreach { i =>
-      StreamReplay.stageFile(docs.filter(col("doc_id") % 3 === i),
+      ReplayDriver.stageFile(docs.filter(col("doc_id") % 3 === i),
         stage, "drop_", i)
     }
     val drops = stage.toString
