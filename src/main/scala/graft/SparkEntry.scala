@@ -196,9 +196,7 @@ object SparkEntry {
         |   sum(item_views)::BIGINT, 0.0::DOUBLE FROM v1
         |) ORDER BY tbl""".stripMargin) { (s, dir) =>
       val wh = graft.sources.StorePaths.keyedTmp("wh", dir)
-      val p = new org.apache.hadoop.fs.Path(wh)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true) // gate from EMPTY, always
+      graft.sources.StorePaths.wipe(s, wh) // gate from EMPTY, always
       graft.Pipeline.runDaily(s, dir, wh)
       graft.Pipeline.runDaily(s, dir, wh) // idempotency is part of the gate
       graft.Pipeline.warehouseSummary(s, wh).orderBy(col("tbl"))
@@ -226,9 +224,7 @@ object SparkEntry {
     // summary pins both behaviors
     Entry("pipeline_late" -> pipelineLateOracle) { (s, dir) =>
       val wh = graft.sources.StorePaths.keyedTmp("whlate", dir)
-      val p = new org.apache.hadoop.fs.Path(wh)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true) // gate from EMPTY, always
+      graft.sources.StorePaths.wipe(s, wh) // gate from EMPTY, always
       val ev = graft.sources.Tables.events(s, dir)
       val part = graft.sources.Tables.part(s, dir)
       graft.Pipeline.runDailyLoad(s, ev.filter(col("event_id") % 5 =!= 0),
@@ -260,9 +256,7 @@ object SparkEntry {
     // correctly. The oracle replays all five laws as one CTE chain.
     Entry("pipeline_corpus" -> pipelineCorpusOracle) { (s, dir) =>
       val wh = graft.sources.StorePaths.keyedTmp("corpus", dir)
-      val p = new org.apache.hadoop.fs.Path(wh)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true) // gate from EMPTY, always
+      graft.sources.StorePaths.wipe(s, wh) // gate from EMPTY, always
       graft.CorpusPipeline.runCuration(s, dir, wh)
       graft.CorpusPipeline.curationSummary(s, wh).orderBy(col("stage"))
     },

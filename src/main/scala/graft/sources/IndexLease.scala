@@ -58,8 +58,9 @@ import org.apache.spark.sql.SparkSession
   * trigger it.
   *
   * Reads never take the lease — serving stays lock-free because every
-  * intermediate compact state keeps a complete layer on disk (the
-  * rename-swap invariant).
+  * intermediate compact state keeps a complete copy on disk (the
+  * stage-then-swap of [[SwapRecovery]], whose Scaladoc tables the
+  * layouts and their repair).
   */
 object IndexLease {
 

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.MergeInto
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions.{col, count, lit}
   * Like the reference's MERGE statements, the merge writers commit
   * their table and report a row count; they hand back no frame. A
   * reader re-reads the path, so no handle has to outlive the next
-  * load's swap.
+  * load's swap. Every table and fact partition commits by the one
+  * stage-then-swap of [[SwapRecovery]], which names its staged and
+  * aside directories and repairs what a crashed swap left behind.
   */
 object Sinks {
 
@@ -53,56 +55,21 @@ object Sinks {
     obs.get("rows").asInstanceOf[Long]
   }
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Stage-then-swap with a backup window: `target` moves to `backup`,
-    * `staging` is promoted to `target`, and only then is the backup
-    * dropped, so a crash mid-swap never leaves the data without a
-    * copy. Rename failures raise instead of being silently ignored; a
-    * failed promote rolls the backup back first.
+  /** Swap `<path>.staging` in as the table ([[SwapRecovery.replace]],
+    * the previous copy parked at `<path>.backup`).
     */
-  private def swap(fs: FileSystem, staging: Path, target: Path,
-      backup: Path): Unit = {
-    recover(fs, target, backup)
-    val had = fs.exists(target)
-    if (had) {
-      fs.mkdirs(backup.getParent)
-      require(fs.rename(target, backup), s"could not back up $target")
-    }
-    if (!fs.rename(staging, target)) {
-      if (had) fs.rename(backup, target)
-      throw new java.io.IOException(s"could not swap $staging into $target")
-    }
-    if (had) fs.delete(backup, true)
-  }
+  private[graft] def swapInto(spark: SparkSession, path: String): Unit =
+    SwapRecovery.replace(SwapRecovery.fsOf(spark, path),
+      new Path(path + ".staging"), new Path(path), new Path(path + ".backup"))
 
-  /** If a previous [[swap]] crashed between its renames, `target` is
-    * missing and `backup` holds the only copy — restore it before
-    * anything reads, writes, or deletes. A backup beside a target that
-    * made it into place is the old version: drop it.
-    */
-  private def recover(fs: FileSystem, target: Path, backup: Path): Unit =
-    if (fs.exists(backup)) {
-      if (!fs.exists(target))
-        require(fs.rename(backup, target), s"could not recover $target from $backup")
-      else fs.delete(backup, true)
-    }
-
-  /** [[swap]] of a whole table directory, backed up at `<path>.backup`. */
-  private[graft] def swapInto(spark: SparkSession, stagingPath: String, path: String): Unit = {
-    val target = new Path(path)
-    swap(fsOf(spark, target), new Path(stagingPath), target, new Path(path + ".backup"))
-  }
-
-  /** True iff the table at `path` exists, after restoring the backup a
-    * crashed [[swap]] left behind — the existence check every reader
-    * of a swapped table makes before it reads anything.
+  /** True iff the table at `path` exists, after [[SwapRecovery.repair]]
+    * of what a crashed swap left behind — the entry check of every
+    * writer, made before it stages anything.
     */
   private[graft] def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = fsOf(spark, p)
-    recover(fs, p, new Path(path + ".backup"))
+    val (fs, p) = (SwapRecovery.fsOf(spark, path), new Path(path))
+    SwapRecovery.repair(fs, p, new Path(path + ".staging"),
+      new Path(path + ".backup"), mayBeAbsent = true)
     fs.exists(p)
   }
 
@@ -111,7 +78,7 @@ object Sinks {
     */
   private def commit(spark: SparkSession, merged: DataFrame, path: String): Long = {
     val rows = overwrite(merged, path + ".staging")
-    swapInto(spark, path + ".staging", path)
+    swapInto(spark, path)
     rows
   }
 
@@ -197,10 +164,10 @@ object Sinks {
     *     file manifest and never scanned,
     *  3. [[graft.operators.MergeInto.upsert]] of the drop into that
     *     slice (shuffle merge — both sides are drop/day-sized),
-    *  4. stage-and-swap of ONLY the touched `date=...` directories,
-    *     each through a crash-safe backup parked OUTSIDE the table
-    *     root (`<path>.pbackup/` — a backup inside the root would be
-    *     picked up by partition discovery during the crash window). A
+    *  4. stage-and-swap ([[SwapRecovery.replace]]) of ONLY the touched
+    *     `date=...` directories, each with its aside parked OUTSIDE the
+    *     table root (`<path>.pbackup/` — an aside inside the root would
+    *     be picked up by partition discovery during the crash window). A
     *     declared date that neither the delta nor the table holds
     *     stages nothing and is skipped.
     *
@@ -220,34 +187,36 @@ object Sinks {
   def mergeFactByDate(spark: SparkSession, path: String, delta: DataFrame,
       dates: DataFrame, keys: Seq[String], updateCols: Seq[String],
       dateCol: String = "event_date"): Long = {
-    recoverPartitionSwaps(spark, path)
+    val fs = SwapRecovery.fsOf(spark, path)
+    val (stagedRoot, asideRoot) =
+      (new Path(path + ".staging_parts"), new Path(path + ".pbackup"))
+    // entry repair: a partition swap that died between its renames left
+    // its copy under the aside root; every other staged one is dropped
+    if (fs.exists(asideRoot)) fs.listStatus(asideRoot).foreach { st =>
+      val n = st.getPath.getName
+      SwapRecovery.repair(fs, new Path(path, n), new Path(stagedRoot, n),
+        st.getPath, mayBeAbsent = true)
+    }
+    fs.delete(stagedRoot, true)
+    fs.delete(asideRoot, true)
     val fresh = !tableExists(spark, path)
     val (merged, touched) = factMergeFrames(spark, path, delta, dates, keys,
       updateCols, dateCol)
     val clustered = clusterByDate(merged, dateCol, touched.size.toLong)
-    if (fresh) {
-      // Overwrite: a first load that died after staging must not
-      // block every later one on the stray `.staging` dir
-      clustered.write.mode(SaveMode.Overwrite).partitionBy(dateCol)
-        .parquet(path + ".staging")
-      swapInto(spark, path + ".staging", path)
-    } else {
-      val staging = new Path(path + ".staging_parts")
-      val fs = fsOf(spark, staging)
-      fs.delete(staging, true)
-      clustered.write.mode(SaveMode.Overwrite).partitionBy(dateCol)
-        .parquet(staging.toString)
-      val backupRoot = new Path(path + ".pbackup")
+    clustered.write.mode(SaveMode.Overwrite).partitionBy(dateCol)
+      .parquet(if (fresh) path + ".staging" else stagedRoot.toString)
+    if (fresh) swapInto(spark, path)
+    else {
       touched.foreach { v =>
-        val dirName = s"$dateCol=$v"
-        val staged = new Path(staging, dirName)
-        if (fs.exists(staged))
-          swap(fs, staged, new Path(path, dirName), new Path(backupRoot, dirName))
+        val n = s"$dateCol=$v"
+        if (fs.exists(new Path(stagedRoot, n)))
+          SwapRecovery.replace(fs, new Path(stagedRoot, n), new Path(path, n),
+            new Path(asideRoot, n))
       }
-      fs.delete(staging, true)
-      // all swaps landed → the backup root is empty scaffolding
-      if (fs.exists(backupRoot) && fs.listStatus(backupRoot).isEmpty)
-        fs.delete(backupRoot, true)
+      // every staged partition was promoted and every aside dropped:
+      // what is left of both roots is scaffolding
+      fs.delete(stagedRoot, true)
+      fs.delete(asideRoot, true)
     }
     Tables.read(spark, path).count()
   }
@@ -310,20 +279,6 @@ object Sinks {
     (merged, touched)
   }
 
-  /** If a previous partition swap crashed between its renames, the
-    * backup under `<path>.pbackup/` holds the only copy of that
-    * partition — [[recover]] every such directory before anything
-    * reads or merges.
-    */
-  private def recoverPartitionSwaps(spark: SparkSession, path: String): Unit = {
-    val backupRoot = new Path(path + ".pbackup")
-    val fs = fsOf(spark, backupRoot)
-    if (!fs.exists(backupRoot)) return
-    fs.listStatus(backupRoot).foreach(st =>
-      recover(fs, new Path(path, st.getPath.getName), st.getPath))
-    fs.delete(backupRoot, true)
-  }
-
   /** Key-dim refresh with STABLE dense surrogate keys across loads:
     * only genuinely new natural keys get ids, continuing after the
     * stored maximum — re-delivered keys keep their original surrogate.
@@ -383,12 +338,12 @@ object Sinks {
     * loads fragment tables; compaction keeps scan task counts sane.
     */
   def compact(spark: SparkSession, path: String, rowsPerFile: Long): Long = {
-    require(tableExists(spark, path), s"no table at $path") // also recovers backups
+    require(tableExists(spark, path), s"no table at $path") // also repairs
     val df = Tables.read(spark, path)
     val rows = df.count()
     val files = math.max(1L, (rows + rowsPerFile - 1) / rowsPerFile).toInt
-    df.repartition(files).write.mode(SaveMode.Overwrite).parquet(path + ".compacting")
-    swapInto(spark, path + ".compacting", path)
+    df.repartition(files).write.mode(SaveMode.Overwrite).parquet(path + ".staging")
+    swapInto(spark, path)
     rows
   }
 

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *    land in a doomed pre-swap dir);
   *  - a fold never mixes FLAT and BATCH-KEYED files in one layer
   *    ([[StoreLayout.assertWritable]]);
-  *  - every swap rename is checked ([[StoreLayers.swap]]) — a failure
-  *    aborts before anything destructive;
+  *  - every compaction commits by [[SwapRecovery]]'s stage-then-swap
+  *    ([[StoreLayers.swap]]), whose crash layouts the lease repairs on
+  *    entry;
   *  - a lifecycle runs at most once per JVM per path ([[once]]).
   *
   * The mergeable-state stores ([[GramStore]], [[MixtureStore]],
@@ -65,11 +66,11 @@ private[sources] class StoreLayers(name: String,
       }
     }
 
-  /** Compact a mergeable-state store under the lease: every declared
-    * layer, in order, is repaired ([[SwapRecovery.recover]]), then
-    * replaced through the checked [[swap]] by `folded(layer)` — the
-    * store's fold law, evaluated only after the repair so it reads the
-    * PRE-swap layer. A batch-keyed layer stays keyed across compaction
+  /** Compact a mergeable-state store under the lease (whose entry
+    * repair leaves no swap debris): every declared layer, in order, is
+    * replaced through [[swap]] by `folded(layer)` — the store's fold
+    * law, evaluated while staging so it reads the PRE-swap layer. A
+    * batch-keyed layer stays keyed across compaction
     * (the folded rows land at `batch=-1`), so a stream can keep folding
     * batch layers in afterwards; a flat/keyed mix would be silently
     * lossy to read ([[StoreLayout]]'s invariant).
@@ -78,7 +79,6 @@ private[sources] class StoreLayers(name: String,
       folded: String => DataFrame): Unit =
     IndexLease.withLease(spark, path, s"$name-compact") {
       layers.foreach { l =>
-        SwapRecovery.recover(spark, path, l.name)
         val keyed = StoreLayout.isKeyed(spark, path, l.name)
         swap(spark, path, l.name) { staged =>
           val rows = folded(l.name)
@@ -135,23 +135,16 @@ private[sources] object StoreLayers {
   private[sources] def writer(df: DataFrame, parts: Seq[String]) =
     if (parts.isEmpty) df.write else df.write.partitionBy(parts: _*)
 
-  /** The one checked rename swap of a stored layer: `stage` writes the
-    * replacement to the given `<layer>_compacted` dir, the live layer
-    * is renamed aside, staging is promoted, the old bytes are dropped.
-    * Every rename is CHECKED — a failed rename throws before anything
-    * destructive, never falling through to leave a stale layer serving.
-    * Each crash point leaves a layout [[SwapRecovery.recover]] repairs.
-    * Callers hold the store's [[IndexLease]].
+  /** Replace a stored layer: `stage` writes the replacement to the
+    * given `<layer>_compacted` dir, then [[SwapRecovery.replace]] swaps
+    * it in, parking the live layer at `<layer>_old`. Callers hold the
+    * store's [[IndexLease]].
     */
   private[sources] def swap(spark: SparkSession, path: String,
       layer: String)(stage: String => Unit): Unit = {
     stage(s"$path/${layer}_compacted")
-    val fs = SwapRecovery.fsOf(spark, path)
-    SwapRecovery.renameOrThrow(fs, new Path(s"$path/$layer"),
+    SwapRecovery.replace(SwapRecovery.fsOf(spark, path),
+      new Path(s"$path/${layer}_compacted"), new Path(s"$path/$layer"),
       new Path(s"$path/${layer}_old"))
-    SwapRecovery.renameOrThrow(fs, new Path(s"$path/${layer}_compacted"),
-      new Path(s"$path/$layer"))
-    fs.delete(new Path(s"$path/${layer}_old"), true)
-    ()
   }
 }

@@ -30,8 +30,8 @@ object StorePaths {
     * this makes the ownership actually total.
     */
   def wipe(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) { fs.delete(p, true); () }
+    SwapRecovery.fsOf(spark, path)
+      .delete(new org.apache.hadoop.fs.Path(path), true)
+    ()
   }
 }

@@ -3,78 +3,112 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Crash recovery for the compaction rename swap
-  * ([[StoreLayers.swap]]) every persisted store compacts through: the
-  * retractable index stores ([[TombstonedLayers.compact]]) and the
-  * mergeable-state stores ([[StoreLayers.compactFolded]]).
+/** The one stage-then-swap commit of graft's immutable directories:
+  * the warehouse tables and fact date partitions [[Sinks]] lands, and
+  * the store layers every persisted store compacts ([[StoreLayers]]).
+  * A unit is three sibling directories: `live` (what readers see), the
+  * fully written `staged` replacement, and `aside`, where [[replace]]
+  * parks the previous copy. Each kind of unit passes only its own names:
   *
-  * The swap sequence is: write `<layer>_compacted` → rename `<layer>`
-  * to `<layer>_old` → rename `<layer>_compacted` to `<layer>` → delete
-  * `<layer>_old` → delete `tombstones` (tombstoned stores only). A
-  * crash between any two steps leaves exactly one of these states on
-  * disk, and each is recoverable to a COMPLETE serving index:
+  * {{{
+  * unit            staged                          aside
+  * table           <path>.staging                  <path>.backup
+  * fact partition  <path>.staging_parts/<col>=<v>  <path>.pbackup/<col>=<v>
+  * store layer     <layer>_compacted               <layer>_old
+  * }}}
   *
-  *  1. `<layer>` + partial/complete `<layer>_compacted` — the swap
-  *     never started; drop the staging dir (tombstones still mask).
-  *  2. `<layer>_old` + `<layer>_compacted` — mid-swap; promote the
-  *     compacted dir (it was fully written before step 2 began).
-  *  3. `<layer>` + `<layer>_old` — promoted but not cleaned; drop the
-  *     old dir (and, once every layer is clean, the tombstones — the
-  *     compacted data no longer contains the retracted rows, and the
-  *     mask is anti-join-idempotent in the meantime).
+  * The sequence is: write `staged` → rename `live` to `aside` → rename
+  * `staged` to `live` → delete `aside`. A crash between any two steps
+  * leaves one of these layouts, which [[repair]] returns to a committed
+  * state:
   *
-  * Call [[recover]] before serving from a store path whose process may
-  * have died mid-compact; every compact also calls it at
-  * ENTRY, so compaction never starts from a stranded layout (a rename
-  * onto an existing destination would fail FS-dependently). It is a
-  * no-op on a healthy layout. Mutual exclusion between live writers is
-  * [[IndexLease]]'s job — this object only repairs what a DEAD one
-  * left behind.
+  * {{{
+  * live  aside  staged  repair
+  * yes   -      -       "clean"
+  * yes   -      yes     the swap never began: drop staged ("dropped_staging")
+  * -     yes    yes     mid-swap: promote staged, drop aside ("promoted_staging")
+  * yes   yes    -       promoted, not cleaned: drop aside ("dropped_old")
+  * -     yes    -       restore aside as live ("restored_old")     [may be absent]
+  * -     -      yes     never committed: drop staged ("dropped_staging") [may be absent]
+  * -     -      -       "absent"                                    [may be absent]
+  * }}}
+  *
+  * Staged is complete before the first rename, so a mid-swap unit rolls
+  * forward. The bracketed rows hold only for a unit that may be absent
+  * (a table or partition before its first load); a store layer always
+  * exists, so for it they are refused like every other layout, and out
+  * of band surgery is left to a person. On a tombstoned store a refusal
+  * aborts the compact before the tombstone delete, so the mask keeps
+  * serving.
+  *
+  * Who repairs: every [[Sinks]] writer repairs its table on entry
+  * ([[Sinks.tableExists]]), the fact merge its partitions, and
+  * [[IndexLease.withLease]] every stranded layer of a store
+  * ([[recoverAll]]) on each acquisition, so no store mutation starts
+  * from debris. Mutual exclusion between live writers is the lease's
+  * job; this object only repairs what a dead one left behind.
   */
 object SwapRecovery {
 
-  /** Repair one layer's swap state; returns what it did (for logs and
-    * the spec). No-op ("clean") when only `<layer>` exists.
+  /** Swap the complete `staged` copy in as `live`, parking the previous
+    * copy at `aside` (its parent is created) until the promote landed.
+    * Every rename is checked: a failed promote renames the aside back
+    * and throws, so `live` keeps serving the previous copy.
     */
-  def recover(spark: SparkSession, path: String, layer: String): String = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(s"$path/$layer")
-    val old = new Path(s"$path/${layer}_old")
-    val staged = new Path(s"$path/${layer}_compacted")
-    (fs.exists(live), fs.exists(old), fs.exists(staged)) match {
-      case (true, false, true) => // crash before the swap began
-        fs.delete(staged, true); "dropped_staging"
-      case (false, true, true) => // crash mid-swap: promote staging
-        fs.rename(staged, live); fs.delete(old, true); "promoted_staging"
-      case (true, true, false) => // crash before cleanup
-        fs.delete(old, true); "dropped_old"
-      case (false, true, false) =>
-        // UNREACHABLE from the documented five-step sequence: once the
-        // live dir was renamed aside (step 2), staging exists until it
-        // is promoted (step 3), and after promotion live exists. Only
-        // out-of-band surgery produces this layout, and restoring _old
-        // as live would be safe ONLY while the tombstone mask is still
-        // present — an invariant this code cannot verify — so treat it
-        // as unrecoverable like the catch-all instead of guessing.
-        throw new IllegalStateException(
-          s"unexpected layout for $path/$layer: only ${layer}_old exists — " +
-            "not a state the swap sequence can strand; restore by hand " +
-            "after confirming the tombstone list still masks it")
-      case (true, false, false) => "clean"
-      case other =>
-        throw new IllegalStateException(
-          s"unrecoverable layout for $path/$layer: (live, old, staged) = $other")
+  def replace(fs: FileSystem, staged: Path, live: Path, aside: Path): Unit = {
+    val had = fs.exists(live)
+    if (had) {
+      fs.mkdirs(aside.getParent)
+      renameOrThrow(fs, live, aside)
     }
+    try renameOrThrow(fs, staged, live)
+    catch {
+      case e: IllegalStateException if had =>
+        renameOrThrow(fs, aside, live)
+        throw e
+    }
+    if (had) fs.delete(aside, true)
   }
+
+  /** Return one unit to a committed state (the table above) and say
+    * what it did. `mayBeAbsent` is the unit kind's one difference: a
+    * table or partition may not exist yet, a store layer must.
+    */
+  def repair(fs: FileSystem, live: Path, staged: Path, aside: Path,
+      mayBeAbsent: Boolean): String =
+    (fs.exists(live), fs.exists(aside), fs.exists(staged)) match {
+      case (true, false, false) => "clean"
+      case (true, false, true) => fs.delete(staged, true); "dropped_staging"
+      case (false, true, true) =>
+        renameOrThrow(fs, staged, live); fs.delete(aside, true)
+        "promoted_staging"
+      case (true, true, false) => fs.delete(aside, true); "dropped_old"
+      case (false, true, false) if mayBeAbsent =>
+        renameOrThrow(fs, aside, live); "restored_old"
+      case (false, false, true) if mayBeAbsent =>
+        fs.delete(staged, true); "dropped_staging"
+      case (false, false, false) if mayBeAbsent => "absent"
+      case (live_, aside_, staged_) =>
+        throw new IllegalStateException(
+          s"unrecoverable layout for $live: (live, aside, staged) = " +
+            s"($live_, $aside_, $staged_) — not a state the swap can strand " +
+            "for a unit that must exist; restore by hand (a tombstoned " +
+            "store: after confirming its tombstone list still masks it)")
+    }
+
+  /** [[repair]] one store layer: `<layer>_compacted`, `<layer>_old`. */
+  def recover(spark: SparkSession, path: String, layer: String): String =
+    repair(fsOf(spark, path), new Path(s"$path/$layer"),
+      new Path(s"$path/${layer}_compacted"), new Path(s"$path/${layer}_old"),
+      mayBeAbsent = false)
 
   /** Repair EVERY stranded layer under a store path, discovering the
     * layer names from the `<layer>_old` / `<layer>_compacted` debris a
     * dead writer left behind — the store-agnostic entry point
-    * [[IndexLease]]'s dead-holder takeover uses (the lease layer does
-    * not know which store layout it guards). A healthy path has no
-    * debris and this is a no-op; returns the repaired layer → action
-    * map for logs and the spec.
+    * [[IndexLease]] runs on each acquisition (the lease layer does not
+    * know which store layout it guards). A healthy path has no debris
+    * and this is one listing; returns the repaired layer → action map
+    * for logs and the spec.
     */
   def recoverAll(spark: SparkSession, path: String): Map[String, String] = {
     val fs = fsOf(spark, path)
@@ -105,6 +139,6 @@ object SwapRecovery {
         s"rename $from -> $to failed (stranded layout?); aborting the " +
           "swap before the tombstone delete — run recover() and retry")
 
-  private[sources] def fsOf(spark: SparkSession, path: String): FileSystem =
+  private[graft] def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

@@ -31,7 +31,7 @@ object Tables {
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = SwapRecovery.fsOf(spark, path)
     // the first file in full-path order: a directory's files sort as
     // if its name ended in "/", so this walk meets them in that order
     def firstFile(children: Array[FileStatus]): Option[FileStatus] =

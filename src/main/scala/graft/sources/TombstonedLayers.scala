@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * [[Tombstones]] ledgers, so the crash and retention rules hold for
   * all four by construction:
   *
-  *  - compact and expire [[SwapRecovery.recover]] every existing layer
-  *    on entry, so the renames always begin from a clean layout;
+  *  - compact and expire run under the lease, whose entry repair
+  *    ([[SwapRecovery]]) leaves no swap debris, so they read only the
+  *    declared layers that exist;
   *  - a keyed store writes the purged ledger BEFORE the swap (the
   *    expiry gate — see [[Tombstones.purged]]);
   *  - a KEYED store (primary layer batch-keyed, streamed maintenance)
@@ -66,14 +67,9 @@ private[sources] final class TombstonedLayers(name: String,
       Tombstones.append(ids, path, idCol)
     }
 
-  /** The declared layers on disk (live dir or swap debris), repaired. */
-  private def recovered(spark: SparkSession, path: String): Seq[Layer] = {
-    val fs = SwapRecovery.fsOf(spark, path)
-    layers.filter { l =>
-      Seq("", "_old", "_compacted")
-        .exists(s => fs.exists(new Path(s"$path/${l.name}$s")))
-    }.map { l => SwapRecovery.recover(spark, path, l.name); l }
-  }
+  /** The declared layers on disk (the lease has already repaired them). */
+  private def onDisk(spark: SparkSession, path: String): Seq[Layer] =
+    layers.filter(l => has(spark, path, l.name))
 
   private def liveIds(spark: SparkSession, path: String,
       present: Seq[Layer]): DataFrame =
@@ -93,9 +89,9 @@ private[sources] final class TombstonedLayers(name: String,
   def compact(spark: SparkSession, path: String): Unit =
     IndexLease.withLease(spark, path, s"$name-compact") {
       // tombstones are deleted LAST, so every strandable crash layout
-      // still has them — no tombstones means nothing to repair or fold
+      // still has them — no tombstones means nothing to fold
       if (Tombstones.exists(spark, path)) {
-        val present = recovered(spark, path)
+        val present = onDisk(spark, path)
         val keyed = StoreLayout.isKeyed(spark, path, primary.name)
         if (present.nonEmpty) {
           val purgeSet = Tombstones.all(spark, path, idCol)
@@ -144,7 +140,7 @@ private[sources] final class TombstonedLayers(name: String,
   def expire(spark: SparkSession, path: String): Unit =
     IndexLease.withLease(spark, path, s"$name-expire") {
       if (Tombstones.exists(spark, path)) {
-        val present = recovered(spark, path)
+        val present = onDisk(spark, path)
         val expirable = Tombstones.expirable(spark, path, idCol)
         Tombstones.appendExpired(
           if (present.isEmpty) expirable

@@ -50,9 +50,7 @@ object DimFeed {
       loads: Seq[(DataFrame, String)], keys: Seq[String],
       tracked: Seq[String], workDir: String): DataFrame = {
     require(loads.nonEmpty, "replayScd2 needs at least one load")
-    val root = new org.apache.hadoop.fs.Path(workDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    graft.sources.StorePaths.wipe(spark, workDir)
     val stage = java.nio.file.Paths.get(s"$workDir/stage")
     loads.zipWithIndex.foreach { case ((df, _), i) =>
       // __load_seq doubles as the sink's latestBy collapse column; a

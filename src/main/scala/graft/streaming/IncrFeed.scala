@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.operators.IncrementalAgg
-import graft.sources.Tables
+import graft.sources.{Sinks, StorePaths, SwapRecovery, Tables}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -25,14 +26,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object IncrFeed {
 
-  private def hfs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-  }
-
   /** Last batch id folded into `table`, or -1 for a fresh table. */
   private[streaming] def appliedBatch(spark: SparkSession, table: String): Long = {
-    val (p, fs) = hfs(spark, s"$table/_applied_batch")
+    val p = new Path(s"$table/_applied_batch")
+    val fs = SwapRecovery.fsOf(spark, table)
     if (!fs.exists(p)) -1L
     else {
       val in = fs.open(p)
@@ -50,10 +47,10 @@ object IncrFeed {
       keys: Seq[String], spec: IncrementalAgg.Spec): Unit = {
     val spark = batch.sparkSession
     val table = s"$path/data"
-    val (_, fs) = hfs(spark, table)
-    // recover FIRST: after a crash between the swap's two renames the
-    // folded state (and its marker) lives only in `data.backup`
-    val exists = graft.sources.Sinks.tableExists(spark, table)
+    // repair FIRST: after a crash between the swap's two renames the
+    // folded state (and its marker) lives only in `data.backup` and
+    // `data.staging`
+    val exists = Sinks.tableExists(spark, table)
     if (id > appliedBatch(spark, table)) {
       val partial = IncrementalAgg.partial(batch, keys, spec)
       val merged =
@@ -64,10 +61,10 @@ object IncrFeed {
       // the staging write is the action that drains the read of the
       // LIVE table — it completes before the swap renames anything
       merged.write.mode("overwrite").parquet(staging)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(s"$staging/_applied_batch"), true)
+      val out = SwapRecovery.fsOf(spark, table)
+        .create(new Path(s"$staging/_applied_batch"), true)
       try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-      graft.sources.Sinks.swapInto(spark, staging, table)
+      Sinks.swapInto(spark, table)
     }
   }
 
@@ -92,8 +89,7 @@ object IncrFeed {
       keys: Seq[String], spec: IncrementalAgg.Spec,
       workDir: String): DataFrame = {
     require(drops.nonEmpty, "replayIncrAgg needs at least one drop")
-    val (root, fs) = hfs(spark, workDir)
-    if (fs.exists(root)) fs.delete(root, true)
+    StorePaths.wipe(spark, workDir)
     val stage = java.nio.file.Paths.get(s"$workDir/stage")
     drops.zipWithIndex.foreach { case (df, i) =>
       ReplayDriver.stageFile(df, stage, "load_", i)

@@ -256,6 +256,61 @@ class SinksSpec extends SparkSpecBase {
     assert(g1 == g2)
   }
 
+  private def dim(path: String): Seq[(String, Long)] =
+    spark.read.parquet(path).orderBy("nk").as[(String, Long)].collect().toSeq
+
+  test("mergeDimSurrogate: a dim crashed between its renames rolls forward; a redelivered load matches an uncrashed run") {
+    val root = Files.createTempDirectory("graft_dim_midswap").toString
+    val load1 = Seq("b", "a", "c").toDF("nk")
+    val load2 = Seq("c", "e", "d").toDF("nk")
+    Seq("crashed", "clean", "staged").foreach { t =>
+      Sinks.mergeDimSurrogate(spark, s"$root/$t", load1, "nk", "guid")
+    }
+    Seq("clean", "staged").foreach { t =>
+      Sinks.mergeDimSurrogate(spark, s"$root/$t", load2, "nk", "guid")
+    }
+    // load2's swap on `crashed` died after the live dim was backed up
+    // and before its complete staged copy was promoted
+    val fs = SwapRecovery.fsOf(spark, root)
+    def hp(s: String) = new org.apache.hadoop.fs.Path(s)
+    assert(fs.rename(hp(s"$root/crashed"), hp(s"$root/crashed.backup")))
+    assert(fs.rename(hp(s"$root/staged"), hp(s"$root/crashed.staging")))
+    assert(Sinks.mergeDimSurrogate(spark, s"$root/crashed", load2, "nk", "guid") == 5)
+    assert(dim(s"$root/crashed") == dim(s"$root/clean"))
+    assert(dim(s"$root/crashed").map(_._2).sorted == (1L to 5L))
+    Seq(".backup", ".staging").foreach { s =>
+      assert(!new java.io.File(s"$root/crashed$s").exists(), s)
+    }
+  }
+
+  test("a partial .staging beside a live dim is dropped, never promoted") {
+    val path = Files.createTempDirectory("graft_dim_partial").toString + "/dim"
+    val v1 = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "name", "price")
+    Sinks.mergeDim(spark, path, v1, Seq("k"), Seq("name", "price"))
+    // a load that died while staging: one rewritten row, no swap begun
+    Seq((1L, "PARTIAL", 0.0)).toDF("k", "name", "price")
+      .write.parquet(path + ".staging")
+    assert(Sinks.mergeDim(spark, path, v1.filter(col("k") === 2L), Seq("k"),
+      Seq("name", "price")) == 2)
+    assert(!new java.io.File(path + ".staging").exists())
+    assert(spark.read.parquet(path).orderBy("k")
+      .as[(Long, String, Double)].collect().toSeq == Seq((1L, "a", 1.0), (2L, "b", 2.0)))
+  }
+
+  test("a refused table promote rolls the backup back; the table serves unchanged") {
+    val path = Files.createTempDirectory("graft_dim_refused").toString + "/dim"
+    val v1 = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "name", "price")
+    Sinks.mergeDim(spark, path, v1, Seq("k"), Seq("name", "price"))
+    Seq((1L, "A", 9.0), (2L, "B", 9.0)).toDF("k", "name", "price")
+      .write.parquet(path + ".staging")
+    intercept[IllegalStateException] {
+      Sinks.swapInto(spark, RenameRefusingFs.path(spark, path))
+    }
+    assert(!new java.io.File(path + ".backup").exists())
+    assert(spark.read.parquet(path).orderBy("k")
+      .as[(Long, String, Double)].collect().toSeq == Seq((1L, "a", 1.0), (2L, "b", 2.0)))
+  }
+
   test("compaction shrinks file count and preserves rows") {
     val dir = Files.createTempDirectory("graft_compact").toString + "/t"
     val df = Tables.lineitem(spark, sfDir)

@@ -121,6 +121,34 @@ class SwapRecoverySpec extends SparkSpecBase {
     assert(err.getMessage.contains("aborting"))
   }
 
+  test("a refused promote in the repair throws and keeps both _old and _compacted") {
+    // mid-swap layout, repaired through a filesystem whose rename of the
+    // staged dir returns false: an unchecked promote would fall through
+    // and delete _old, stranding the store with neither live nor old
+    val (p, fs) = stagedIndex("s7")
+    fs.rename(hp(s"$p/bands"), hp(s"$p/bands_old"))
+    intercept[IllegalStateException] {
+      SwapRecovery.recover(spark, RenameRefusingFs.path(spark, p), "bands")
+    }
+    assert(new java.io.File(s"$p/bands_old").exists())
+    assert(new java.io.File(s"$p/bands_compacted").exists())
+    assert(SwapRecovery.recover(spark, p, "bands") == "promoted_staging")
+    assert(serve(p) == freshAnswer)
+  }
+
+  test("a refused layer promote rolls the live layer back; it serves unchanged") {
+    val (p, _) = stagedIndex("s8")
+    intercept[IllegalStateException] {
+      StoreLayers.swap(spark, RenameRefusingFs.path(spark, p), "bands")(_ => ())
+    }
+    assert(!new java.io.File(s"$p/bands_old").exists())
+    assert(serve(p) == freshAnswer)
+    // the next mutation's lease repair drops the staged copy
+    MinhashIndexStore.compact(spark, p)
+    assert(!new java.io.File(s"$p/bands_compacted").exists())
+    assert(serve(p) == freshAnswer)
+  }
+
   test("healthy layout is a no-op; completed compact still serves") {
     val (p, _) = stagedIndex("s4")
     // run the real compact to completion, then recover — nothing to do
