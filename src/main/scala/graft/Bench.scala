@@ -57,7 +57,7 @@ object Bench {
       while (i < reps && !sawFailure) {
         val t0 = System.nanoTime()
         try {
-          force(fn(spark, sfDir))
+          SparkEntry.runOwned(spark, sfDir, fn)(force)
           times += (System.nanoTime() - t0) / 1e9
         } catch { case _: Throwable => sawFailure = true }
         i += 1
@@ -65,8 +65,9 @@ object Bench {
       if (times.isEmpty) { failed += name; name -> (-1.0, -1.0) }
       else name -> (times.min, times.max)
     }.map { r =>
-      // measurement isolation, OUTSIDE the timed region: drop pinned
-      // blocks the finished entry leaked (every entry rebuilds its
+      // measurement isolation, OUTSIDE the timed region, behind the
+      // entry's own release of its pins: drop pinned blocks the
+      // finished entry leaked anyway (every entry rebuilds its
       // frames from the parquet inputs on each invocation — nothing
       // live references a previous entry's pins, and ContextCleaner
       // would otherwise only reclaim them on a future full GC). This

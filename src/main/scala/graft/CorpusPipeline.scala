@@ -102,11 +102,13 @@ object CorpusPipeline {
   }
 
   /** One curation run: srcDir (raw corpus) → outDir (staged curation
-    * tables). Returns per-stage row counts and timings.
+    * tables). Returns per-stage row counts and timings. The run owns
+    * and releases every pin its stages make.
     */
   def runCuration(spark: SparkSession, srcDir: String,
       outDir: String): Seq[StageResult] =
-    stages(spark, srcDir, outDir).map { case (n, f) => timed(n)(f()) }
+    org.apache.spark.sql.GraftInternal.owningPins(
+      stages(spark, srcDir, outDir).map { case (n, f) => timed(n)(f()) })
 
   /** Run ONE stage by name — the spark-submit unit an external
     * orchestrator schedules; stage ordering is the orchestrator's

@@ -62,58 +62,61 @@ object Pipeline {
     * (the reference's latest-drop-wins layer).
     */
   def runDailyLoad(spark: SparkSession, eventsRaw: DataFrame,
-      part: DataFrame, warehouseDir: String): Seq[StageResult] = {
-    // ONE parse, ONE view join per load: the chain's stages all derive
-    // from the prepped drop (StarSchema.prep — JSON parsed once) and
-    // the four views from one shared fact⋈dim frame. Both frames are
-    // DROP-sized (never warehouse-sized), so pinning them for the
-    // duration of the load is safe at any scale; without the pins the
-    // chain re-scanned and re-parsed the raw drop in 9 of its 10
-    // stages (guide §1.2 step 1: don't compute things twice).
-    val (prepped, jf) = prepFrames(spark, eventsRaw, part)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    prepped.persist(lvl)
-    jf.persist(lvl)
-    try {
-      val stageMap = stagesPrepped(spark, prepped, jf, part, warehouseDir).toMap
-      // run each phase's INDEPENDENT stages concurrently (guide §2.6:
-      // actions are only sequential because driver code calls them
-      // sequentially) — exactly the fan-out the orchestration contract
-      // declares (dags/graft_daily_dag.py: event_raw >> the four dims;
-      // d_event >> f_events; f_events >> the four views). Stages write
-      // disjoint tables, so phase-internal order cannot change content;
-      // the result list keeps StageNames order.
-      val phases = Seq(
-        Seq("event_raw"),
-        Seq("d_event", "d_user", "d_parameter", "d_item"),
-        Seq("f_events"),
-        Seq("view_yearly_counts", "view_item_rank", "view_top_item",
-          "view_top_platform"))
-      phases.flatMap { names =>
-        if (names.size == 1) Seq(timed(names.head)(stageMap(names.head)()))
-        else {
-          // the four views share the persisted view join (jf) with no
-          // count beforehand: concurrent readers of a block not yet
-          // cached wait on Spark's block write lock while the first
-          // reader computes it, so no work is duplicated, and a count
-          // first would only add a serial round to the load
-          val pool = java.util.concurrent.Executors
-            .newFixedThreadPool(names.size)
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          try {
-            val fs = names.map(n =>
-              scala.concurrent.Future(timed(n)(stageMap(n)())))
-            fs.map(f => scala.concurrent.Await.result(f,
-              scala.concurrent.duration.Duration.Inf))
-          } finally pool.shutdown()
+      part: DataFrame, warehouseDir: String): Seq[StageResult] =
+    // the load owns every pin its stages make, pool threads included
+    org.apache.spark.sql.GraftInternal.owningPins {
+      // ONE parse, ONE view join per load: the chain's stages all derive
+      // from the prepped drop (StarSchema.prep — JSON parsed once) and
+      // the four views from one shared fact⋈dim frame. Both frames are
+      // DROP-sized (never warehouse-sized), so pinning them for the
+      // duration of the load is safe at any scale; without the pins the
+      // chain re-scanned and re-parsed the raw drop in 9 of its 10
+      // stages (guide §1.2 step 1: don't compute things twice).
+      val (prepped, jf) = prepFrames(spark, eventsRaw, part)
+      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      prepped.persist(lvl)
+      jf.persist(lvl)
+      try {
+        val stageMap =
+          stagesPrepped(spark, prepped, jf, part, warehouseDir).toMap
+        // run each phase's INDEPENDENT stages concurrently (guide §2.6:
+        // actions are only sequential because driver code calls them
+        // sequentially) — exactly the fan-out the orchestration contract
+        // declares (dags/graft_daily_dag.py: event_raw >> the four dims;
+        // d_event >> f_events; f_events >> the four views). Stages write
+        // disjoint tables, so phase-internal order cannot change content;
+        // the result list keeps StageNames order.
+        val phases = Seq(
+          Seq("event_raw"),
+          Seq("d_event", "d_user", "d_parameter", "d_item"),
+          Seq("f_events"),
+          Seq("view_yearly_counts", "view_item_rank", "view_top_item",
+            "view_top_platform"))
+        phases.flatMap { names =>
+          if (names.size == 1) Seq(timed(names.head)(stageMap(names.head)()))
+          else {
+            // the four views share the persisted view join (jf) with no
+            // count beforehand: concurrent readers of a block not yet
+            // cached wait on Spark's block write lock while the first
+            // reader computes it, so no work is duplicated, and a count
+            // first would only add a serial round to the load
+            val pool = java.util.concurrent.Executors
+              .newFixedThreadPool(names.size)
+            implicit val ec: scala.concurrent.ExecutionContext =
+              scala.concurrent.ExecutionContext.fromExecutorService(pool)
+            try {
+              val fs = names.map(n =>
+                scala.concurrent.Future(timed(n)(stageMap(n)())))
+              fs.map(f => scala.concurrent.Await.result(f,
+                scala.concurrent.duration.Duration.Inf))
+            } finally pool.shutdown()
+          }
         }
+      } finally {
+        jf.unpersist(false)
+        prepped.unpersist(false)
       }
-    } finally {
-      jf.unpersist(false)
-      prepped.unpersist(false)
     }
-  }
 
   /** Run ONE stage by name — the spark-submit unit an external
     * orchestrator (Airflow, cron, anything) schedules; stage ordering

@@ -3191,10 +3191,11 @@ object SparkEntry {
       // verify) is mask-INDEPENDENT — build it once, shared by both
       // phase serves (r18: the two serves each re-ran it)
       val side = Dedup.prepareDeltaSide(delta, shared = true)
-      val reappended = Dedup.minhashNearDupsDeltaWith(side, delta, docs,
-        MS.bandsTable(s, path))
-        .withColumn("phase", lit("reappended"))
-        .localCheckpoint() // pin BEFORE the state mutates under it
+      // a cut, not a recomputable pin: recomputing after the delete
+      // below would read the mutated state
+      val reappended = org.apache.spark.sql.GraftInternal.cut(
+        Dedup.minhashNearDupsDeltaWith(side, delta, docs, MS.bandsTable(s, path))
+          .withColumn("phase", lit("reappended")))
       MS.delete(ids, path)              // fresh takedown, seq 2 — re-masks
       val redeleted = Dedup.minhashNearDupsDeltaWith(side, delta, docs,
         MS.bandsTable(s, path))
@@ -4538,6 +4539,14 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] =
     registry.flatMap(e => e.oracle.map(e.name -> _)).toMap
+
+  /** Run one entry and consume its frame with `use` as one unit of
+    * work: the pins the entry makes are released when `use` returns
+    * or throws. Bench and Verify run every entry through here.
+    */
+  def runOwned[T](spark: SparkSession, dir: String,
+      entry: (SparkSession, String) => DataFrame)(use: DataFrame => T): T =
+    org.apache.spark.sql.GraftInternal.owningPins(use(entry(spark, dir)))
 
   // ------------------------------------------------------------- oracle
 

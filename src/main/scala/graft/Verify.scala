@@ -13,8 +13,8 @@ object Verify {
     // no filter and gets the full dump
     val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_QUERIES"))
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try SparkEntry.runOwned(spark, sfDir, fn)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

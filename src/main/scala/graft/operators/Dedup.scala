@@ -1130,31 +1130,26 @@ object Dedup {
     val parts = math.max(1L, math.min(
       symRaw.sparkSession.sessionState.conf.numShufflePartitions.toLong,
       nEdges / 500000L + 1L)).toInt
-    val sym = symRaw.repartition(parts, col("src")).localCheckpoint()
-    // persist + materialize each round: iterative joins otherwise
-    // stack an exponentially deep lineage that every convergence
-    // check replays (persist beats localCheckpoint here — checkpoint
-    // re-executes the round's plan in a second job; the checksum
-    // action below already materializes the cache)
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("component", col("node"))
-      .localCheckpoint()
+    val sym = org.apache.spark.sql.GraftInternal.pinRecomputable(
+      symRaw.repartition(parts, col("src")))
+    var labels = org.apache.spark.sql.GraftInternal.pinRecomputable(
+      sym.select(col("src").as("node")).distinct()
+        .withColumn("component", col("node")))
     def checksumOf(df: DataFrame): Long = df
       .agg(coalesce(sum(col("component")), lit(0L))).head().getLong(0)
     var checksum = checksumOf(labels)
     var converged = labels.isEmpty // empty graph: already done
     var iter = 0
-    var pinned: DataFrame = null
-    var root: DataFrame = null
+    // persist + materialize each round: iterative joins otherwise
+    // stack an exponentially deep lineage that every convergence
+    // check replays (persist beats a cut here — a cut re-executes the
+    // round's plan in a second job; the checksum action already
+    // materializes the cache). Every 4th round is an eager cut
+    // instead: persist caps the REPLAYED lineage only while the cache
+    // holds — the logical plan still grows by one join per round, and
+    // an evicted block replays every prior round
+    val chain = new org.apache.spark.sql.GraftInternal.Rounds(cutEvery = 4)
     while (!converged && iter < maxIter) {
-      // every 4th round the frame is localCheckpointed instead of
-      // persisted: persist caps the REPLAYED lineage only while the
-      // cache holds — the logical plan still grows by one join per
-      // round, and an evicted block replays every prior round. The
-      // periodic eager cut bounds both; the checkpoint frame stays
-      // pinned until the next cut lands (it is the lineage root the
-      // persisted rounds between cuts recompute from).
-      val isCut = (iter + 1) % 4 == 0
       val stepped = sym
         .join(labels, sym("src") === labels("node"))
         .select(col("dst").as("node"), col("component"))
@@ -1162,21 +1157,13 @@ object Dedup {
         .repartition(parts, col("node"))
         .groupBy(col("node"))
         .agg(min(col("component")).as("component"))
-      val propagated =
-        if (isCut) stepped.localCheckpoint(true) else stepped.persist()
       // fixpoint when the min-label checksum stops shrinking — the
-      // one action per round, which also fills the round's cache; the
-      // previous round unpersists only after the check that read it
-      val after = checksumOf(propagated)
-      converged = after == checksum
-      checksum = after
-      if (pinned != null && (pinned ne root)) pinned.unpersist(false)
-      if (isCut) {
-        if (root != null) root.unpersist(false)
-        root = propagated
+      // one action per round, which also fills the round's cache
+      labels = chain.step(stepped) { propagated =>
+        val after = checksumOf(propagated)
+        converged = after == checksum
+        checksum = after
       }
-      pinned = propagated
-      labels = propagated
       iter += 1
     }
     // an unconverged result is WRONG (clusters split), never return it

@@ -62,7 +62,7 @@ object Graph {
     * terms are written as the same double literals on both sides.
     *
     * Scale shape: ONE shuffle per round. Every static frame is
-    * pre-partitioned on the hash key it joins on and localCheckpointed
+    * pre-partitioned on the hash key it joins on and pinned
     * (LogicalRDD preserves the partitioning, and alias-aware output
     * partitioning carries it through the renames): edges by `src`,
     * degrees and the node spine by `node`, and each round's rank frame
@@ -79,43 +79,34 @@ object Graph {
       damping: Double = 0.85): DataFrame = {
     val (e, nodes, deg, n) = prepare(edges)
     var r = nodes.withColumn("rank", lit(1.0 / n))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      // persist + count, not localCheckpoint: both cap the replayed
-      // lineage at one round, but checkpoint re-executes the round's
-      // plan (rebuilding its broadcasts) in a second job — measured
-      // ~1.5 s/round overhead at sf0.1 vs ~0.2 s for the persist
-      // chain. The previous round unpersists once its successor is
-      // materialized, so at most two round frames are ever cached.
-      val next = pageRankRound(e, nodes, deg, r, n, damping).persist()
-      next.count()
-      if (prev != null) prev.unpersist(false)
-      prev = next
-      r = next
-    }
+    // persist + count, not a cut: both cap the replayed lineage at one
+    // round, but a cut re-executes the round's plan (rebuilding its
+    // broadcasts) in a second job — measured ~1.5 s/round overhead at
+    // sf0.1 vs ~0.2 s for the persist chain. The previous round is
+    // released once its successor is materialized, so at most two
+    // round frames are ever cached.
+    val chain = new org.apache.spark.sql.GraftInternal.Rounds()
+    for (_ <- 1 to iters)
+      r = chain.step(pageRankRound(e, nodes, deg, r, n, damping))(_.count())
     r
   }
 
   /** The static per-graph frames every round reuses: edges partitioned
     * by `src`, the node spine and out-degrees partitioned by `node`,
-    * all checkpointed once, plus the node count.
+    * all pinned once, plus the node count.
     */
   private def prepare(edges: DataFrame): (DataFrame, DataFrame, DataFrame, Double) = {
-    // persist + one materializing action each, NOT localCheckpoint:
-    // checkpoint re-executes the (expensive, edge-sized) upstream plan
-    // in a second job per frame — three frames deep that tripled the
-    // setup cost at sf0.1
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    e.count()
-    val nodes = e.select(col("src").as("node")).distinct().persist()
+    import org.apache.spark.sql.GraftInternal.pinRecomputable
+    // recomputable pins, NOT cuts: a cut re-executes the (expensive,
+    // edge-sized) upstream plan in a second job per frame — three
+    // frames deep that tripled the setup cost at sf0.1
+    val e = pinRecomputable(edges.select(col("src"), col("dst"))
+      .repartition(col("src")))
+    val nodes = pinRecomputable(e.select(col("src").as("node")).distinct())
     val n = nodes.count().toDouble
-    // deg is first consumed inside round 1, which fills its cache —
-    // no extra action needed
-    val deg = e.groupBy(col("src"))
+    val deg = pinRecomputable(e.groupBy(col("src"))
       .agg(count(lit(1)).cast("double").as("outdeg"))
-      .select(col("src").as("node"), col("outdeg"))
-      .persist()
+      .select(col("src").as("node"), col("outdeg")))
     (e, nodes, deg, n)
   }
 
@@ -167,11 +158,19 @@ object Graph {
     val (e, nodes, deg, n) = prepare(edges)
     if (n == 0) return (nodes.withColumn("rank", lit(0.0)), 0)
     var r = nodes.withColumn("rank", lit(1.0 / n))
-    var pinned: DataFrame = null
-    var root: DataFrame = null
     var rounds = 0
-    var blocks = 0
     var delta = Double.MaxValue
+    // persist chain (see [[pageRank]]); the delta check is the
+    // materializing action, and the previous block is released only
+    // AFTER the delta that reads it. persist alone does NOT truncate
+    // lineage — a long convergence run grows the plan linearly and a
+    // cache-evicted block replays every prior round — so every second
+    // block is cut LAZILY: the cut lands when the delta action
+    // computes the block anyway, so the lineage truncation costs no
+    // extra job (an eager cut here re-executes the block's plan as a
+    // second job — measured +10 s at sf0.1 across a 9-round run)
+    val chain = new org.apache.spark.sql.GraftInternal.Rounds(
+      cutEvery = 2, eagerCut = false)
     while (rounds < maxIters && delta >= eps) {
       var stepped = r
       var inner = 0
@@ -180,33 +179,12 @@ object Graph {
         inner += 1
         rounds += 1
       }
-      blocks += 1
-      // persist chain (see [[pageRank]]); the delta check is the
-      // materializing action, and the previous block unpersists only
-      // AFTER the delta that reads it. persist alone does NOT truncate
-      // lineage — a long convergence run grows the plan linearly and a
-      // cache-evicted block replays every prior round — so every
-      // second block the frame is localCheckpointed LAZILY: the cut
-      // lands when the delta action computes the block anyway, so the
-      // lineage truncation costs no extra job (an eager checkpoint
-      // here re-executes the block's plan as a second job — measured
-      // +10 s at sf0.1 across a 9-round run). A checkpoint frame stays
-      // pinned until the NEXT checkpoint lands, because it is the
-      // lineage root the persisted frames between cuts recompute from.
-      val isCut = blocks % 2 == 0
-      val next =
-        if (isCut) stepped.localCheckpoint(false) else stepped.persist()
-      delta = next
-        .join(r.select(col("node"), col("rank").as("prev")), Seq("node"))
-        .agg(max(abs(col("rank") - col("prev"))).as("d"))
-        .head().getDouble(0)
-      if (pinned != null && (pinned ne root)) pinned.unpersist(false)
-      if (isCut) {
-        if (root != null) root.unpersist(false)
-        root = next
+      val prev = r.select(col("node"), col("rank").as("prev"))
+      r = chain.step(stepped) { next =>
+        delta = next.join(prev, Seq("node"))
+          .agg(max(abs(col("rank") - col("prev"))).as("d"))
+          .head().getDouble(0)
       }
-      pinned = next
-      r = next
     }
     (r, rounds)
   }
@@ -240,7 +218,7 @@ object Graph {
     // (degree aggregate, wedge build, closing-edge lookup) would
     // otherwise each recompute the possibly-expensive upstream edge
     // generation (same rule as connectedComponents' edge checkpoint).
-    // pinRecomputable: eager like localCheckpoint, but lineage stays
+    // pinRecomputable: eager like a cut, but lineage stays
     // intact so executor loss recomputes instead of failing the job
     val ue = org.apache.spark.sql.GraftInternal.pinRecomputable(
       edges.filter(col("src") < col("dst"))

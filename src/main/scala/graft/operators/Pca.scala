@@ -96,56 +96,60 @@ object Pca {
   def topComponent(emb: DataFrame, iters: Int = 3,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(iters >= 1, s"topComponent needs iters >= 1, got $iters")
-    val dim = Similarity.embeddingDim(emb)
-    val pts = emb.filter(col(vecCol).isNotNull)
-      .select(col(idCol), col("label"),
-        graft.functions.VectorFunctions.asDouble(col(vecCol)).as("x"))
-      .persist()
-
-    // 1. column means, rounded, pinned driver-side
-    val means: Array[Double] = {
-      val rows = pts
-        .select(posexplode(col("x")).as(Seq("pos", "v")))
-        .groupBy(col("pos"))
-        .agg(round(sum(col("v")) / count(lit(1)), 6).as("m"))
-        .collect()
-      val a = new Array[Double](dim)
-      rows.foreach(r => a(r.getInt(0)) = r.getDouble(1))
-      a
-    }
-
-    val centered: Column = zip_with(col("x"), typedlit(means), (v, m) => v - m)
-
-    // 2. Gram of the centered data via the typed aggregator: one
-    // in-place d²-double buffer per partition, ONE buffer per partition
-    // in the exchange (no per-row d² explode). Cells round to 6 dp on
-    // the driver with the same HALF_UP rule the oracle's round() uses.
-    val gramAgg = udaf(new graft.functions.GramAggregator(dim))
-    val cells = pts.select(centered.as("cx"))
-      .agg(gramAgg(col("cx")).as("g"))
-      .head().getSeq[Double](0)
-    val g = Array.tabulate(dim, dim)((i, j) => r6(cells(i * dim + j)))
+    val (pts, centered, g) = centeredGram(emb, vecCol, idCol)
 
     // 3. driver-side power iteration, every step rounded like the
     // oracle (a zero matvec — all vectors identical, zero Gram — has
     // no dominant direction: the shared helper stops with the zero
     // vector instead of 0/0)
-    val (v, evScale) = powerIterate(g, dim, iters)
+    val (v, evScale) = powerIterate(g, g.length, iters)
 
     // 4. score pass: centered projection onto the component
     val score = aggregate(
       zip_with(centered, typedlit(v), (c, w) => c * w),
       lit(0.0), (acc, x) => acc + x)
-    val out = pts.select(col(idCol), col("label"),
+    pts.select(col(idCol), col("label"),
       round(score, 4).as("pc1_score"),
       round(lit(evScale), 4).as("ev_scale"))
-    // the persist serves the two driver-side reductions (means, Gram)
-    // ONLY: unpersisting here means the caller's score action re-reads
-    // the source through the filter/cast projection — a single cheap
-    // scan, deliberately preferred over holding corpus-sized blocks
-    // pinned until an unknowable caller action
-    pts.unpersist()
-    out
+  }
+
+  /** The points, their centering column and their 6-dp centered Gram
+    * — the two driver-side reductions [[topComponent]] and
+    * [[topComponents2]] share:
+    *  1. column means, rounded, pinned driver-side;
+    *  2. the Gram of the centered data via the typed aggregator: one
+    *     in-place d²-double buffer per partition, ONE buffer per
+    *     partition in the exchange (no per-row d² explode). Cells round
+    *     to 6 dp on the driver with the same HALF_UP rule the oracle's
+    *     round() uses.
+    * The points are persisted for these two reductions ONLY and
+    * released in a `finally`: the caller's score action re-reads the
+    * source through the filter/cast projection — a single cheap scan,
+    * deliberately preferred over holding corpus-sized blocks pinned
+    * until an unknowable caller action.
+    */
+  private def centeredGram(emb: DataFrame, vecCol: String, idCol: String)
+      : (DataFrame, Column, Array[Array[Double]]) = {
+    val dim = Similarity.embeddingDim(emb)
+    val pts = emb.filter(col(vecCol).isNotNull)
+      .select(col(idCol), col("label"),
+        graft.functions.VectorFunctions.asDouble(col(vecCol)).as("x"))
+      .persist()
+    try {
+      val rows = pts
+        .select(posexplode(col("x")).as(Seq("pos", "v")))
+        .groupBy(col("pos"))
+        .agg(round(sum(col("v")) / count(lit(1)), 6).as("m"))
+        .collect()
+      val means = new Array[Double](dim)
+      rows.foreach(r => means(r.getInt(0)) = r.getDouble(1))
+      val centered = zip_with(col("x"), typedlit(means), (v, m) => v - m)
+      val gramAgg = udaf(new graft.functions.GramAggregator(dim))
+      val cells = pts.select(centered.as("cx"))
+        .agg(gramAgg(col("cx")).as("g"))
+        .head().getSeq[Double](0)
+      (pts, centered, Array.tabulate(dim, dim)((i, j) => r6(cells(i * dim + j))))
+    } finally { pts.unpersist(); () }
   }
 
   /** The dominant component served from PERSISTED raw moments
@@ -242,28 +246,8 @@ object Pca {
   def topComponents2(emb: DataFrame, iters: Int = 3,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(iters >= 1, s"topComponents2 needs iters >= 1, got $iters")
-    val dim = Similarity.embeddingDim(emb)
-    val pts = emb.filter(col(vecCol).isNotNull)
-      .select(col(idCol), col("label"),
-        graft.functions.VectorFunctions.asDouble(col(vecCol)).as("x"))
-      .persist()
-    val means: Array[Double] = {
-      val rows = pts
-        .select(posexplode(col("x")).as(Seq("pos", "v")))
-        .groupBy(col("pos"))
-        .agg(round(sum(col("v")) / count(lit(1)), 6).as("m"))
-        .collect()
-      val a = new Array[Double](dim)
-      rows.foreach(r => a(r.getInt(0)) = r.getDouble(1))
-      a
-    }
-    val centered: Column = zip_with(col("x"), typedlit(means), (v, m) => v - m)
-    val gramAgg = udaf(new graft.functions.GramAggregator(dim))
-    val cells = pts.select(centered.as("cx"))
-      .agg(gramAgg(col("cx")).as("g"))
-      .head().getSeq[Double](0)
-    val g = Array.tabulate(dim, dim)((i, j) => r6(cells(i * dim + j)))
-
+    val (pts, centered, g) = centeredGram(emb, vecCol, idCol)
+    val dim = g.length
     val (v1, ev1) = powerIterate(g, dim, iters)
     val (g2, _) = deflate(g, v1, dim)
     val (v2, ev2) = powerIterate(g2, dim, iters)
@@ -272,13 +256,11 @@ object Pca {
     def score(dir: Array[Double]): Column = aggregate(
       zip_with(centered, typedlit(dir), (c, w) => c * w),
       lit(0.0), (acc, x) => acc + x)
-    val out = pts.select(col(idCol), col("label"),
+    pts.select(col(idCol), col("label"),
       round(score(v1), 4).as("pc1_score"),
       round(score(v2), 4).as("pc2_score"),
       round(lit(ev1), 4).as("ev1_scale"),
       round(lit(ev2), 4).as("ev2_scale"),
       round(lit(pcDot), 4).as("pc_dot"))
-    pts.unpersist()
-    out
   }
 }

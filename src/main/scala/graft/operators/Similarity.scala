@@ -380,16 +380,13 @@ object Similarity {
     // distinct-vector grain with multiplicity: the map-side partial
     // aggregate collapses replicas before the exchange, so the shuffle
     // carries distinct-per-partition vectors only
-    // persist, not localCheckpoint: checkpoint would re-execute the
-    // projection in a second job; round 1's centroid pin is the first
-    // action over pts and materializes the cache (seeds come from raw)
-    val pts = raw
+    // a recomputable pin: every round and the member expansion read it
+    val pts = org.apache.spark.sql.GraftInternal.pinRecomputable(raw
       .groupBy(col("x"))
       .agg(min(col("vec_id")).as("vec_id"),
         count(lit(1)).cast("double").as("w"))
       .select(col("vec_id"), col("x"), col("w"),
-        VF.dot(col("x"), col("x")).as("xx"))
-      .persist()
+        VF.dot(col("x"), col("x")).as("xx")))
     // centroids are k tiny rows by construction — pin each round's
     // table as a driver-side LOCAL relation (collect + literal
     // re-create) instead of checkpointing: the per-round lineage cap

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * learned merge is k rows of driver state, the k-means-centroid
   * pattern). The merge pass itself is per-row
   * ([[BpeTokenizer.mergePass]] — left-to-right, non-overlapping),
-  * applied under `localCheckpoint` so the per-round lineage stays
-  * flat.
+  * applied under a lineage cut every round so the per-round lineage
+  * stays flat.
   *
   * Determinism (the oracle contract): training text is
   * `lower(text)` whitespace words restricted to `^[a-z]+$`; pair
@@ -63,11 +63,15 @@ object TokenizerTrain {
         transform(sequence(lit(1), length(col("w"))),
           i => col("w").substr(i, lit(1))).as("syms"),
         col("cnt"))
-    var cur = typed.localCheckpoint()
+    // every round is an eager cut; the previous one is released as its
+    // successor lands, and the last when the loop ends (the merge
+    // table is built on the driver and reads none of them)
+    val chain = new org.apache.spark.sql.GraftInternal.Rounds(cutEvery = 1)
+    var cur = chain.step(typed)(_ => ())
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var rank = 1
     var done = false
-    while (rank <= numMerges && !done) {
+    try while (rank <= numMerges && !done) {
       val top = cur
         .filter(size(col("syms")) >= 2)
         .select(col("cnt"), explode(
@@ -84,14 +88,11 @@ object TokenizerTrain {
       else {
         val Row(a: String, b: String, n: Long) = top(0)
         learned += ((rank, a, b, n))
-        val prev = cur
-        cur = cur
-          .select(mergeExpr(col("syms"), a, b).as("syms"), col("cnt"))
-          .localCheckpoint()
-        prev.unpersist()
+        cur = chain.step(
+          cur.select(mergeExpr(col("syms"), a, b).as("syms"), col("cnt")))(_ => ())
         rank += 1
       }
-    }
+    } finally chain.release()
     import spark.implicits._
     learned.toSeq
       .toDF("rank", "pair_a", "pair_b", "n_occurrences")

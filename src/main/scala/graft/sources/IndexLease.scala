@@ -60,7 +60,13 @@ import org.apache.spark.sql.SparkSession
   * Reads never take the lease — serving stays lock-free because every
   * intermediate compact state keeps a complete copy on disk (the
   * stage-then-swap of [[SwapRecovery]], whose Scaladoc tables the
-  * layouts and their repair).
+  * layouts and their repair). One window is not covered: between
+  * `SwapRecovery.replace`'s two renames the copies sit at
+  * `<layer>_old` and `<layer>_compacted`, and the layer path itself is
+  * absent, so a read that opens the layer then finds neither version
+  * (a table between `<path>` → `<path>.backup` and the promote is the
+  * same). The versioned manifest of ROADMAP item 2, where a commit is
+  * one log append, is what closes it.
   */
 object IndexLease {
 

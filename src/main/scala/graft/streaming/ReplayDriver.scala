@@ -13,9 +13,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQu
   *    mtime-stamped parquet file, so a one-file-per-trigger source
   *    replays loads in staging order. [[staged]] memoizes a staging
   *    dir per JVM by (tag, dataset): staged loads are a pure function
-  *    of the dataset, so only the stream itself runs per call. Staging
-  *    dirs and [[runDir]]s are deleted when the JVM exits, the
-  *    lifetime of the memo.
+  *    of the dataset, so only the stream itself runs per call. A
+  *    staging run owns the pins it makes (it derives only files and
+  *    scalars). Staging dirs and [[runDir]]s are deleted when the JVM
+  *    exits, the lifetime of the memo.
   *  - '''Source.''' [[drops]] streams a staged dir, its schema read
   *    from the first staged file, one file per trigger by default.
   *  - '''Run.''' Every sink runs through one run-to-end step: graft's
@@ -29,11 +30,11 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQu
   *    the session conf is restored in a `finally`.
   *  - '''Batch.''' [[foreachDrop]] wraps the body of a `foreachBatch`
   *    topology: the batch is persisted (unless the body reads it only
-  *    once), the body runs as the owner of
-  *    every pin it makes on the batch thread
-  *    ([[org.apache.spark.sql.GraftInternal.owningPins]]), and pins and
-  *    batch are released in a `finally` — a long-lived stream keeps
-  *    nothing of a finished micro-batch, failed or not.
+  *    once), the body runs as the owner of every pin, cut and
+  *    persisted round it makes, on the batch thread and on threads it
+  *    starts ([[org.apache.spark.sql.GraftInternal.owningPins]]), and
+  *    pins and batch are released in a `finally` — a long-lived stream
+  *    keeps nothing of a finished micro-batch, failed or not.
   */
 private[graft] object ReplayDriver {
 
@@ -68,7 +69,8 @@ private[graft] object ReplayDriver {
       fill: java.nio.file.Path => T): (String, T) = {
     val (dir, derived) = stagedDirs.computeIfAbsent((tag, key), _ => {
       val st = runDir(tag)
-      val derived = fill(java.nio.file.Paths.get(st))
+      val derived = org.apache.spark.sql.GraftInternal.owningPins(
+        fill(java.nio.file.Paths.get(st)))
       (st, derived)
     })
     (dir, derived.asInstanceOf[T])
@@ -125,7 +127,7 @@ private[graft] object ReplayDriver {
     * micro-batch, resuming from `chk` if it has committed batches. The
     * batch is persisted for the body (`persist = false` for a body that
     * reads its batch once: caching it would only copy it), and the body
-    * owns every pin it makes on the batch thread; both are released
+    * owns every pin it makes; both are released
     * when it returns or throws.
     */
   def foreachDrop(src: DataFrame, chk: String, persist: Boolean = true)(

@@ -1104,8 +1104,8 @@ object StreamReplay {
         .filter(!(col("doc_id") % m).isin(dropRes.map(_.toLong): _*))
       val base = baseFull.select(col("doc_id"), col("text"))
       val hashable = base.filter(col("text").isNotNull)
-      val canonIds = Dedup.exact(hashable)
-        .select(col("keep_id").as("doc_id")).localCheckpoint()
+      val canonIds = org.apache.spark.sql.GraftInternal.pinRecomputable(
+        Dedup.exact(hashable).select(col("keep_id").as("doc_id")))
       val canonDocs = hashable.join(canonIds, Seq("doc_id"), "left_semi")
       MinhashIndexStore.buildKeyed(canonDocs, s"$stage/mh_base")
       Dedup.minhashNearDupPairs(canonDocs).filter(col("jaccard") >= 0.5)

@@ -9,6 +9,12 @@ import org.apache.spark.sql.types.StructType
   * a DataFrame from an InternalRow RDD without the external-Row
   * encode/decode round trip (which dominates the cost of RDD-based
   * operators on wide rows).
+  *
+  * It is also the one pin module. A frame is materialized as one of
+  * two kinds: a [[pinRecomputable recomputable pin]] (eager, lineage
+  * intact) or a [[cut lineage cut]]; an iterative loop persists and
+  * cuts its rounds through [[Rounds]]. Every one registers with the
+  * enclosing [[owningPins]] scope, which releases it through [[unpin]].
   */
 object GraftInternal {
 
@@ -31,14 +37,6 @@ object GraftInternal {
   def expressionOf(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
-  /** Test-only observation hook: [[pinRecomputable]] materializes via
-    * a raw RDD action (no SQL execution id), so QueryExecutionListener
-    * never sees a pinned stage's plan — plan-audit specs register a
-    * callback here to assert on it (e.g. that the delta serve's stored
-    * index scan sits inside a pinned stage). Never set in production.
-    */
-  @volatile var pinObserver: DataFrame => Unit = null
-
   /** Eagerly materialize `df` into a MEMORY_AND_DISK-persisted
     * InternalRow RDD wrapped back as a [[org.apache.spark.sql.execution.LogicalRDD]]
     * — `Dataset.localCheckpoint(eager = true)` minus the lineage
@@ -56,56 +54,142 @@ object GraftInternal {
     * before persisting mirrors `Dataset.checkpoint` — the upstream
     * iterator reuses UnsafeRow buffers.)
     *
-    * NOT a substitute for `localCheckpoint` where the truncation
-    * itself is load-bearing: iterative loops cut lineage depth on
-    * purpose.
+    * The materialization runs as one SQL execution named "pin", so its
+    * (AQE stage) jobs carry an execution id and QueryExecutionListeners
+    * receive the pinned plan. The pin is [[owningPins owned]].
+    *
+    * NOT a substitute for [[cut]] where the truncation itself is
+    * load-bearing: iterative loops cut lineage depth on purpose.
     */
   def pinRecomputable(df: DataFrame): DataFrame = {
-    val obs = pinObserver
-    if (obs != null) obs(df)
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count()
-    val pinned = ofRows(df.sparkSession,
+    val qe = df.queryExecution
+    val rdd = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some("pin")) {
+        val r = qe.toRdd.map(_.copy())
+        r.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        r.count()
+        r
+      }
+    owned(ofRows(df.sparkSession,
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd,
         df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]],
-        isStreaming = false))
-    val owner = pinOwner.get
-    if (owner != null) owner += pinned
-    pinned
+        isStreaming = false)))
   }
 
-  private val pinOwner =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]
+  /** A lineage cut: `df.localCheckpoint(eager)`, [[owningPins owned]].
+    * Its blocks are executor-local and NOT recomputable, so a cut is
+    * only for where the truncation carries the load — the periodic
+    * round cuts of [[Rounds]], and a snapshot that must not re-read a
+    * store mutated after it was taken.
+    */
+  def cut(df: DataFrame, eager: Boolean = true): DataFrame =
+    owned(df.localCheckpoint(eager))
 
-  /** Run `body` as the owner of every [[pinRecomputable]] pin it makes
-    * on this thread, and [[unpin]] them all when it returns or throws.
-    * For a unit of work whose pins never outlive it — a streaming
-    * micro-batch, whose driver would otherwise hold every batch's pins
-    * until the session ends. Pins made on other threads (a concurrent
-    * pipeline stage) are not this owner's.
+  /** The pin schedule of an iterative loop: each round's frame is
+    * persisted (lazily — the round's one action fills it), or, every
+    * `cutEvery`-th round, [[cut]] (eagerly, or lazily so the cut lands
+    * with that action). A round supersedes the previous one once its
+    * action has run: a persisted round is then [[unpin unpinned]], a
+    * cut stays until the next cut lands, because it is the lineage
+    * root the persisted rounds between cuts recompute from. The last
+    * round and its root stay [[owningPins owned]] (the loop's result
+    * reads them) until [[release]]. `cutEvery = 0` never cuts.
+    */
+  final class Rounds(cutEvery: Int = 0, eagerCut: Boolean = true) {
+    private var n = 0
+    private var last: DataFrame = null
+    private var root: DataFrame = null
+
+    /** Pin `round` as the next round, run `fill` (the round's one
+      * materializing action) on it, release what it supersedes, and
+      * return it.
+      */
+    def step(round: DataFrame)(fill: DataFrame => Any): DataFrame = {
+      n += 1
+      val isCut = cutEvery > 0 && n % cutEvery == 0
+      val pinned = if (isCut) cut(round, eagerCut) else owned(round.persist())
+      fill(pinned)
+      if (last != null && (last ne root)) unpin(last)
+      if (isCut) {
+        if (root != null) unpin(root)
+        root = pinned
+      }
+      last = pinned
+      pinned
+    }
+
+    /** Unpin the last round and its root — for a loop whose result no
+      * longer reads them.
+      */
+    def release(): Unit = {
+      if (last != null) unpin(last)
+      if (root != null && (root ne last)) unpin(root)
+      last = null
+      root = null
+    }
+  }
+
+  /** The pins of one unit of work; closed when the unit ends, after
+    * which a thread that inherited it registers nothing more.
+    */
+  private final class Owner {
+    private val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private var open = true
+    def add(df: DataFrame): Unit = synchronized { if (open) pins += df }
+    def close(): Seq[DataFrame] = synchronized {
+      open = false
+      val all = pins.toList
+      pins.clear()
+      all
+    }
+  }
+
+  // inheritable: a thread started inside a unit of work (a pipeline
+  // stage pool, a stream's execution thread) registers with its owner
+  private val pinOwner = new InheritableThreadLocal[Owner]
+
+  private def owned(df: DataFrame): DataFrame = {
+    val owner = pinOwner.get
+    if (owner != null) owner.add(df)
+    df
+  }
+
+  /** Run `body` as the owner of every pin, cut and persisted round it
+    * makes — on this thread and on threads started inside it — and
+    * [[unpin]] them all when it returns or throws. The units of work
+    * are a daily load, a curation run, a Bench or Verify entry with
+    * the action that consumes it, a replay's staging and a stream
+    * micro-batch; a nested
+    * owner releases its own pins when it ends. Nothing made inside
+    * may be read after the owner ends.
+    *
+    * Lazy `Dataset.persist` calls released in the same function's
+    * `finally` (the daily load's shared drop frames, a micro-batch,
+    * Pca's points) stay as they are: their release is already scoped,
+    * and an eager pin would add a serial materializing round where
+    * the concurrent readers fill the cache themselves.
     */
   def owningPins[T](body: => T): T = {
     val outer = pinOwner.get
-    val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val mine = new Owner
     pinOwner.set(mine)
     try body
     finally {
       pinOwner.set(outer)
-      mine.foreach(unpin)
+      mine.close().foreach(unpin)
     }
   }
 
-  /** Release the persisted blocks behind a [[pinRecomputable]] frame —
-    * the owner's half of the pin, run in a `finally` once the frame's
-    * last consumer is done.
+  /** Release the blocks behind a pinned frame: a [[pinRecomputable]]
+    * pin or a [[cut]] (a frame over a LogicalRDD — `Dataset.unpersist`
+    * would release nothing, as the frame is no CacheManager entry), or
+    * a persisted round (a CacheManager entry).
     */
-  def unpin(pinned: DataFrame): Unit =
-    pinned.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
+  def unpin(pinned: DataFrame): Unit = pinned.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      r.rdd.unpersist(blocking = false); ()
+    case _ => pinned.unpersist(blocking = false); ()
+  }
 
   /** Delete `dir` when the JVM exits, through Spark's own shutdown
     * hook (the one that removes its local dirs) — for temp dirs whose

@@ -33,11 +33,11 @@ class ComponentsSpec extends SparkSpecBase {
 
   test("a small graph solved on the driver releases its pinned edge list") {
     val edges = Seq((2L, 1L), (3L, 2L), (11L, 10L)).toDF("a", "b")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val out = Dedup.connectedComponents(edges, "a", "b")
-      .as[(Long, Long)].collect().toMap
-    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    assertLeavesNoPins {
+      val out = Dedup.connectedComponents(edges, "a", "b")
+        .as[(Long, Long)].collect().toMap
+      assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    }
   }
 
   test("a long path converges within the iteration budget") {

@@ -176,18 +176,14 @@ class DedupIncrementalSpec extends SparkSpecBase {
     // Since r15 the candidate verify materializes eagerly (the pinned
     // copy→crep map and rep-grain verify frames), so the index scan
     // sits inside a pinned stage's job rather than the final plan —
-    // capture every pinned stage's plan via the pin hook and assert
+    // capture every pinned stage's plan via a SQL listener and assert
     // the index-path FileScan there (the r15 review found the old
     // final-plan disjunct `contains("Scan ExistingRDD")` vacuous once
     // pins exist in every plan).
-    val pinnedPlans = scala.collection.mutable.ArrayBuffer.empty[String]
-    org.apache.spark.sql.GraftInternal.pinObserver =
-      d => pinnedPlans.synchronized {
-        pinnedPlans += d.queryExecution.executedPlan.toString; ()
-      }
-    val df = try {
+    val (df, pins) = org.apache.spark.sql.PinPlans.during(spark) {
       val d = run(docs, path); d.collect(); d
-    } finally org.apache.spark.sql.GraftInternal.pinObserver = null
+    }
+    val pinnedPlans = pins.map(_.executedPlan.toString)
     val p = df.queryExecution.executedPlan.toString
     val finalSection = p.split("== Initial Plan ==").head
     val everywhere = (p +: pinnedPlans.toSeq).mkString("\n")
