@@ -1,6 +1,6 @@
 package graft
 import graft.sources.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, struct, xxhash64}
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -45,47 +45,10 @@ object Bench {
     // suite position dominate tail-query numbers (JIT/GC noise of
     // ±3-4x observed); the min of two runs tracks isolated re-runs
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    val results = selected.map { case (name, fn) =>
-      // stop at the first failing rep (no point re-running a throwing
-      // query); report the best SUCCESSFUL rep, and mark the query
-      // failed only when no rep succeeded — a transient second-rep
-      // failure must not discard a valid first-rep timing
-      val times = scala.collection.mutable.ListBuffer.empty[Double]
-      var sawFailure = false
-      var i = 0
-      while (i < reps && !sawFailure) {
-        val t0 = System.nanoTime()
-        try {
-          SparkEntry.runOwned(spark, sfDir, fn)(force)
-          times += (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => sawFailure = true }
-        i += 1
-      }
-      if (times.isEmpty) { failed += name; name -> (-1.0, -1.0) }
-      else name -> (times.min, times.max)
-    }.map { r =>
-      // measurement isolation, OUTSIDE the timed region, behind the
-      // entry's own release of its pins: drop pinned blocks the
-      // finished entry leaked anyway (every entry rebuilds its
-      // frames from the parquet inputs on each invocation — nothing
-      // live references a previous entry's pins, and ContextCleaner
-      // would otherwise only reclaim them on a future full GC). This
-      // does not precompute or carry anything INTO a timed region; it
-      // only stops entry N's garbage from taxing entry N+1.
-      // clearCache additionally DEREGISTERS Dataset-level persists from
-      // the shared CacheManager: every registered cache is a plan
-      // fragment that EVERY later action's planning must sameResult-
-      // compare against, so a suite that leaks a few caches per entry
-      // makes planning itself quadratic across 220 entries (measured:
-      // late-suite entries ran ~2.5x their isolated time with tight
-      // spreads — planning tax, not data).
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      r
-    }
-    val ok = results.filterNot { case (k, _) => failed.contains(k) }
+    val results = timeEntries(spark, selected, reps)(fn =>
+      SparkEntry.runOwned(spark, sfDir, fn)(force))
+    val failed = results.collect { case (k, None) => k }
+    val ok = results.collect { case (k, Some(v)) => k -> v }
     // 4-dp timings: full-precision doubles balloon the line past what
     // log captures keep intact, and sub-0.1ms digits are pure noise
     def r4(v: Double): String = BigDecimal(v)
@@ -111,4 +74,46 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** Each entry's best and worst time over `reps` runs of `run`, or
+    * None when no rep succeeded: the reps stop at the first failing one
+    * (no point re-running a throwing query), and a transient later
+    * failure does not discard a valid earlier timing.
+    *
+    * After each entry's reps, OUTSIDE the timed region and behind the
+    * entry's own release of its pins, a measurement isolation step
+    * drops the pinned blocks the finished entry leaked anyway (every
+    * entry rebuilds its frames from the parquet inputs on each
+    * invocation — nothing live references a previous entry's pins, and
+    * ContextCleaner would otherwise only reclaim them on a future full
+    * GC) and DEREGISTERS its Dataset-level persists from the shared
+    * CacheManager: every registered cache is a plan fragment that EVERY
+    * later action's planning must sameResult-compare against, so a
+    * suite that leaks a few caches per entry makes planning itself
+    * quadratic across 220 entries (measured: late-suite entries ran
+    * ~2.5x their isolated time with tight spreads — planning tax, not
+    * data). This does not precompute or carry anything INTO a timed
+    * region; it only stops entry N's garbage from taxing entry N+1.
+    * What it released is logged to stderr per entry (0 when the entry
+    * released its own pins).
+    */
+  private[graft] def timeEntries[T](spark: SparkSession, entries: Map[String, T],
+      reps: Int)(run: T => Unit): Map[String, Option[(Double, Double)]] =
+    entries.map { case (name, entry) =>
+      val times = scala.collection.mutable.ListBuffer.empty[Double]
+      var sawFailure = false
+      var i = 0
+      while (i < reps && !sawFailure) {
+        val t0 = System.nanoTime()
+        try {
+          run(entry)
+          times += (System.nanoTime() - t0) / 1e9
+        } catch { case _: Throwable => sawFailure = true }
+        i += 1
+      }
+      val (rdds, caches) = org.apache.spark.sql.GraftInternal.releaseAll(spark)
+      System.err.println(
+        s"[bench] $name released $rdds persisted RDDs and $caches cache entries")
+      name -> (if (times.isEmpty) None else Some((times.min, times.max)))
+    }
 }

@@ -3,8 +3,7 @@ package graft
 /** Drives the driver's smoke contract: SparkEntry.entry(spark) rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

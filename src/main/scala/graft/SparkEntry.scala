@@ -4350,7 +4350,6 @@ object SparkEntry {
           |SELECT f.doc_id, f.fingerprint, s.simhash
           |FROM fsh f JOIN sigs s USING (doc_id)
           |ORDER BY doc_id""".stripMargin)) { (s, dir) =>
-      graft.plans.GraftFunctions.ensureRegistered(s)
       t(s, dir, "documents").select(
         col("doc_id"),
         TF.fingerprint(col("text")).as("fingerprint"),

@@ -67,7 +67,7 @@ object TextFunctions {
   /** The [[shinglesFromWords]] law as a SET, via the codegen kernel
     * [[graft.plans.ShingleSetUtil]]: sorted (binary order), distinct,
     * one pass over the tokens — the input [[sortedJaccard]] expects.
-    * Requires [[graft.plans.GraftFunctions.ensureRegistered]].
+    * Resolves on a [[graft.GraftSession]] session.
     */
   def shingleSet(w: Column, n: Int): Column =
     call_function("graft_shingle_set", w, lit(n))
@@ -75,8 +75,8 @@ object TextFunctions {
   /** Full MinHash signature from a words-array column via the codegen
     * kernel [[graft.plans.MinhashSigUtil]] — one pass over the tokens,
     * byte-identical to `minhashSigFromHashes(transform(wordShingles,
-    * md5Hash32), k)` (spec-pinned). Callers must have graft functions
-    * registered ([[graft.plans.GraftFunctions.ensureRegistered]]).
+    * md5Hash32), k)` (spec-pinned). Resolves on a
+    * [[graft.GraftSession]] session.
     */
   def minhashSigWords(w: Column, n: Int, k: Int): Column =
     call_function("graft_minhash_sig", w, lit(n), lit(k))
@@ -137,8 +137,8 @@ object TextFunctions {
   /** MinHash signature over CHARACTER n-gram windows via the codegen
     * kernel (`graft_char_minhash_sig`) — value-identical to
     * `minhashSig(charNgrams(text, n), k)` but one tight pass instead
-    * of the interpreted HOF stack. Requires
-    * [[graft.plans.GraftFunctions.ensureRegistered]].
+    * of the interpreted HOF stack. Resolves on a
+    * [[graft.GraftSession]] session.
     */
   def minhashSigChars(text: Column, n: Int, k: Int): Column =
     call_function("graft_char_minhash_sig", text, lit(n), lit(k))
@@ -172,8 +172,8 @@ object TextFunctions {
   /** [[jaccard]] of two SORTED, DISTINCT string sets (what
     * [[shingleSet]] returns): the ratio is the two-pointer-merge
     * kernel [[graft.plans.SortedJaccardUtil]], the `round(…, 4)` the
-    * same builtin [[jaccard]] applies. Requires
-    * [[graft.plans.GraftFunctions.ensureRegistered]].
+    * same builtin [[jaccard]] applies. Resolves on a
+    * [[graft.GraftSession]] session.
     */
   def sortedJaccard(a: Column, b: Column): Column =
     round(call_function("graft_sorted_jaccard", a, b), 4)

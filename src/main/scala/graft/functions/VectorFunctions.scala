@@ -33,8 +33,8 @@ object VectorFunctions {
     */
   def cosineR(a: Column, b: Column): Column = round(cosine(a, b), 4)
 
-  /** Native (codegen'd) dot product — requires
-    * [[graft.plans.GraftFunctions.ensureRegistered]] on the session.
+  /** Native (codegen'd) dot product — resolves on a
+    * [[graft.GraftSession]] session.
     * Bit-identical to [[dot]] (same left-to-right double accumulation),
     * ~orders faster: the higher-order version interprets its lambdas,
     * the expression compiles to a primitive loop.

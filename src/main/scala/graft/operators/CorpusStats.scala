@@ -149,7 +149,6 @@ object CorpusStats {
   def decontaminate(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 4,
       maxShingles: Int = 2000): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     val keyed = docs.select(col(idCol),
       splitBucket(col(textCol)).as("bucket"),
       explode(call_function("graft_shingle_hash60",
@@ -200,7 +199,6 @@ object CorpusStats {
   def dupSpans(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 4,
       maxShingles: Int = 2000): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     // DISTINCT-TEXT collapse (the exact-collapse law): shingle sets are
     // pure functions of the text, so the explode, the spread aggregate,
     // and the per-doc rollup all run at distinct-text grain; the TRUE
@@ -256,7 +254,6 @@ object CorpusStats {
   def dupSpansClean(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 4,
       maxShingles: Int = 2000): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     // DISTINCT-TEXT collapse. The canonical-occurrence law decomposes
     // exactly: canon(h) = min doc_id holding h = min REP over the
     // groups holding h (every group's min id is its rep), and the true

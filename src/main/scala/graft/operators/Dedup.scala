@@ -202,7 +202,6 @@ object Dedup {
     */
   def minhashNearDupPairs(docs: DataFrame, numHashes: Int = 32,
       bands: Int = 8, maxBandFreq: Option[Long] = None): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     val rows = numHashes / bands
     // two-step projection: materialize the words array, THEN sign and
     // shingle it, so neither kernel re-runs the split
@@ -897,7 +896,6 @@ object Dedup {
     * oracle stays doc-grain and untouched.
     */
   def simhashNearDups(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     val (docRep, sizes) = textRepElection(docs)
     val repDocs = docs
       .join(sizes.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
@@ -1003,7 +1001,6 @@ object Dedup {
     val (docRep, grpSizes) = textRepElection(docs)
     val repDocs = docs.filter(col("text").isNotNull)
       .join(grpSizes.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     // LEAN signature pin: the pinned frame carries ids + the
     // 64-hash signature ONLY — the banded self-join and the pair
     // distinct move signature longs, never gram arrays. The old form
@@ -1338,7 +1335,6 @@ object Dedup {
     */
   private def embeddingRepPairs(emb: DataFrame, probeMod: Int,
       threshold: Double): (DataFrame, DataFrame) = {
-    graft.plans.GraftFunctions.ensureRegistered(emb.sparkSession)
     val vecs = emb.filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"),
         (col("vec_id") % probeMod === 0).as("is_probe"))
@@ -1565,7 +1561,6 @@ object Dedup {
   def embeddingNearDupsDelta(delta: DataFrame, all: DataFrame,
       storedSigs: DataFrame, bits: Int, threshold: Double = 0.35,
       broadcastDelta: Boolean = true): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(delta.sparkSession)
     val deltaSigs = graft.sources.EmbLshIndexStore.sigRows(delta, bits)
     val deltaSide =
       if (broadcastDelta) broadcast(deltaSigs) else deltaSigs
@@ -1626,7 +1621,6 @@ object Dedup {
     */
   def semanticDedup(emb: DataFrame, k: Int = 8, iters: Int = 3,
       threshold: Double = 0.35): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(emb.sparkSession)
     val vecs = emb.filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
     // distinct-vector groups: rep = min member id, size = twin count
@@ -1776,7 +1770,6 @@ object Dedup {
   private def semanticDeltaRepPairs(all: DataFrame, storedCells: DataFrame,
       deltaCells: DataFrame, threshold: Double)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    graft.plans.GraftFunctions.ensureRegistered(all.sparkSession)
     // disjointness guard, IN-PLAN (ids-only, lazy): the documented
     // precondition — stored and delta id sets must not overlap — was
     // previously unchecked, and an overlapping vec_id would silently
@@ -1842,7 +1835,6 @@ object Dedup {
     */
   private def bucketedNearDups(emb: DataFrame, threshold: Double,
       perTableWeights: Seq[Array[Array[Float]]]): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(emb.sparkSession)
     val perTable = perTableWeights.zipWithIndex.map { case (w, tbl) =>
       struct(lit(tbl).as("table_id"), VF.hyperplaneSig(col("embedding"), w).as("sig"))
     }

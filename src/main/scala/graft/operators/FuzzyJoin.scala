@@ -35,9 +35,8 @@ object FuzzyJoin {
     */
   def nearNames(df: DataFrame, textCol: String, maxDist: Int,
       block: Column => Column = lastTokenBlock): DataFrame = {
-    // registers BoundedLevenshteinRewrite: the <= maxDist verify below
-    // optimizes to the banded O(len·maxDist) levenshtein
-    graft.plans.GraftFunctions.ensureRegistered(df.sparkSession)
+    // BoundedLevenshteinRewrite optimizes the <= maxDist verify below to
+    // the banded O(len·maxDist) levenshtein
     val nm = df.select(col(textCol)).distinct()
       .withColumn("__blk", block(col(textCol)))
     val pairs = nm.alias("a").join(nm.alias("b"),

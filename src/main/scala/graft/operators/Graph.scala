@@ -278,7 +278,6 @@ object Graph {
     // merge-scan kernel (array_intersect builds a hash set PER ROW —
     // it dominated this operator's profile); other id types keep the
     // builtin
-    graft.plans.GraftFunctions.ensureRegistered(edges.sparkSession)
     val intersect =
       if (ue.schema("src").dataType == org.apache.spark.sql.types.LongType)
         call_function("graft_sorted_intersect", col("nu"), col("nv"))

@@ -43,7 +43,6 @@ object Quantize {
   def randomProject(emb: DataFrame, outDim: Int = 16,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     import graft.functions.VectorFunctions
-    graft.plans.GraftFunctions.ensureRegistered(emb.sparkSession)
     val dim = Similarity.embeddingDim(emb)
     val w = VectorFunctions.planeWeights(outDim, dim)
     val scale = math.sqrt(outDim.toDouble)

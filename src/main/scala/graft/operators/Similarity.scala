@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
-import graft.plans.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,7 +40,6 @@ object Similarity {
     */
   def bruteForceTopK(emb: DataFrame, probeFilter: org.apache.spark.sql.Column,
       k: Int = 5): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val probes = withNorm(emb.filter(probeFilter), "probe_id", "probe_emb", "probe_nrm")
     val scored = withNorm(emb, "cand_id", "cand_emb", "cand_nrm")
       .join(broadcast(probes), col("probe_id") =!= col("cand_id"))
@@ -65,7 +63,6 @@ object Similarity {
     */
   def lshTopK(emb: DataFrame, probeFilter: org.apache.spark.sql.Column,
       k: Int = 5, numTables: Int = 4, bitsPerTable: Int = 4): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val weights = VF.planeWeights(numTables * bitsPerTable, embeddingDim(emb))
 
     def sigs(df: DataFrame, idAs: String, embAs: String, nrmAs: String): DataFrame = {
@@ -146,7 +143,6 @@ object Similarity {
     */
   private[graft] def ivfSearch(cellCorpus: DataFrame, cents: DataFrame,
       probeRows: DataFrame, k: Int = 5, nprobe: Int = 2): DataFrame = {
-    GraftFunctions.ensureRegistered(cellCorpus.sparkSession)
     val probedCells = probeCells(cents, probeRows, nprobe)
       .select(col("probe_id"), col("probe_emb"), col("probe_nrm"), col("cell"))
     // exact search within probed cells only (a vector lives in exactly
@@ -226,7 +222,6 @@ object Similarity {
   def ivfPqTopK(emb: DataFrame, probeFilter: org.apache.spark.sql.Column,
       k: Int = 5, nprobe: Int = 2, labelCol: String = "label",
       rerank: Int = 15): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val corpus = emb.filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"), col(labelCol).as("cell"))
     // per-dimension global min/max grid — the scalarCodes construction

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -16,9 +16,9 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * logical node, a planner [[Strategy]] producing a two-phase physical
   * plan (partial per-partition heaps → cluster-by-group exchange
   * inserted automatically by `requiredChildDistribution` → final heaps
-  * emitting ranks), registered per session via
-  * `spark.experimental.extraStrategies`. Catalyst keeps optimizing
-  * around it (column pruning below, the exchange sizing by AQE).
+  * emitting ranks), injected into every graft session by
+  * [[GraftExtensions]]. Catalyst keeps optimizing around it (column
+  * pruning below, the exchange sizing by AQE).
   */
 case class TopKPerGroupPlan(
     group: Attribute, order: Attribute, tie: Attribute, k: Int,
@@ -185,12 +185,6 @@ object TopKStrategy extends SparkStrategy {
 
 object TopKPlanner {
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.exists(_.isInstanceOf[TopKStrategy.type]))
-      spark.experimental.extraStrategies = strategies :+ TopKStrategy
-  }
-
   /** Top-k best `orderCol` (desc, ties by `tieCol` asc) rows per
     * `groupCol`, with a 1..k `rnk` column — planned natively.
     * The tie column may be LONG (numeric asc) or STRING (binary
@@ -201,7 +195,6 @@ object TopKPlanner {
       tieCol: String, k: Int): DataFrame = {
     require(k >= 1, s"top-k requires k >= 1, got $k")
     val spark = df.sparkSession
-    ensureRegistered(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String,
         expected: Seq[org.apache.spark.sql.types.DataType]): Attribute = {

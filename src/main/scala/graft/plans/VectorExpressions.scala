@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
-import org.apache.spark.sql.SparkSession
 
 /** Native dot product over two `array<float>` columns.
   *
@@ -169,17 +168,20 @@ case class DotProductDouble(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration of graft's native expressions.
-  *
-  * Preferred path: `spark.sql.extensions=graft.plans.GraftExtensions`.
-  * For caller-provided sessions, [[GraftFunctions.ensureRegistered]]
-  * registers idempotently at first use. Both paths install the same
-  * [[GraftFunctions.descriptors]] and [[GraftFunctions.rules]].
+/** The one path by which graft's native functions
+  * ([[GraftFunctions.descriptors]]), optimizer rules
+  * ([[GraftFunctions.rules]], run in the operator-optimization batches)
+  * and the [[TopKStrategy]] planner strategy reach a session:
+  * `spark.sql.extensions=graft.plans.GraftExtensions`, which
+  * [[graft.GraftSession.builder]] sets. Extensions are applied to every
+  * session state the context builds, so a `newSession()` and a stream
+  * micro-batch's session clone carry them too.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(e.injectFunction)
     GraftFunctions.rules.foreach(r => e.injectOptimizerRule(_ => r))
+    e.injectPlannerStrategy(_ => TopKStrategy)
   }
 }
 
@@ -194,7 +196,7 @@ object GraftFunctions {
     new ExpressionInfo(classOf[DotProductDouble].getName, "graft_dot_dd"),
     (children: Seq[Expression]) => DotProductDouble(children(0), children(1)))
 
-  /** Every native function graft registers, on either path. */
+  /** Every native function [[GraftExtensions]] injects. */
   val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     Seq(dotDescriptor, dotDoubleDescriptor,
       SimHashFunctions.descriptor, ShingleHashFunctions.descriptor,
@@ -204,25 +206,8 @@ object GraftFunctions {
       ShingleJaccardFunctions.shingleSetDescriptor,
       ShingleJaccardFunctions.sortedJaccardDescriptor)
 
-  /** Every optimizer rule graft installs, on either path. */
+  /** Every optimizer rule [[GraftExtensions]] injects. */
   val rules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
     Seq(BoundedLevenshteinRewrite, HofDotProductRewrite)
-
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    descriptors.foreach { case (id, info, builder) =>
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    }
-    // caller-provided sessions can't take injectOptimizerRule after the
-    // fact; experimental.extraOptimizations is the supported late hook.
-    // A session built with GraftExtensions already runs the rules in its
-    // operator-optimization batches — appending them again would run
-    // each rule a second (and third) time per plan
-    val held = spark.sessionState.optimizer.batches.flatMap(_.rules).toSet
-    val missing = rules.filterNot(held.contains)
-    if (missing.nonEmpty)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations ++ missing
-  }
 }

@@ -47,7 +47,6 @@ object EmbLshIndexStore {
     * per-row projection over the codegen'd hyperplane kernel.
     */
   def sigRows(emb: DataFrame, bits: Int): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(emb.sparkSession)
     val weights = VF.planeWeights(NumTables * bits,
       Similarity.embeddingDim(emb))
     val perTable = (0 until NumTables).map { tbl =>

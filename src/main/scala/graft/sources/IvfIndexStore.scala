@@ -340,7 +340,6 @@ object IvfIndexStore {
   def servedPqTopK(spark: SparkSession, path: String, probeRows: DataFrame,
       k: Int = 5, nprobe: Int = 2, rerank: Int = 15): DataFrame = {
     import graft.functions.{VectorFunctions => VF}
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val probed = Similarity.probeCells(centroidsTable(spark, path),
       probeRows, nprobe)
     val gridRow = spark_grid(Tables.read(spark, s"$path/grid"))

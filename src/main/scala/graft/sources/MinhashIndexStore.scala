@@ -61,7 +61,6 @@ object MinhashIndexStore {
     * band explode are all per-row projections.
     */
   def bandRows(docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.ensureRegistered(docs.sparkSession)
     val sigs = docs
       .select(col("doc_id"), TF.words(col("text")).as("w"))
       .select(col("doc_id"),

@@ -70,13 +70,12 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
   /** The events table carries TIMESTAMP(NANOS) parquet, which Spark's
-    * TimestampType (µs) cannot represent natively — read the raw nanos as
-    * LONG (`spark.sql.legacy.parquet.nanosAsLong`) and convert to a µs
-    * timestamp column inline. Set here (not only in the session builders)
-    * so any caller-provided session works.
+    * TimestampType (µs) cannot represent natively — a
+    * [[graft.GraftSession]] session reads the raw nanos as LONG
+    * (`spark.sql.legacy.parquet.nanosAsLong`), converted here to a µs
+    * timestamp column inline.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

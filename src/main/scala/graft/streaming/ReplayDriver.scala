@@ -19,15 +19,14 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQu
   *    exits, the lifetime of the memo.
   *  - '''Source.''' [[drops]] streams a staged dir, its schema read
   *    from the first staged file, one file per trigger by default.
-  *  - '''Run.''' Every sink runs through one run-to-end step: graft's
-  *    native functions are registered BEFORE the query starts (a
-  *    streaming query analyzes each micro-batch under a session clone
-  *    whose function registry is snapshotted at start, so a
-  *    registration inside a batch body never reaches it), the shuffle
-  *    partitions are scoped to 8 (stateful-operator cost in a replay is
-  *    per-partition state-store commits, not data volume), the query
-  *    runs `AvailableNow` to the end of its input and is stopped, and
-  *    the session conf is restored in a `finally`.
+  *  - '''Run.''' Every sink runs through one run-to-end step: the
+  *    shuffle partitions are scoped to 8 (stateful-operator cost in a
+  *    replay is per-partition state-store commits, not data volume),
+  *    the query runs `AvailableNow` to the end of its input and is
+  *    stopped, and the session conf is restored in a `finally`. The
+  *    session clone each micro-batch runs under has graft's functions,
+  *    rules and strategy from [[graft.plans.GraftExtensions]], as every
+  *    [[graft.GraftSession]] session does.
   *  - '''Batch.''' [[foreachDrop]] wraps the body of a `foreachBatch`
   *    topology: the batch is persisted (unless the body reads it only
   *    once), the body runs as the owner of every pin, cut and
@@ -102,13 +101,12 @@ private[graft] object ReplayDriver {
 
   /** Run `out` to the end of its input into a fresh in-memory table;
     * returns the table and the finished query (for its progress log).
-    * `out` is built inside the run's conf scope — with `nanos`, a
-    * TIMESTAMP(NANOS) source reads as raw LONG nanos there.
+    * `out` is built inside the run's conf scope.
     */
-  def intoMemory(spark: SparkSession, mode: OutputMode,
-      nanos: Boolean = false)(out: => DataFrame): (DataFrame, StreamingQuery) = {
+  def intoMemory(spark: SparkSession, mode: OutputMode)(
+      out: => DataFrame): (DataFrame, StreamingQuery) = {
     val name = s"graft_replay_${runId.incrementAndGet()}"
-    val q = run(spark, nanos)(
+    val q = run(spark)(
       out.writeStream.format("memory").queryName(name).outputMode(mode))
     (spark.table(name), q)
   }
@@ -142,23 +140,21 @@ private[graft] object ReplayDriver {
     ()
   }
 
-  private def run(spark: SparkSession, nanos: Boolean = false)(
+  private def run(spark: SparkSession)(
       writer: => DataStreamWriter[Row]): StreamingQuery = {
-    graft.plans.GraftFunctions.ensureRegistered(spark)
-    val scoped = Seq("spark.sql.shuffle.partitions" -> "8") ++
-      (if (nanos) Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true") else Nil)
-    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "8")
     try {
       val q = writer.trigger(Trigger.AvailableNow()).start()
       try q.awaitTermination()
       finally q.stop()
       q
-    } finally prev.foreach {
-      // leaking either key would change every LATER batch query in the
-      // session (its partition count, or how it reads nanos timestamps)
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    } finally prev match {
+      // leaking the key would change the partition count of every LATER
+      // batch query in the session
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 }

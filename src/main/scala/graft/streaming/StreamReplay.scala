@@ -82,7 +82,7 @@ object StreamReplay {
       transform: DataFrame => DataFrame,
       watermark: String = "2 hours",
       mode: OutputMode = OutputMode.Complete()): DataFrame =
-    ReplayDriver.intoMemory(spark, mode, nanos = true) {
+    ReplayDriver.intoMemory(spark, mode) {
       val path = s"$dir/events.parquet"
       val batchSchema = graft.sources.Tables.read(spark, path).schema
       // the testdata table is one bare file; a brace glob makes the file

@@ -29,7 +29,6 @@ object KernelCost {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val spark = graft.GraftSession.local(cpus.toInt)
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .filter(col("text").isNotNull)
     def time(c: org.apache.spark.sql.Column): Double = {

@@ -12,10 +12,9 @@ import org.apache.spark.sql.functions._
 object ScaleSmoke {
 
   def generate(spark: SparkSession, srcDir: String, outDir: String, n: Int): Unit = {
-    // events.parquet carries TIMESTAMP(NANOS): read the raw nanos as
-    // LONG and write them back as a plain long column — Tables.events
-    // converts either representation
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events.parquet carries TIMESTAMP(NANOS): the graft session reads
+    // the raw nanos as LONG and they are written back as a plain long
+    // column — Tables.events converts either representation
     val off = 100000000L
     def replicate(name: String, keyCols: Seq[String]): Unit = {
       val base = spark.read.parquet(s"$srcDir/$name.parquet")

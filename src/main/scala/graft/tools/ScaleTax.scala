@@ -127,8 +127,7 @@ object ScaleTax {
         }
       }
       // bench-equivalent inter-entry hygiene
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      org.apache.spark.sql.GraftInternal.releaseAll(spark)
     }
     spark.stop()
   }

@@ -38,7 +38,6 @@ object StreamDedupAnatomy {
     else {
       // events-only replica (the ScaleSmoke layout: a Spark-written
       // directory of part files — the layout the decade bench reads)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val off = 100000000L
       val out = java.nio.file.Files
         .createTempDirectory("graft_sdedup_scale").toString

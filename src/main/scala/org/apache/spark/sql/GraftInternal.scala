@@ -191,6 +191,18 @@ object GraftInternal {
     case _ => pinned.unpersist(blocking = false); ()
   }
 
+  /** Deregister every CacheManager entry and unpersist every persisted
+    * RDD of `spark`'s context: how many RDDs and entries it released.
+    */
+  def releaseAll(spark: SparkSession, blocking: Boolean = false): (Int, Int) = {
+    val cm = spark.sharedState.cacheManager
+    val entries = cm.numCachedEntries
+    cm.clearCache()
+    val rdds = spark.sparkContext.getPersistentRDDs.values.toSeq
+    rdds.foreach(_.unpersist(blocking))
+    (rdds.size, entries)
+  }
+
   /** Delete `dir` when the JVM exits, through Spark's own shutdown
     * hook (the one that removes its local dirs) — for temp dirs whose
     * lifetime is the JVM's.

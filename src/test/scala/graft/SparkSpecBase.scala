@@ -4,15 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
+  /** The production session ([[GraftSession.builder]]: graft's functions,
+    * rules and strategy through [[graft.plans.GraftExtensions]], the
+    * nanos read, the UTC zone) plus the test-only keys.
+    */
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-test")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // ContextCleaner's periodic GC defaults to 30 MINUTES — longer
       // than the suite — so dead pinned blocks and shuffle files from
       // finished suites were never reclaimed and taxed every later
@@ -45,9 +45,7 @@ trait SparkSpecBase extends AnyFunSuite
   }
 
   private def releasePins(blocking: Boolean): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking))
+    org.apache.spark.sql.GraftInternal.releaseAll(spark, blocking); ()
   }
 
   /** Run `op` once (warm-up), drop every pin the session holds, run it

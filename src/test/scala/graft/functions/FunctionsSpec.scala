@@ -35,7 +35,6 @@ class FunctionsSpec extends SparkSpecBase {
   }
 
   test("native graft_simhash64 expression matches the UDF bit-for-bit") {
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val df = Seq("spark catalyst codegen", "entirely different words here",
       "the quick brown fox").toDF("text")
     val both = df.select(

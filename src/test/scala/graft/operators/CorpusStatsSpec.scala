@@ -282,7 +282,6 @@ class CorpusStatsSpec extends SparkSpecBase {
     // (b/c) removal law: a train doc is removed iff it shares a
     // 60-bit-hashed 4-gram shingle with some test doc — re-derived
     // here with an independent frame construction
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     def hashed(df: org.apache.spark.sql.DataFrame) = df.select(
       col("doc_id"), explode(call_function("graft_shingle_hash60",
         graft.functions.TextFunctions.words(col("text")),

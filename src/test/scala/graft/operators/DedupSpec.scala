@@ -356,7 +356,6 @@ class DedupSpec extends SparkSpecBase {
       .unionByName(base.filter(col("doc_id") === 1)
         .withColumn("doc_id", col("doc_id") + 300L))
     // raw-grain reference: sign every row, pigeonhole self-join, roll up
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val sigs = corpus.select(col("doc_id"),
       call_function("graft_simhash64",
         graft.functions.TextFunctions.words(col("text"))).as("simhash"))

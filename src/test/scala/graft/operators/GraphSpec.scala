@@ -100,7 +100,6 @@ class GraphSpec extends SparkSpecBase {
 
   test("sorted-intersect kernel equals array_intersect on sorted distinct arrays") {
     import org.apache.spark.sql.functions._
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 200).map { i =>
       def arr = (0 until rnd.nextInt(30)).map(_ => rnd.nextInt(40).toLong)

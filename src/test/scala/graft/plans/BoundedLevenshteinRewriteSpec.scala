@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 class BoundedLevenshteinRewriteSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def registered = { GraftFunctions.ensureRegistered(spark); spark }
-
   // a parquet source, NOT a local Seq: ConvertToLocalRelation folds a
   // filtered LocalRelation at optimize time and no Filter survives to
   // assert on (levenshtein is not a pushable source filter, so over
@@ -25,7 +23,6 @@ class BoundedLevenshteinRewriteSpec extends SparkSpecBase {
     df.queryExecution.optimizedPlan.toString
 
   test("levenshtein(a,b) <= k becomes the banded threshold form") {
-    registered
     val q = names.filter(levenshtein($"a", $"b") <= 1)
     assert(optimized(q).contains("levenshtein(a#"), "sanity: lev present")
     assert(optimized(q).contains("Some(1)) >= 0"),
@@ -34,7 +31,6 @@ class BoundedLevenshteinRewriteSpec extends SparkSpecBase {
   }
 
   test("strict < and literal-on-left mirrors rewrite with the right bound") {
-    registered
     val lt = names.filter(levenshtein($"a", $"b") < 2)
     assert(optimized(lt).contains("Some(1)) >= 0"))
     val mirror = names.filter(lit(1) >= levenshtein($"a", $"b"))
@@ -43,7 +39,6 @@ class BoundedLevenshteinRewriteSpec extends SparkSpecBase {
   }
 
   test("a Cast around the distance is preserved (the fuzzy-join shape)") {
-    registered
     val q = names.filter(levenshtein($"a", $"b").cast("long") <= lit(1L))
     assert(optimized(q).contains("Some(1))"),
       s"cast-wrapped comparison not rewritten:\n${optimized(q)}")
@@ -51,7 +46,6 @@ class BoundedLevenshteinRewriteSpec extends SparkSpecBase {
   }
 
   test("rewritten and plain forms agree on every pair incl. k=0 and NULLs") {
-    registered
     val pairs = Seq(("abc", "abc"), ("abc", "abd"), ("abc", "xyz"),
       ("", ""), ("", "a"), (null, "a")).toDF("a", "b")
     for (k <- 0 to 3) {
@@ -63,7 +57,6 @@ class BoundedLevenshteinRewriteSpec extends SparkSpecBase {
   }
 
   test("value uses of levenshtein are untouched") {
-    registered
     val q = names.select(levenshtein($"a", $"b").as("d"))
     assert(!optimized(q).contains("Some("),
       "projection-only distance must keep the exact two-arg form")

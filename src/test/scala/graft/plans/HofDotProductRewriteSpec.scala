@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 class HofDotProductRewriteSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def registered = { GraftFunctions.ensureRegistered(spark); spark }
-
   // parquet source so ConvertToLocalRelation can't fold the projection
   private lazy val vecPath = {
     val p = java.nio.file.Files.createTempDirectory("hof_vecs").toString
@@ -25,14 +23,12 @@ class HofDotProductRewriteSpec extends SparkSpecBase {
     "aggregate(zip_with(a, b, (x, y) -> double(x) * double(y)), 0d, (acc, v) -> acc + v)"
 
   test("declarative dot product optimizes to the codegen kernel") {
-    registered
     val q = vecs.select(expr(hofDot).as("dot"))
     val plan = q.queryExecution.optimizedPlan.toString
     assert(plan.contains("graft_dot"), s"no kernel in:\n$plan")
   }
 
   test("values match the hand-computed dots; NULL and ragged semantics kept") {
-    registered
     val out = vecs.select($"id", expr(hofDot).as("dot"))
       .orderBy("id").as[(Long, Option[Double])].collect().toSeq
     assert(out == Seq(
@@ -43,7 +39,6 @@ class HofDotProductRewriteSpec extends SparkSpecBase {
   }
 
   test("nullable elements get the null-aware kernel; NULL slot propagates") {
-    registered
     val p = java.nio.file.Files.createTempDirectory("hof_nulls").toString
     Seq(
       (1L, Array[java.lang.Float](1f, null, 3f), Array[java.lang.Float](4f, 5f, 6f)),
@@ -58,7 +53,6 @@ class HofDotProductRewriteSpec extends SparkSpecBase {
   }
 
   test("graft_dot_dd keeps the fold's null/shape semantics on double arrays") {
-    registered
     // the r15 review finding: the double kernel read NULL slots as raw
     // memory and silently truncated ragged pairs — the fold it claims
     // bit-identity with NULL-propagates both. Parquet round trip so
@@ -86,7 +80,6 @@ class HofDotProductRewriteSpec extends SparkSpecBase {
   }
 
   test("float-precision product (x * y without casts) is NOT rewritten") {
-    registered
     val q = vecs.select(
       expr("aggregate(zip_with(a, b, (x, y) -> x * y), 0f, (acc, v) -> acc + v)")
         .as("dotf"))

@@ -18,7 +18,6 @@ class MinhashSigSpec extends SparkSpecBase {
       .select(col("doc_id"), TF.minhashSigFromHashes(col("hs"), k).as("sig"))
 
   private def kernel(df: org.apache.spark.sql.DataFrame, n: Int, k: Int) = {
-    GraftFunctions.ensureRegistered(spark)
     df.select(col("doc_id"), TF.words(col("text")).as("w"))
       .select(col("doc_id"), TF.minhashSigWords(col("w"), n, k).as("sig"))
   }
@@ -57,7 +56,6 @@ class MinhashSigSpec extends SparkSpecBase {
   }
 
   test("char-gram kernel equals the HOF charNgrams pipeline, incl. multi-byte text") {
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val docs = Seq(
       (1L, "abcdefgh"), (2L, "ab"), (3L, ""),
@@ -75,7 +73,6 @@ class MinhashSigSpec extends SparkSpecBase {
   }
 
   test("char-gram kernel equals the HOF pipeline on the corpus") {
-    GraftFunctions.ensureRegistered(spark)
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .filter(col("text").isNotNull)
     val hof = docs.select(col("doc_id"),
@@ -87,7 +84,6 @@ class MinhashSigSpec extends SparkSpecBase {
   }
 
   test("sorted-common-count equals size(array_intersect) on sorted distinct string sets") {
-    GraftFunctions.ensureRegistered(spark)
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .filter(col("text").isNotNull)
     val sets = docs.select(col("doc_id"),

@@ -18,7 +18,6 @@ class ShingleHashSpec extends SparkSpecBase {
         conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long").as("h"))
 
   private def kernel(df: org.apache.spark.sql.DataFrame, n: Int, max: Int) = {
-    GraftFunctions.ensureRegistered(spark)
     df.select(col("doc_id"), explode(call_function("graft_shingle_hash60",
       TF.words(col("text")), lit(n), lit(max))).as("h"))
   }

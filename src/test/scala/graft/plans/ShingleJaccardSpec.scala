@@ -31,7 +31,6 @@ class ShingleJaccardSpec extends SparkSpecBase {
     s.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
     s.conf.set("spark.sql.codegen.factoryMode",
       if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
-    GraftFunctions.ensureRegistered(s)
     s
   }
 

@@ -12,32 +12,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   */
 class TablesReadSpec extends graft.SparkSpecBase {
 
-  private lazy val srcDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_tread_src").toString
-    writeNanosEvents(s"$d/events.parquet")
-    d
-  }
-
-  /** A one-file events table whose `ts` is parquet TIMESTAMP(NANOS),
-    * which Spark itself cannot write.
-    */
-  private def writeNanosEvents(file: String): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message events { required int64 event_id; " +
-        "required int64 ts (TIMESTAMP(NANOS,false)); }")
-    val w = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file))
-      .withType(schema)
-      .withConf(spark.sparkContext.hadoopConfiguration)
-      .build()
-    val rows = new SimpleGroupFactory(schema)
-    try Seq(1L, 2L).foreach(id =>
-      w.write(rows.newGroup().append("event_id", id)
-        .append("ts", 1700000000000000000L + id)))
-    finally w.close()
-  }
+  private lazy val srcDir = TablesReadSpec.nanosEventsDir(spark)
 
   /** The value of `body` and the number of jobs it started. */
   private def jobsDuring[T](body: => T): (T, Int) = {
@@ -77,7 +52,6 @@ class TablesReadSpec extends graft.SparkSpecBase {
   }
 
   test("the events (NTZ and NANOS encodings), part and documents inputs read with the inferred schema, no job") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Seq(s"$sfDir/events.parquet", s"$srcDir/events.parquet",
       s"$sfDir/part.parquet", s"$sfDir/documents.parquet")
       .foreach(assertReadsAsInferred)
@@ -93,5 +67,32 @@ class TablesReadSpec extends graft.SparkSpecBase {
       val theirs = intercept[AnalysisException](spark.read.parquet(p))
       assert(ours.getCondition == theirs.getCondition, p)
     }
+  }
+}
+
+object TablesReadSpec {
+
+  /** A fresh dir holding a one-file events table whose `ts` is parquet
+    * TIMESTAMP(NANOS) (which Spark itself cannot write): event_ids 1
+    * and 2 at 1700000000000000000 + event_id nanos.
+    */
+  def nanosEventsDir(spark: SparkSession): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val dir = java.nio.file.Files.createTempDirectory("graft_tread_src").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema)
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    val rows = new SimpleGroupFactory(schema)
+    try Seq(1L, 2L).foreach(id =>
+      w.write(rows.newGroup().append("event_id", id)
+        .append("ts", 1700000000000000000L + id)))
+    finally w.close()
+    dir
   }
 }
